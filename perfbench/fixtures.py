@@ -7,6 +7,19 @@ TPC-H-ish fixtures the engine is developed against: int64 keys, naive
 documents with injected exact and near duplicates. Row counts scale
 with ``sf`` like those fixtures (lineitem ~6M rows per unit of sf).
 
+The value sets (nations, segments, priorities, part words, the common
+vocabulary, event types) are ``tools/gen_fixtures.py``'s, imported from
+it. The distributions follow it too, except where a table of a few
+hundred rows needs otherwise:
+
+- an exact duplicate document every 300 docs, not every 500, so a
+  500-doc corpus holds some;
+- a tail of 2,000 rare terms, not ``2000 * sqrt(n_docs / 5000)``, so
+  unrelated small documents rarely look alike and the dedup queries'
+  work comes from the injected pairs rather than from the seed;
+- draws from one seeded numpy generator instead of ``xxhash64`` of
+  the key, so a seed picks a different table.
+
 Every value comes from one ``numpy`` generator seeded by ``seed``, so
 the same (seed, sf) always gives byte-identical tables. Generation runs
 in the benchmark's own process with numpy and pyarrow only: it starts no Spark
@@ -21,22 +34,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-NATIONS = 25
-REGIONS = 5
-MKTSEGS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-ADJS = ["large", "hot", "blue", "old", "small", "new", "red", "cold"]
-NOUNS = ["ring", "bolt", "widget", "gear", "cog", "pin", "cap", "rod"]
-VOCAB = (
-    "spark table join query filter scan sort group agg window stream "
-    "batch merge hash key value row column line part order customer "
-    "data vector big small fast slow the a".split()
+from tools.gen_fixtures import (
+    ADJS, EVENT_TYPES, MKTSEGS, NATIONS, NOUNS, PRIORITIES, REGIONS, TYPES, VOCAB,
 )
-EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
+
 TAIL_TERMS = 2_000
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.41, 0.14, 0.15, 0.15, 0.15]
 
 #: Natural keys, used by the migration workload's skip-duplicates path.
 #: ``lineitem`` has none (two lines of one order may share a line
@@ -95,7 +97,7 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
     return pa.table({
         "doc_id": pa.array(ids, pa.int64()),
         "text": pa.array(text),
-        "lang": pa.array(np.asarray(LANGS, dtype=object)[rng.choice(5, n, p=LANG_P)]),
+        "lang": pa.array(["en" if i % 20 else "de" for i in ids]),
         "source": pa.array([f"src{i % 20}" for i in ids]),
         "n_chars": pa.array([len(t) for t in text], pa.int64()),
     })

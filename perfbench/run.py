@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Seeded benchmark of the engine's report, migration and upsert paths.
 
-    python3 perfbench/run.py --workload report_suite --seed 1 --seconds 3 --trace 0
+    python3 perfbench/run.py --workload report_suite --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. Builds its inputs from ``--seed``,
-sets the engine up several times (``setup_s`` is the median), settles,
-then runs passes of the workload for ``--seconds`` (at least one),
-checks the outputs and prints one line per figure followed by one JSON
-line: ``{"correct", "attempted", "failed", "metrics"}``.
+sets the engine up several times (``setup_s`` is the median), then
+runs passes of the workload for ``--seconds`` (at least
+``MIN_PASSES``), checks the outputs and prints one line per figure
+followed by one JSON line: ``{"correct", "attempted", "failed", "metrics"}``.
+The first pass finds the JIT compiler and the engine's caches cold and
+is left out of every figure; the figures are medians over the rest.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` alternates
 untraced and traced passes (at least three: untraced, traced,
@@ -39,8 +41,18 @@ ROOT = os.path.dirname(HERE)
 #: scale the repository's oracle parity is checked at.
 SF = 0.01
 SETUP_REPS = 3
+#: Passes a run makes at least, however short ``--seconds`` is: a
+#: warm-up pass and one that is measured.
+MIN_PASSES = 2
 
-END_TO_END = {"setup_s": "s", "pass_s": "s", "op_p50_s": "s", "rows_per_s": "1/s"}
+END_TO_END = ("setup_s", "pass_cpu_s")
+
+
+def declared_units() -> dict[str, str]:
+    """Every metric's unit, as ``BENCHMARK.json`` declares it."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
 
 
 def per_layer_names() -> list[str]:
@@ -58,16 +70,6 @@ def per_layer_names() -> list[str]:
     ]
 
 
-def unit_of(name: str) -> str:
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("_bytes") or name == "writers.bytes_written":
-        return "bytes"
-    if name.endswith(("_ratio", "write_amp")):
-        return "ratio"
-    return "count"
-
-
 def parse_args(argv: list[str]) -> argparse.Namespace:
     from workloads import WORKLOADS
 
@@ -77,6 +79,30 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     return ap.parse_args(argv)
+
+
+def read_cpu_times() -> list[int] | None:
+    """The machine's aggregate CPU times in clock ticks (the ``cpu``
+    line of ``/proc/stat``), or ``None`` where there is no such file."""
+    try:
+        with open("/proc/stat") as f:
+            return [int(v) for v in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+
+
+def engine_cpu_s() -> float:
+    """CPU seconds the engine's JVM (all its threads) and this process
+    have run so far: user plus system time as the kernel counts it,
+    which leaves out time the hypervisor stole."""
+    from pyspark import SparkContext
+
+    jvm = 0.0
+    if SparkContext._gateway is not None:
+        with open(f"/proc/{SparkContext._gateway.proc.pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()  # fields[0] is field 3, state
+        jvm = (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+    return jvm + time.process_time()
 
 
 def pin_environment(work: str, cpus: int) -> None:
@@ -205,68 +231,92 @@ def run(args, cpus: int, work: str, engine: dict) -> int:
     so the caller can stop it however the run ends."""
     from prisma_migrator_spark.session import get_spark
     from spans import Tracer, exec_by_group, instrument_reads
-    from stats import beyond, percentile, supported_percentile, write_amp
+    from stats import beyond, percentile, steal_share, supported_percentile, write_amp
     from workloads import WORKLOADS, ReadLog
 
+    units = declared_units()
     reads = ReadLog()
-    wl = WORKLOADS[args.workload](args.seed, SF, reads)
+    t_generate = time.perf_counter()
+    wl = WORKLOADS[args.workload](args.seed, SF, reads)  # inputs and references; untimed
+    generate_s = time.perf_counter() - t_generate
 
-    setup_s, layout_s = [], []
+    setup_s, layout_s, setup_cpu = [], [], []
     spark = None
     for rep in range(SETUP_REPS):
         if spark is not None:
             spark.stop()
             shutil.rmtree(os.path.join(work, f"rep{rep - 1}"), ignore_errors=True)
         t0 = time.perf_counter()
+        cpu0 = engine_cpu_s()
         spark = engine["spark"] = get_spark("perfbench")
         layout_s.append(wl.build(spark, os.path.join(work, f"rep{rep}")))
         wl.warm_up(spark)
         setup_s.append(time.perf_counter() - t0)
+        setup_cpu.append(engine_cpu_s() - cpu0)
         if rep == 0:
             bad = pin_disagreements(spark, cpus)
             if bad:
                 print("perfbench: refusing to report, core count not pinned: " + "; ".join(bad),
                       file=sys.stderr)
                 return 3
-    t_settle = time.perf_counter()
-    with instrument_reads(reads):
-        wl.settle(spark)
-
     tracer = Tracer(True, spark)
     untraced = Tracer(False)
     passes = []  # (PassResult, pass span or None)
+    pass_cpu = []  # engine CPU seconds of each pass
+    cpu_start = read_cpu_times()
     t_start = time.perf_counter()
     with tracer.span("workload", workload=args.workload) if args.trace else contextlib.nullcontext():
-        # At least one pass. A traced run alternates untraced and traced
-        # passes, starting and ending untraced, so the tracing overhead
-        # (traced minus untraced pass time) is not skewed by warm-up.
-        while (len(passes) < 1 + 2 * args.trace or time.perf_counter() - t_start < args.seconds
+        # At least MIN_PASSES passes. A traced run alternates untraced
+        # and traced passes, starting and ending untraced, so the tracing
+        # overhead (traced minus untraced pass time) is not skewed by warm-up.
+        while (len(passes) < MIN_PASSES or time.perf_counter() - t_start < args.seconds
                or (args.trace and len(passes) % 2 == 0)):
             index = len(passes)
+            cpu0 = engine_cpu_s()
             if args.trace and index % 2 == 1:
                 with tracer.span("pass", index=index) as span, instrument_reads(reads, tracer):
                     passes.append((wl.run_pass(spark, index, tracer), span))
             else:
-                passes.append((wl.run_pass(spark, index, untraced), None))
+                # reads are still logged, so a traced pass can tell
+                # which of its reads hit a handle an earlier pass made
+                with instrument_reads(reads):
+                    passes.append((wl.run_pass(spark, index, untraced), None))
+            pass_cpu.append(engine_cpu_s() - cpu0)
 
     t_check = time.perf_counter()
+    cpu_end = read_cpu_times()
     errors = wl.check(spark)
     t_end = time.perf_counter()
     ops = [op for r, _ in passes for op in r.ops]
     failed = sum(not op.ok for op in ops)
-    timed = [r for r, span in passes if span is None]
+    # The first pass is a warm-up: it finds the JIT compiler and the
+    # engine's caches cold (and on report_suite collects the rows the
+    # check needs), so no figure counts it. Traced passes are not timed.
+    untraced_passes = [(r, c) for (r, span), c in zip(passes, pass_cpu) if span is None]
+    timed = [r for r, _ in untraced_passes[1:]]
+    timed_cpu = [c for _, c in untraced_passes[1:]]
     lat = [op.seconds for r in timed for op in r.ops if op.kind == "op"]
     read_lat = [s for r in timed for s in r.read_seconds]
     sc = spark.sparkContext
     lines = [
         f"workload {args.workload} seed {args.seed} sf {SF} master {sc.master} "
         f"cpus {cpus} defaultParallelism {sc.defaultParallelism}",
-        f"setup reps {', '.join(f'{s:.3f}' for s in setup_s)} s (the first includes JVM start)",
-        f"passes {len(passes)} ({len(timed)} untraced), ops attempted {len(ops)}, failed {failed}",
+        f"setup reps wall {', '.join(f'{s:.3f}' for s in setup_s)} s (the first includes JVM start)",
+        f"passes {len(passes)} (one warm-up, {len(timed)} measured untraced), "
+        f"ops attempted {len(ops)}, failed {failed}",
+        f"setup cpu {', '.join(f'{c:.3f}' for c in setup_cpu)} s",
         f"pass times {', '.join(f'{r.seconds:.3f}' for r, _ in passes)} s",
-        f"phases: set-up {sum(setup_s):.1f} s, settle {t_start - t_settle:.1f} s, "
+        f"pass cpu {', '.join(f'{c:.3f}' for c in pass_cpu)} s",
+        f"phases: generate {generate_s:.1f} s, set-up {sum(setup_s):.1f} s, "
         f"passes {t_check - t_start:.1f} s, check {t_end - t_check:.1f} s",
+        "host cpu steal during the passes "
+        + (f"{steal_share(cpu_start, cpu_end):.1%}" if cpu_start and cpu_end else "unknown")
+        + " (time the hypervisor gave this machine's cores to others)",
         f"failed_frac {failed / len(ops):.4f} ratio",
+        # wall times: printed, not bounded (see README, "Steadiness")
+        f"pass_s {statistics.median(r.seconds for r in timed):.6f} s",
+        f"op_p50_s {statistics.median(lat):.6f} s",
+        f"rows_per_s {statistics.median(wl.rows_per_pass / r.seconds for r in timed):.6f} 1/s",
     ]
     supported = supported_percentile(len(lat))
     lines.append(
@@ -303,12 +353,11 @@ def run(args, cpus: int, work: str, engine: dict) -> int:
             }, f)
     else:
         metrics = {
-            "setup_s": statistics.median(setup_s),
-            "pass_s": statistics.median(r.seconds for r in timed),
-            "op_p50_s": statistics.median(lat),
-            "rows_per_s": sum(r.rows for r in timed) / sum(r.seconds for r in timed),
+            # CPU time, like pass_cpu_s: the wall time of a set-up
+            # follows the host's contention (see README, "Steadiness")
+            "setup_s": statistics.median(setup_cpu),
+            "pass_cpu_s": statistics.median(timed_cpu),
         }
-    units = END_TO_END if not args.trace else {k: unit_of(k) for k in metrics}
     for k, v in metrics.items():
         lines.append(f"{k} {v:.6f} {units[k]}")
     print("\n".join(lines), flush=True)

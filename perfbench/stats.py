@@ -79,6 +79,17 @@ def self_time(start: float, end: float, children: Iterable[tuple[float, float]])
     return (end - start) - union_length(clipped)
 
 
+def steal_share(before: Sequence[int], after: Sequence[int]) -> float:
+    """Share of the machine's CPU time stolen by the hypervisor between
+    two readings of the ``cpu`` line of ``/proc/stat`` (user, nice,
+    system, idle, iowait, irq, softirq, steal, ...; steal is the 8th).
+    The guest and guest_nice fields after it are already counted in
+    user and nice, so they are left out of the total."""
+    delta = [b - a for a, b in zip(before[:8], after[:8])]
+    total = sum(delta)
+    return delta[7] / total if total else 0.0
+
+
 def quartile_spread(values: Sequence[float]) -> float:
     """(Q3 - Q1) / median, with the quartiles of
     ``statistics.quantiles(values, n=4)``."""

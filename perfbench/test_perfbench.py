@@ -12,8 +12,8 @@ import pytest
 from checks import rows_mismatch
 from spans import Tracer, count_plan_nodes
 from stats import (
-    beyond, idle_core_s, percentile, quartile_spread, self_time, supported_percentile,
-    union_length, write_amp,
+    beyond, idle_core_s, percentile, quartile_spread, self_time, steal_share,
+    supported_percentile, union_length, write_amp,
 )
 
 
@@ -32,7 +32,8 @@ def test_percentile_is_nearest_rank():
 
 def test_sample_count_behind_a_percentile():
     assert beyond(100, 0.9) == 10
-    assert beyond(28, 0.9) == 2  # one report_suite run: 2 passes x 14 queries
+    assert beyond(14, 0.9) == 1  # one report_suite pass: 14 queries
+    assert beyond(28, 0.9) == 2
     assert beyond(28, 0.5) == 14
     assert supported_percentile(100) == 0.90
     assert supported_percentile(28) == 0.64
@@ -78,6 +79,16 @@ def test_tracer_self_times_and_disabled_noop():
     with off.span("op") as rec, off.op("q") as op_rec:
         assert rec is None and op_rec is None
     assert off.spans == []
+
+
+def test_steal_share_of_proc_stat_readings():
+    #        user nice sys idle iowait irq softirq steal guest guest_nice
+    before = [100, 0, 10, 500, 5, 0, 5, 20, 50, 0]
+    after = [400, 0, 40, 700, 5, 0, 15, 120, 250, 0]
+    # 300 + 30 + 200 + 10 + 100 ticks passed, 100 of them stolen; guest
+    # time is already inside user, so it does not count twice
+    assert steal_share(before, after) == pytest.approx(100 / 640)
+    assert steal_share(before, before) == 0.0
 
 
 def test_quartile_spread_matches_statistics_quantiles():
@@ -143,5 +154,15 @@ def test_benchmark_json_lists_every_reported_metric():
     with open(path) as f:
         spec = json.load(f)
     assert [m["name"] for m in spec["end_to_end"]] == list(END_TO_END)
-    assert [m["unit"] for m in spec["end_to_end"]] == list(END_TO_END.values())
     assert [m["name"] for m in spec["per_layer"]] == per_layer_names()
+
+
+def test_snapshot_batch_is_one_reference_statement_scaled_to_the_fixture():
+    from workloads import ReadLog, SnapshotUpsert
+
+    wl = SnapshotUpsert(1, 0.01, ReadLog())
+    # 50000 // 6 columns = 8333 rows per statement at sf0.1 -> 833 at sf0.01
+    assert [b.num_rows for b in wl.batches] == [833] * wl.BATCHES
+    first = wl.batches[0].to_pandas()
+    assert first.duplicated().sum() == round(833 / 16)
+    assert (first.drop_duplicates()["o_orderkey"] > wl.base["o_orderkey"].to_numpy().max()).sum() == 260
