@@ -339,11 +339,18 @@ def simhash(
     Measured at sf0.1 (n_bits=64): warm 1.7–2.3 s → 1.0–1.1 s, cold
     (codegen) 8.8 → 1.5 s. Bit-identity is pinned by
     ``test_simhash_expr_matches_agg_plan`` (integer sums are
-    order-independent, same md5 nibbles)."""
+    order-independent, same md5 nibbles).
+
+    NULL-text documents get no signature, as in :func:`simhash_agg`
+    (exploding a NULL token array emits no row) and the DuckDB oracle
+    (``UNNEST(NULL)``); ``simhash_expr`` alone would give each of them
+    ``''``, making every NULL-text doc a near-dup of every other."""
     from prisma_migrator_spark.catalog import ensure_parallelism
 
-    return ensure_parallelism(df).select(
-        id_col, simhash_expr(F.col(text_col), n_bits).alias("simhash")
+    return (
+        ensure_parallelism(df)
+        .where(F.col(text_col).isNotNull())
+        .select(id_col, simhash_expr(F.col(text_col), n_bits).alias("simhash"))
     )
 
 

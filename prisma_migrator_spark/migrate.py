@@ -13,6 +13,16 @@ Re-expresses ``src/migrate.ts``'s main loop Spark-first:
 - per-model error isolation (migrate.ts:43-52,67-69) → try/except per
   table collected into a migration report.
 
+One write per table, counts observed: each table copy is a single
+Spark write action that reads the source once (and, on a resume, the
+destination once), like the reference's one ``findMany`` per model.
+``rows_read`` and ``rows_written`` are not counted by jobs of their
+own; they are ``Observation`` metrics attached to the source and to
+the frame being written, read after the write returns. Caveat:
+``rows_read`` is observed in a shuffle-map stage (below the
+skip-duplicates aggregate), so a retried stage could count it twice.
+It is a report figure, not a correctness gate.
+
 Tables copy sequentially like the reference (migrate.ts:92-94), with
 optional thread-level overlap; Spark already parallelizes *within*
 each table, which is where the data volume is.
@@ -28,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from prisma_migrator_spark.catalog import list_tables, read_parquet
+from prisma_migrator_spark.operators.driver_state import observe_rows
 from prisma_migrator_spark.writers.upsert import append_skip_duplicates
 
 
@@ -66,30 +77,36 @@ def migrate_table(
     key_cols: dict[str, list[str]] | None = None,
 ) -> TableResult:
     """Copy one table, skipping rows whose key already exists at the
-    destination (⇐ migrateModel, reference src/migrate.ts:38-73)."""
-    t0 = time.time()
+    destination (⇐ migrateModel, reference src/migrate.ts:38-73).
+
+    A resume that finds nothing new leaves the destination as it was:
+    Spark writes partition 0's file even for an empty append, so the
+    entries that write added are deleted again. Each table has its
+    own directory, which keeps this safe under ``parallelism > 1``."""
+    t0 = time.perf_counter()
     try:
         src_path = os.path.join(src_dir, f"{table}.parquet")
         dst_path = os.path.join(dst_dir, f"{table}.parquet")
-        df = read_parquet(spark, src_path)
-        n_read = df.count()
+        df, n_read = observe_rows(read_parquet(spark, src_path))
         keys = (key_cols or {}).get(table)
         if os.path.exists(dst_path):
             existing = read_parquet(spark, dst_path)
-            fresh = (
+            fresh, n_new = observe_rows(
                 append_skip_duplicates(df, existing, keys)
                 if keys
                 else df.exceptAll(existing)
             )
-            n_new = fresh.count()
-            if n_new:
-                fresh.write.mode("append").parquet(dst_path)
+            before = set(os.listdir(dst_path))
+            fresh.write.mode("append").parquet(dst_path)
+            if not n_new():
+                for name in set(os.listdir(dst_path)) - before:
+                    os.remove(os.path.join(dst_path, name))
         else:
             df.write.mode("overwrite").parquet(dst_path)
             n_new = n_read
-        return TableResult(table, "copied", n_read, n_new, time.time() - t0)
+        return TableResult(table, "copied", n_read(), n_new(), time.perf_counter() - t0)
     except Exception as exc:  # per-table isolation, migrate.ts:49-52
-        return TableResult(table, "failed", seconds=time.time() - t0, error=str(exc))
+        return TableResult(table, "failed", seconds=time.perf_counter() - t0, error=str(exc))
 
 
 def migrate(

@@ -13,7 +13,10 @@ grep-guards that no bare ``.collect()`` remains in package code.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, Row
+from pyspark.sql import functions as F
 
 
 def bounded_collect(df: DataFrame, max_rows: int, why: str) -> list[Row]:
@@ -31,3 +34,14 @@ def bounded_collect(df: DataFrame, max_rows: int, why: str) -> list[Row]:
             f"an unbounded result on the driver"
         )
     return rows
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its row count attached as an ``Observation``, and a
+    getter for that count. The count rides the next action on the
+    returned frame — no separate count job, no second scan. Call the
+    getter only after that action has returned: it blocks until the
+    action reports its metrics, and it would wait forever if the plan
+    the action ran no longer contains the observed frame."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), lambda: obs.get["rows"]

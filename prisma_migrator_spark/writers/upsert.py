@@ -40,7 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prisma_migrator_spark.operators.driver_state import bounded_collect
+from prisma_migrator_spark.operators.driver_state import bounded_collect, observe_rows
 
 from prisma_migrator_spark.operators.dedup import latest_per_key
 from prisma_migrator_spark.operators.joins import anti_join
@@ -181,7 +181,8 @@ def upsert_parquet(
       outright.
 
     Returns a small report dict (counts), like the reference's
-    progress logging (src/utils/lib.ts:97).
+    progress logging (src/utils/lib.ts:97). The counts are observed on
+    the written plan, so the table is not read back to count it.
     """
     keys = list(key_cols)
     batch = (
@@ -193,10 +194,10 @@ def upsert_parquet(
     exists = os.path.exists(path)
     if not exists:
         staged = path + ".staging"
+        batch, n = observe_rows(batch)
         batch.write.mode("overwrite").parquet(staged)
         _atomic_swap(staged, path)
-        n = spark.read.parquet(path).count()
-        return {"path": path, "inserted": n, "kept": 0, "mode": "create"}
+        return {"path": path, "inserted": n(), "kept": 0, "mode": "create"}
 
     existing = spark.read.parquet(path)
     evolved = [c for c in batch.columns if c not in existing.columns]
@@ -217,13 +218,12 @@ def upsert_parquet(
         # that mode's contract is "matched keys keep the existing row
         # for EVERY column"; the evolved column still lands as NULL
         # for existing keys and with batch values for brand-new keys.
-    result = _merge(existing, batch, keys, update_cols)
+    result, total = observe_rows(_merge(existing, batch, keys, update_cols))
 
     staged = path + ".staging"
     result.write.mode("overwrite").parquet(staged)
     _atomic_swap(staged, path)
-    total = spark.read.parquet(path).count()
-    return {"path": path, "total": total, "mode": "update" if do_update else "insert_only"}
+    return {"path": path, "total": total(), "mode": "update" if do_update else "insert_only"}
 
 
 def _part_files(path: str) -> list[str]:
@@ -284,10 +284,10 @@ def upsert_parquet_cow(
     )
     if not os.path.exists(path):
         staged = path + ".staging"
+        batch, n = observe_rows(batch)
         batch.write.mode("overwrite").parquet(staged)
         _atomic_swap(staged, path)
-        n = spark.read.parquet(path).count()
-        out = {"path": path, "inserted": n, "mode": "create"}
+        out = {"path": path, "inserted": n(), "mode": "create"}
         if bloom:
             from prisma_migrator_spark.writers import bloom as bloom_sidecar
 

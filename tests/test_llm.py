@@ -3874,6 +3874,32 @@ def test_simhash_expr_matches_agg_plan(spark, sf_dir):
         assert a == b
 
 
+def test_simhash_null_and_blank_text_match_agg_plan_and_oracle(spark):
+    """Hostile text, which no fixture has: a NULL-text doc gets no
+    signature from the row-local simhash, the explode+groupBy plan or
+    the DuckDB oracle (``UNNEST(NULL)`` emits no row). ``''`` and
+    whitespace-only text normalize to empty tokens, which all three
+    hash alike."""
+    import duckdb
+
+    from prisma_migrator_spark.llm.dedup import simhash, simhash_agg
+    from prisma_migrator_spark.plans.llm import _SIMHASH_ORACLE
+
+    rows = [(1, "the quick fox"), (2, None), (3, ""), (4, "   "), (5, "\t\n")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for nb in (16, 64):
+        a = {r.doc_id: r.simhash for r in simhash_agg(docs, n_bits=nb).collect()}
+        b = {r.doc_id: r.simhash for r in simhash(docs, n_bits=nb).collect()}
+        assert a == b and set(b) == {1, 3, 4, 5}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    oracle = dict(con.execute(_SIMHASH_ORACLE).fetchall())
+    con.close()
+    assert oracle == {r.doc_id: r.simhash for r in simhash(docs, n_bits=16).collect()}
+
+
 def test_streaming_ingest_near_dup_matches_batch(spark, sf_dir, tmp_path):
     """The composed fuzzy ingest (gate -> row-local simhash ->
     stateful banded verdicts) reproduces the batch pipeline (gate ->

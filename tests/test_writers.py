@@ -4,6 +4,7 @@ idempotency is the core property — run twice, counts stable."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -48,12 +49,14 @@ def test_append_skip_duplicates(spark):
 
 
 def test_upsert_do_update_idempotent(spark, tmp_table):
-    upsert_parquet(spark, _df(spark, BASE), tmp_table, ["k"])
+    rep = upsert_parquet(spark, _df(spark, BASE), tmp_table, ["k"])
+    assert rep["inserted"] == 3
     batch = _df(spark, [{"k": 2, "v": "B2", "ts": 20}, {"k": 9, "v": "z", "ts": 20}])
     for _ in range(2):  # idempotent: run twice
-        upsert_parquet(spark, batch, tmp_table, ["k"])
+        rep = upsert_parquet(spark, batch, tmp_table, ["k"])
         got = {r["k"]: r["v"] for r in spark.read.parquet(tmp_table).collect()}
         assert got == {1: "a", 2: "B2", 3: "c", 9: "z"}
+        assert rep["total"] == len(got)
 
 
 def test_upsert_schema_evolution_explicit_never_silent(spark, tmp_table):
@@ -137,7 +140,7 @@ def test_upsert_cow_rejects_evolved_batch(spark, tmp_table):
     would keep the old one); it must refuse with guidance, not merge."""
     from prisma_migrator_spark.writers.upsert import upsert_parquet_cow
 
-    upsert_parquet_cow(spark, _df(spark, BASE), tmp_table, ["k"])
+    assert upsert_parquet_cow(spark, _df(spark, BASE), tmp_table, ["k"])["inserted"] == 3
     evolved = _df(spark, [{"k": 2, "v": "B2", "ts": 20, "lang": "en"}])
     with pytest.raises(ValueError, match="full rewrite"):
         upsert_parquet_cow(spark, evolved, tmp_table, ["k"])
@@ -169,16 +172,90 @@ def test_upsert_batch_dedupe_latest(spark, tmp_table):
     assert len(got) == 1 and got[0]["v"] == "new"
 
 
+def _dir_files(root: str) -> dict[str, int]:
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
 def test_migrate_copy_and_skip(spark, sf_dir, tmp_path):
     dst = str(tmp_path / "dst")
     keys = {"region": ["r_regionkey"], "nation": ["n_nationkey"]}
     rep1 = migrate(spark, sf_dir, dst, tables=["region", "nation"], key_cols=keys)
     assert rep1.ok and all(t.status == "copied" for t in rep1.tables)
-    # second run: everything deduped -> zero written
+    for t in rep1.tables:
+        n_src = spark.read.parquet(os.path.join(sf_dir, f"{t.table}.parquet")).count()
+        assert t.rows_read == t.rows_written == n_src, t
+    files = _dir_files(dst)
+    # second run: everything deduped -> zero written, and no file added
+    # (an empty append would otherwise leave a schema-only part file)
     rep2 = migrate(spark, sf_dir, dst, tables=["region", "nation"], key_cols=keys)
     assert rep2.ok and all(t.rows_written == 0 for t in rep2.tables)
+    assert all(t.rows_read == r.rows_read for t, r in zip(rep2.tables, rep1.tables))
+    assert _dir_files(dst) == files
     n = spark.read.parquet(os.path.join(dst, "region.parquet")).count()
     assert n == spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+
+
+def test_migrate_keyless_resume_is_multiset_difference(spark, tmp_path):
+    """A table with no key resumes through ``exceptAll``: exact
+    duplicate rows are copies, so only the copies the destination is
+    still missing are written."""
+    from collections import Counter
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    rows = [(1, "a")] * 3 + [(2, "b")] * 2 + [(3, "c")]
+    prefill = [(1, "a"), (2, "b"), (2, "b")]
+    schema = "k long, v string"
+    spark.createDataFrame(rows, schema).write.parquet(os.path.join(src, "t.parquet"))
+    spark.createDataFrame(prefill, schema).write.parquet(os.path.join(dst, "t.parquet"))
+
+    rep = migrate(spark, src, dst, tables=["t"])
+    assert rep.ok, rep.summary()
+    (t,) = rep.tables
+    assert t.rows_read == len(rows)
+    assert t.rows_written == sum((Counter(rows) - Counter(prefill)).values()) == 3
+    got = spark.read.parquet(os.path.join(dst, "t.parquet")).collect()
+    assert Counter(map(tuple, got)) == Counter(rows)
+
+
+def _parquet_scans(description: str) -> int:
+    """Parquet scans in a formatted physical plan, final adaptive plan
+    only (AQE also prints the initial plan, which would count twice)."""
+    tree = description.split("\n\n", 1)[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    return len(re.findall(r"\bScan parquet\b", tree))
+
+
+def test_migrate_resume_reads_each_table_once(spark, sf_dir, tmp_path):
+    """A resumed keyed copy is one pass: across all the SQL executions
+    it runs, the source is scanned once and the destination once."""
+    from prisma_migrator_spark.migrate import migrate_table
+
+    dst = str(tmp_path / "dst")
+    src = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    src.where("n_nationkey % 2 = 0").write.parquet(os.path.join(dst, "nation.parquet"))
+
+    jvm = spark.sparkContext._jvm
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return {
+            e.executionId(): e
+            for e in jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList())
+        }
+
+    expected = (src.count(), src.where("n_nationkey % 2 = 1").count())
+    before = set(executions())
+    res = migrate_table(spark, sf_dir, dst, "nation", {"nation": ["n_nationkey"]})
+    new = [e for i, e in executions().items() if i not in before]
+    assert res.status == "copied", res.error
+    assert (res.rows_read, res.rows_written) == expected
+    assert sum(_parquet_scans(e.physicalPlanDescription()) for e in new) == 2
 
 
 def test_migrate_parallel_tables(spark, sf_dir, tmp_path):
@@ -186,10 +263,10 @@ def test_migrate_parallel_tables(spark, sf_dir, tmp_path):
     tables = ["region", "nation", "supplier", "part"]
     rep = migrate(spark, sf_dir, dst, tables=tables, parallelism=4)
     assert rep.ok and {t.table for t in rep.tables} == set(tables)
-    for t in tables:
-        n_src = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-        n_dst = spark.read.parquet(os.path.join(dst, f"{t}.parquet")).count()
-        assert n_src == n_dst, t
+    for t in rep.tables:  # each copy's observed counts are its own
+        n_src = spark.read.parquet(os.path.join(sf_dir, f"{t.table}.parquet")).count()
+        n_dst = spark.read.parquet(os.path.join(dst, f"{t.table}.parquet")).count()
+        assert t.rows_read == t.rows_written == n_src == n_dst, t
 
 
 def test_migrate_error_isolation(spark, sf_dir, tmp_path):

@@ -137,7 +137,7 @@ def main() -> None:
             print(f"  [leg cpus={n_cpus}] total "
                   f"{sum(per_leg[n_cpus].values()):.1f}s",
                   file=sys.stderr, flush=True)
-        lo, hi = legs.split(",")[-1].strip(), legs.split(",")[0].strip()
+        lo, hi = min(per_leg, key=int), max(per_leg, key=int)
         ratios = {
             name: round(per_leg[lo][name] / max(per_leg[hi][name], 1e-9), 2)
             for name in names
