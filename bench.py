@@ -195,9 +195,12 @@ def main() -> None:
 
     spark = get_spark("pms-bench")
 
-    # Warm-up pass over the full set: JVM JIT + whole-stage-codegen
-    # compilation + shuffle-service spin-up are one-time session costs,
-    # not engine throughput — measure steady-state on the second pass.
+    # Warm-up pass over the full set: JVM JIT + shuffle-service spin-up
+    # are one-time session costs, not engine throughput — measure
+    # steady-state on the second pass. Generated code is compiled once
+    # only because get_spark sizes the codegen cache to hold every
+    # headline class (_CODEGEN_CACHE_ENTRIES in session.py); at Spark's
+    # default of 100 the timed pass recompiled ~250 of them.
     # clearCache drops anything an operator persisted internally so the
     # timed pass re-reads the parquet and re-runs every exchange.
     for name in names:

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from prisma_migrator_spark.llm.text import quality_score, tokens
 from prisma_migrator_spark.operators.driver_state import bounded_collect
+from prisma_migrator_spark.operators.literals import sql_double
 
 #: clamp for σ(z) inside the loss so log() never sees 0 — standard
 #: numerical guard, same value in the pure-Python test reference.
@@ -99,13 +100,6 @@ def _dot(w: list[float], x_col: str) -> Column:
     return z
 
 
-def _dlit(v: float) -> str:
-    """SQL double literal that parses to the exact same IEEE-754
-    double: ``repr`` round-trips in Python and Spark's parser
-    (Double.parseDouble) is correctly rounded, so the bits match."""
-    return f"{v!r}D"
-
-
 def train_logreg(
     feats: DataFrame,
     dim: int,
@@ -151,7 +145,7 @@ def train_logreg(
     calls) — measured 0.95 s/iteration of pure driver-side plan
     BUILD time at the sf0.01 gate, 3× the job execution itself. The
     SQL parses to the identical expression trees (same fold, same
-    clamp literals via :func:`_dlit`, same sum terms), so the
+    clamp literals via :func:`sql_double`, same sum terms), so the
     trajectory stays bit-identical — pinned by the parity test and
     the byte-identity gate below."""
     w = [0.0] * dim
@@ -161,8 +155,8 @@ def train_logreg(
     # iteration-invariant SQL fragments (p references the projected
     # __z column exactly like the old Column form did)
     p_sql = (
-        f"least(greatest(1.0D / (1.0D + exp(- __z)), {_dlit(_EPS)}), "
-        f"{_dlit(1.0 - _EPS)})"
+        "least(greatest(1.0D / (1.0D + exp(- __z)), "
+        f"{sql_double(_EPS)}), {sql_double(1.0 - _EPS)})"
     )
     loss_sql = (
         f"- ({yq} * ln({p_sql}) + (1.0D - {yq}) * ln(1.0D - {p_sql}))"
@@ -180,7 +174,7 @@ def train_logreg(
         # folded to a single ArrayData reference object, so the
         # whole-stage-codegen SOURCE is identical across iterations
         # (janino cache hit), exactly like F.lit(list).cast(...)
-        warr = "array(" + ", ".join(_dlit(wj) for wj in w) + ")"
+        warr = "array(" + ", ".join(sql_double(wj) for wj in w) + ")"
         z_sql = (
             f"aggregate(zip_with({warr}, {xq}, (a, b) -> a * b), "
             f"0.0D, (acc, v) -> acc + v)"

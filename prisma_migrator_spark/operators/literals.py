@@ -12,7 +12,8 @@ text with ONE ``F.expr`` call builds the exact same
 - doubles: ``repr`` round-trips in Python, and Spark's parser
   (``Double.parseDouble``) is correctly rounded, so ``array(0.1D,…)``
   carries bit-identical IEEE-754 values (verified bit-for-bit against
-  the ``F.lit`` form in pytest);
+  the ``F.lit`` form in pytest); NaN and ±inf are written as
+  ``CAST('NaN' AS DOUBLE)`` and friends;
 - strings: standard SQL escaping, same UTF8String literal.
 
 Empty input falls back to ``F.array()`` — the same Column the old
@@ -25,10 +26,18 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _d(v: float) -> str:
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
+def sql_double(v: float) -> str:
     """Exact SQL double literal (repr round-trips; parser is
-    correctly rounded — identical bits)."""
-    return f"{float(v)!r}D"
+    correctly rounded — identical bits). ``repr`` spells NaN and ±inf
+    ``nan``/``inf``, which the parser rejects, so those become the
+    string casts Spark itself accepts."""
+    r = repr(float(v))
+    if r in _NON_FINITE:
+        return f"CAST('{_NON_FINITE[r]}' AS DOUBLE)"
+    return f"{r}D"
 
 
 def _s(v: str) -> str:
@@ -41,7 +50,7 @@ def double_array(vals) -> Column:
     vals = list(vals)
     if not vals:
         return F.array()
-    return F.expr("array(" + ", ".join(_d(v) for v in vals) + ")")
+    return F.expr("array(" + ", ".join(sql_double(v) for v in vals) + ")")
 
 
 def double_matrix(rows) -> Column:
@@ -52,7 +61,7 @@ def double_matrix(rows) -> Column:
     return F.expr(
         "array("
         + ", ".join(
-            "array(" + ", ".join(_d(v) for v in r) + ")" for r in rows
+            "array(" + ", ".join(sql_double(v) for v in r) + ")" for r in rows
         )
         + ")"
     )

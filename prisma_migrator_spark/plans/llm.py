@@ -4069,10 +4069,13 @@ def _train_view(feats: DataFrame) -> DataFrame:
     (parity pin tolerance 1e-6; VERDICT r9 item 4 accepts 12dp-snap
     identity) — and every declared 6dp output was verified
     row-identical across sf0.001/0.01/0.1 (OPTIMIZATION_r10.md).
-    On a CLUSTER the coalescer groups parent partitions by locality,
-    so the fold grouping (and the last weight bit) can differ across
-    placements — same class of nondeterminism as any partial-agg
-    merge order; the declared outputs round at 6dp on top of it."""
+    Cluster caveat: there the coalescer groups parent partitions by
+    the locality of their cached blocks, so the last bits of the
+    trained weights depend on where those blocks live — the fold
+    grouping is placement-dependent, not fixed by the plan. Same
+    class of nondeterminism as any partial-agg merge order; the
+    declared outputs round at 6dp on top of it, and the replica's
+    ``--twice`` determinism gate only ever sees one local placement."""
     return feats.coalesce(max(8, feats.rdd.getNumPartitions() // 4))
 
 
@@ -7940,8 +7943,9 @@ GROUP BY t.doc_id, len(t.ts)
 # SQL-expressible as gaps-and-islands over the raw adjacent-pair
 # match flags — within a run of consecutive matches the fold merges
 # the 1st, 3rd, 5th... pair (a fused token never re-merges; no
-# fixture token contains '_', checked at every SF). The pure-Python
-# fold pin in pytest stays as defense in depth.
+# fixture token contains '_', pinned at every SF by
+# test_merge_phrases_oracle_no_underscore_token_in_fixture). The
+# pure-Python fold pin in pytest stays as defense in depth.
 def merge_phrases_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase merging — PMI put to work: mine the corpus's strongest
     collocations (PMI >= 2, count >= 5, the `term_pmi_pairs` plan),

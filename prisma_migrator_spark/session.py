@@ -2,7 +2,8 @@
 
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same configs
 (AQE, shuffle partitions sized to the cluster, UTC session time zone,
-Arrow for the Pandas-UDF slow path) are the ones we would set on a real
+Arrow for the Pandas-UDF slow path, a generated-code cache sized to hold
+every headline query's classes) are the ones we would set on a real
 multi-executor cluster. Nothing here is local-mode-only except the
 master URL.
 """
@@ -12,6 +13,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The 14 headline queries generate ~250 distinct classes (248-259
+# Janino compiles in a first headline round at sf0.001 and sf0.01,
+# local[4]). Spark's default cache holds 100, so each round evicted
+# the classes the next round needed: Janino recompiled 249 of them
+# every round, and the JIT then recompiled their bytecode. At 1024 a
+# repeated round compiles 0-8 (tests/test_plans.py pins it). Guava
+# splits the cache into 4 segments and evicts per segment, so a cap
+# near the working set still evicts from whichever segment fills
+# first; ~4x the working set leaves every segment room for its share
+# plus the classes other queries add.
+_CODEGEN_CACHE_ENTRIES = 1024
 
 
 def get_spark(
@@ -28,6 +41,12 @@ def get_spark(
       the excess anyway).
     - UTC session timezone so timestamp semantics match the DuckDB
       oracle and are cluster-invariant.
+    - codegen cache of ``_CODEGEN_CACHE_ENTRIES`` compiled classes, so
+      a query run a second time reuses its generated code. This is a
+      static SQL conf: ``CodeGenerator`` reads it once, when the JVM
+      first generates code, so only the first session built in a JVM
+      sets it. The test session (``tests/conftest.py``), ``bench.py``
+      and ``perfbench`` all build through here and so get it.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
@@ -47,6 +66,7 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         # UI off by default (driver/bench hygiene); tools that read
         # per-stage spill/shuffle metrics over the REST API (e.g.
         # tools/graph_cache_probe.py) opt in via SPARK_GRAFT_UI=1.

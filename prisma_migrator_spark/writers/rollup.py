@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prisma_migrator_spark.operators.driver_state import observe_rows
 from prisma_migrator_spark.writers.upsert import _atomic_swap
 
 _LEDGER = "_applied_batches.json"
@@ -87,10 +88,10 @@ def maintain_rollup(
         )
     else:
         merged = delta
+    merged, rows = observe_rows(merged)
     staged = path + ".staging"
     merged.write.mode("overwrite").parquet(staged)
     with open(os.path.join(staged, _LEDGER), "w", encoding="utf-8") as f:
         json.dump(sorted(seen | {batch_id}), f)
     _atomic_swap(staged, path)
-    n = spark.read.parquet(path).count()
-    return {"path": path, "batch_id": batch_id, "applied": True, "rows": n}
+    return {"path": path, "batch_id": batch_id, "applied": True, "rows": rows()}

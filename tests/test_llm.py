@@ -1537,6 +1537,33 @@ def test_bpe_oracle_separator_absent_from_fixture():
         assert n == 0, f"{sf}: {n} docs contain the BPE oracle separator"
 
 
+def test_merge_phrases_oracle_no_underscore_token_in_fixture(sf_dir):
+    """The merge_phrases oracle (plans/llm._MERGE_PHRASES_ORACLE)
+    models the greedy fold from RAW adjacent-pair matches; that is
+    exact only while no raw token contains '_', the character a merge
+    fuses with (a fused token could otherwise re-match a phrase key).
+    Tokens are ``lower(trim(text))`` split on whitespace, and '_'
+    survives both, so a token holds '_' iff its text does. Pin its
+    absence at every scale factor next to the test fixture."""
+    import glob
+    import os
+
+    import duckdb
+
+    paths = sorted(
+        glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*", "documents.parquet"))
+    )
+    assert paths, "no documents fixture found"
+    for path in paths:
+        n = duckdb.sql(
+            "SELECT COUNT(*) FROM ("
+            "  SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok"
+            f"  FROM read_parquet('{path}')"
+            ") WHERE contains(tok, '_')"
+        ).fetchone()[0]
+        assert n == 0, f"{path}: {n} tokens contain '_'"
+
+
 def test_bpe_matches_python_reference(spark, sf_dir):
     """Distributed BPE merge learning must reproduce the classic
     single-machine algorithm (Sennrich et al. 2016) exactly: same

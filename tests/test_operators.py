@@ -314,7 +314,9 @@ def test_bulk_literals_bit_identical_to_f_lit(spark):
     values must be BIT-identical to the F.lit form — repr round-trips
     doubles and Spark's parser is correctly rounded, pinned here over
     awkward values (subnormals, -0.0, exponents, quote/backslash
-    strings)."""
+    strings) and over NaN and ±inf, which ``repr`` spells in a form
+    the parser rejects."""
+    import math
     import struct
 
     from pyspark.sql import functions as F
@@ -329,6 +331,7 @@ def test_bulk_literals_bit_identical_to_f_lit(spark):
         0.0, -0.0, 1e-12, 1.0 - 1e-12, -1.8356827628043464,
         3.7352964113127336, 5e-324, 1.7976931348623157e308,
         -2.2250738585072014e-308, 0.1 + 0.2, 1e16 + 1.0, -7.5e-5,
+        math.nan, math.inf, -math.inf, 0.1,
     ]
     one = spark.range(1)
     old = one.select(

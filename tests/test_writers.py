@@ -740,6 +740,10 @@ def test_maintain_rollup_incremental_equals_recompute(spark, sf_dir, tmp_path):
             batch_id=str(day),
         )
         assert rep["applied"]
+        # the observed row count of the first write and of every
+        # merge equals what reading the committed table back counts
+        assert rep["rows"] == spark.read.parquet(path).count()
+    rows = rep["rows"]
 
     # re-deliver day 2: must be a no-op
     rep = maintain_rollup(
@@ -748,6 +752,7 @@ def test_maintain_rollup_incremental_equals_recompute(spark, sf_dir, tmp_path):
     )
     assert not rep["applied"]
     assert applied_batches(path) == {str(d) for d in days[:4]}
+    assert spark.read.parquet(path).count() == rows
 
     got = spark.read.parquet(path)
     exp = (
