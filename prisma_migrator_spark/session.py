@@ -47,6 +47,8 @@ def get_spark(
       first generates code, so only the first session built in a JVM
       sets it. The test session (``tests/conftest.py``), ``bench.py``
       and ``perfbench`` all build through here and so get it.
+    - Spark UI off: ``perfbench`` reads per-stage metrics from the
+      in-process status store, which needs no UI.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
@@ -67,13 +69,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
-        # UI off by default (driver/bench hygiene); tools that read
-        # per-stage spill/shuffle metrics over the REST API (e.g.
-        # tools/graph_cache_probe.py) opt in via SPARK_GRAFT_UI=1.
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
-from prisma_migrator_spark.streaming.windows import session_windows, tumbling_windows
+from prisma_migrator_spark.streaming.windows import tumbling_windows
 
 
 def read_events_stream(
@@ -52,17 +52,6 @@ def streaming_event_counts(events: DataFrame, size: str = "1 hour") -> DataFrame
         size,
         keys=["event_type"],
         aggs=[F.count("*").alias("n_events"), F.sum("value").alias("total_value")],
-    )
-
-
-def streaming_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Incremental gap-sessionization per user (stateful)."""
-    return session_windows(
-        events,
-        "ts",
-        gap,
-        keys=["user_id"],
-        aggs=[F.count("*").alias("n_events")],
     )
 
 

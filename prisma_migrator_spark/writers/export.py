@@ -18,6 +18,7 @@ a dataloader maps); drop it if many small files per shard are fine.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,7 +36,10 @@ def write_jsonl_shards(
     """Write ``df`` as JSONL shard directories of ~``tokens_per_shard``
     tokens each (documents never split across shards; deterministic
     ``order_col`` order defines shard membership, so re-exports are
-    byte-stable given the same input). Returns the shard count.
+    byte-stable given the same input). Returns the shard count, read
+    from the layout rather than the data: ``partitionBy`` writes one
+    directory per distinct ``shard_id`` (NULL included), and shard ids
+    may skip values, so the count is not ``max + 1``.
 
     Layout: ``path/shard_id=N/part-*.json`` — one JSON object per
     line, Spark's native JSON text sink (hive-partitioned so a loader
@@ -52,7 +56,7 @@ def write_jsonl_shards(
         .partitionBy("shard_id")
         .json(path)
     )
-    return df.sparkSession.read.json(path).select("shard_id").distinct().count()
+    return sum(d.startswith("shard_id=") for d in os.listdir(path))
 
 
 def write_jsonl_sized(
@@ -116,8 +120,6 @@ def write_webdataset_shards(
     never collide on a shared tmp path.
     """
     import json
-    import math
-    import os
     import tarfile
     import uuid
 
@@ -199,8 +201,6 @@ def write_arrow_shards(
     a re-export never leaves stale shards behind a globbing loader.
     Returns the manifest DataFrame (shard_id, n_samples, n_bytes,
     path)."""
-    import math
-    import os
     import uuid
 
     import pandas as pd

@@ -192,6 +192,34 @@ def test_ntz_parquet_normalized_timezone_independent(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_read_parquet_memo_hits_until_nested_member_rewritten(spark, tmp_path):
+    """The catalog memos the report path leans on: an unchanged
+    directory table returns the same handle, and ``ensure_parallelism``
+    of that handle the same frame, so repeated loads skip schema
+    inference and the partition probe. Rewriting a file inside a
+    nested ``k=v/`` subdirectory must miss the memo (the signature
+    walks the whole tree), and the new handle must see the rewrite."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prisma_migrator_spark.catalog import ensure_parallelism, read_parquet
+
+    table = tmp_path / "t.parquet"
+    (table / "k=1").mkdir(parents=True)
+    member = str(table / "k=1" / "part-0.parquet")
+    pq.write_table(pa.table({"id": pa.array(range(3), pa.int64())}), member)
+
+    first = read_parquet(spark, str(table))
+    assert read_parquet(spark, str(table)) is first
+    assert ensure_parallelism(first) is ensure_parallelism(first)
+    assert first.count() == 3
+
+    pq.write_table(pa.table({"id": pa.array(range(5), pa.int64())}), member)
+    fresh = read_parquet(spark, str(table))
+    assert fresh is not first
+    assert fresh.count() == 5
+
+
 def test_bucketed_interval_join_constructed(spark):
     """Half-open [start, end) semantics, multi-bucket interval
     replication, keyless operation, and exactly-once pair emission
