@@ -50,8 +50,8 @@ from pyspark.sql import functions as F
 #: a driver loop. Building is data-proportional (reads the key column
 #: + one md5 per key), ~100-300 files/s serial at ~5k rows/file — two
 #: orders heavier than footer reads, so distribution pays far earlier
-#: than layout.DISTRIBUTED_FOOTER_THRESHOLD (32,768). Provisional at
-#: 256 pending a measured crossover (tools/upsert_bench.py).
+#: than layout.DISTRIBUTED_FOOTER_THRESHOLD (32,768). Provisional:
+#: the crossover has not been measured.
 DISTRIBUTED_BLOOM_THRESHOLD = 256
 
 #: Suffix of the sidecar manifest directory, sibling to the table —

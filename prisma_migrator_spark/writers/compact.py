@@ -7,7 +7,7 @@ fan-out).
 Reference scope note: the reference engine writes through a database
 and never manages files; this belongs to the lake-maintenance
 extension surface (same family as ``upsert_parquet_cow`` /
-``delete_keys_cow`` / ``zorder_write``).
+``delete_keys_cow``, whose rewrite-and-swap step it shares).
 
 Design: files at or above ``min_fill × target_bytes`` are carried
 over BYTE-IDENTICAL (hard-linked when the filesystem allows, copied
@@ -19,7 +19,7 @@ per-group driver loop — a thousand tiny files become one shuffle of
 exactly the tiny-file bytes. Round-robin discards any clustering the
 small files had; for clustered tables run ``zorder_write``-style
 reclustering instead (this op is for the unordered append tail).
-The directory is replaced via the same atomic-swap used by the CoW
+The directory is replaced via the same atomic swap as the CoW
 writers, so readers never observe a half-compacted table.
 """
 
@@ -27,12 +27,10 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
-from prisma_migrator_spark.writers.upsert import _atomic_swap, _part_files
+from prisma_migrator_spark.writers.upsert import _part_files, _rewrite_and_swap
 
 
 def plan_compaction(
@@ -72,21 +70,8 @@ def compact_small_files(
         report["bytes_compacted"] = 0
         return report
     n_out = max(1, math.ceil(report["bytes_compacted"] / target_bytes))
-    tmp = path + "." + uuid.uuid4().hex[:8] + ".compact-tmp"
-    sub = os.path.join(tmp, "__rewrite")
-    spark.read.parquet(*small).repartition(n_out).write.parquet(sub)
-    os.makedirs(tmp, exist_ok=True)
-    moved = 0
-    for f in _part_files(sub):
-        os.rename(f, os.path.join(tmp, f"compacted-{moved:05d}.parquet"))
-        moved += 1
-    shutil.rmtree(sub, ignore_errors=True)
-    for f in kept:
-        dst = os.path.join(tmp, os.path.basename(f))
-        try:
-            os.link(f, dst)  # byte-identical carry-over, zero copy
-        except OSError:
-            shutil.copy2(f, dst)
-    _atomic_swap(tmp, path)
-    report["files_out"] = len(kept) + moved
+    _rewrite_and_swap(
+        spark.read.parquet(*small).repartition(n_out), path, kept, "compacted-"
+    )
+    report["files_out"] = len(_part_files(path))
     return report

@@ -22,27 +22,25 @@ Plan shape (scale-safe): the target joins the key-deduplicated source
 ONCE on the keys; every matched clause is a projection/filter over
 that single join — no per-clause scans, no driver loops. Inserts are
 one anti-join of the (pre-filtered) source. The write goes through
-the staged-dir + atomic-swap protocol shared by every writer here;
-``cow=True`` confines the join and rewrite to files whose footer key
-range intersects a source key (everything else hard-links over
-byte-identical), the same pruning contract as ``upsert_parquet_cow``.
+the staged-dir + atomic-swap protocol shared by every writer here.
+Pruning always applies: only files whose footer key range holds a
+source key join and rewrite, and the rest hard-link over
+byte-identical, as in ``upsert_parquet_cow``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prisma_migrator_spark.operators.driver_state import bounded_collect
 from prisma_migrator_spark.operators.joins import anti_join
 from prisma_migrator_spark.writers.upsert import (
-    _atomic_swap,
+    _dedupe,
+    _files_holding_keys,
     _part_files,
-    latest_per_key,
+    _rewrite_and_swap,
 )
 
 
@@ -124,7 +122,6 @@ def merge_into(
     when_not_matched_insert: Column | None = None,
     insert: bool = True,
     order_col: str | None = None,
-    cow: bool = False,
 ) -> dict:
     """Execute the MERGE against the parquet table at ``target_path``.
 
@@ -139,88 +136,40 @@ def merge_into(
       become NULL), optionally gated by the condition.
     - ``order_col`` — in-source replay determinism: latest-wins
       key-dedup before the merge (same contract as the upsert family).
-    - ``cow=True`` — footer-range file pruning: only files whose
-      ``key_cols[0]`` range intersects a source key join and rewrite;
-      the rest hard-link over byte-identical.
+
+    Only files whose ``key_cols[0]`` footer range holds a source key
+    join and rewrite; the rest hard-link over byte-identical.
     """
     keys = list(key_cols)
-    src = (
-        latest_per_key(source, keys, order_col)
-        if order_col
-        else source.dropDuplicates(keys)
-    )
+    src = _dedupe(source, keys, order_col)
     existing_schema = spark.read.parquet(target_path).schema
     files = _part_files(target_path)
-
-    if cow:
-        from prisma_migrator_spark.writers.layout import file_key_ranges_df
-
-        prune_key = keys[0]
-        rng = file_key_ranges_df(
-            spark, files, prune_key, existing_schema[prune_key].dataType
-        )
-        hits = bounded_collect(
-            src.select(F.col(prune_key).alias("__k"))
-            .distinct()
-            .join(
-                F.broadcast(rng),
-                F.col("__lo").isNull()
-                | (
-                    (F.col("__k") >= F.col("__lo"))
-                    & (F.col("__k") <= F.col("__hi"))
-                ),
-            )
-            .select("__file")
-            .distinct(),
-            len(files),
-            "one row per data file in the table footprint",
-        )
-        matched_files = sorted({r["__file"] for r in hits})
-    else:
-        matched_files = files
-    untouched_files = [f for f in files if f not in set(matched_files)]
-
-    if matched_files:
-        target = spark.read.schema(existing_schema).parquet(*matched_files)
-        result = _merged_frame(
-            target,
-            src,
-            keys,
-            when_matched_delete,
-            when_matched_update,
-            update_set,
-            when_not_matched_insert,
-            insert,
-        )
-    else:
-        # no file holds any source key: the merge reduces to inserts
-        result = _merged_frame(
-            spark.createDataFrame([], existing_schema),
-            src,
-            keys,
-            when_matched_delete,
-            when_matched_update,
-            update_set,
-            when_not_matched_insert,
-            insert,
-        )
-
-    staged_rw = target_path + ".staging.rewrite"
-    result.write.mode("overwrite").parquet(staged_rw)
-    staged = target_path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched_files:
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "m-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, target_path)
-    return {
+    matched = _files_holding_keys(spark, src, files, existing_schema[keys[0]])
+    report = {
         "path": target_path,
         "files_total": len(files),
-        "files_rewritten": len(matched_files),
-        "files_kept": len(untouched_files),
+        "files_rewritten": len(matched),
+        "files_kept": len(files) - len(matched),
     }
+    if not matched and not insert:
+        return report  # no target row can match and nothing inserts
+
+    if matched:
+        target = spark.read.schema(existing_schema).parquet(*sorted(matched))
+    else:
+        # no file holds any source key: the merge reduces to inserts
+        target = spark.createDataFrame([], existing_schema)
+    result = _merged_frame(
+        target,
+        src,
+        keys,
+        when_matched_delete,
+        when_matched_update,
+        update_set,
+        when_not_matched_insert,
+        insert,
+    )
+    _rewrite_and_swap(
+        result, target_path, [f for f in files if f not in matched], "m-"
+    )
+    return report

@@ -39,11 +39,13 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from prisma_migrator_spark.operators.driver_state import bounded_collect, observe_rows
+from pyspark.sql.types import StructField
 
 from prisma_migrator_spark.operators.dedup import latest_per_key
+from prisma_migrator_spark.operators.driver_state import bounded_collect, observe_rows
 from prisma_migrator_spark.operators.joins import anti_join
+from prisma_migrator_spark.writers.jdbc_sink import dedupe_batch
+from prisma_migrator_spark.writers.layout import file_key_ranges_df
 
 
 def append_skip_duplicates(
@@ -54,25 +56,26 @@ def append_skip_duplicates(
 ) -> DataFrame:
     """Rows of ``new_rows`` whose key is absent from ``existing`` —
     the dataframe form of ``ON CONFLICT DO NOTHING``. Also dedupes
-    within the batch itself, deterministically: per key, the row that
-    is lexicographically smallest over the remaining columns survives
-    (``min(struct(...))`` partial-aggregates map-side; a bare
-    ``dropDuplicates`` keeps whichever row a partitioning happens to
-    deliver first, which varies across runs/AQE replans)."""
-    keys = list(key_cols)
-    rest = [c for c in new_rows.columns if c not in keys]
-    if rest:
-        in_batch = (
-            new_rows.groupBy(*keys)
-            .agg(F.min(F.struct(*rest)).alias("__row"))
-            .select(*keys, *[F.col(f"__row.{c}").alias(c) for c in rest])
-            .select(*new_rows.columns)
-        )
-    else:
-        in_batch = new_rows.dropDuplicates(keys)
+    within the batch itself, deterministically (:func:`_dedupe`)."""
     return anti_join(
-        in_batch, existing, key_cols, broadcast_right=broadcast_existing_keys
+        _dedupe(new_rows, list(key_cols)),
+        existing,
+        key_cols,
+        broadcast_right=broadcast_existing_keys,
     )
+
+
+def _dedupe(
+    batch: DataFrame, keys: list[str], order_col: str | None = None
+) -> DataFrame:
+    """One batch row per key, the same one whatever the row order: the
+    latest by ``order_col`` when given, else the lexicographically
+    smallest over the other columns (``jdbc_sink.dedupe_batch``). A
+    bare ``dropDuplicates`` keeps whichever row a partitioning happens
+    to deliver first, which varies across runs and AQE replans."""
+    if order_col:
+        return latest_per_key(batch, keys, order_col)
+    return dedupe_batch(batch, keys)
 
 
 def _atomic_swap(tmp: str, target: str) -> None:
@@ -83,6 +86,76 @@ def _atomic_swap(tmp: str, target: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
     else:
         os.rename(tmp, target)
+
+
+def _part_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _files_holding_keys(
+    spark: SparkSession, key_frame: DataFrame, files: list[str], key: StructField
+) -> set[str]:
+    """The ``files`` whose footer range of ``key`` holds a value of
+    ``key_frame``'s ``key`` column: a superset of the files that hold
+    one. One Spark job joins the distinct keys against the broadcast
+    per-file ranges (|files| rows, metadata-sized), read driver-serial
+    for small tables and on executors past
+    ``layout.DISTRIBUTED_FOOTER_THRESHOLD``. A file without usable
+    stats (NULL range) may hold any key, so it joins every key; an
+    empty key frame selects nothing."""
+    rng = file_key_ranges_df(spark, files, key.name, key.dataType)
+    hits = bounded_collect(
+        key_frame.select(F.col(key.name).alias("__k"))
+        .distinct()
+        .join(
+            F.broadcast(rng),
+            F.col("__lo").isNull()
+            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
+        )
+        .select("__file")
+        .distinct(),
+        len(files),
+        "one row per data file in the table footprint",
+    )
+    return {r["__file"] for r in hits}
+
+
+def _rewrite_and_swap(
+    result: DataFrame, path: str, carried: Sequence[str], prefix: str
+) -> int:
+    """Replace the table at ``path`` with ``result``'s rows plus the
+    ``carried`` files, byte-identical: write ``result`` into a staging
+    directory, rename its part files with ``prefix``, hard-link each
+    carried file beside them (copy where the filesystem refuses a
+    link) and swap the directory in. Spark writes a schema-only file
+    for an empty result; it is dropped unless nothing is carried, as
+    the table still needs one file. Returns the rows written, counted
+    on the write itself (``observe_rows``)."""
+    staged = f"{path}.{uuid.uuid4().hex[:8]}.staging"
+    written = os.path.join(staged, "__rewrite")
+    result, observed = observe_rows(result)
+    try:
+        result.write.parquet(written)
+        rows = observed()
+        if rows or not carried:
+            for f in _part_files(written):
+                os.rename(f, os.path.join(staged, prefix + os.path.basename(f)))
+        shutil.rmtree(written)
+        for f in carried:
+            dst = os.path.join(staged, os.path.basename(f))
+            try:
+                os.link(f, dst)  # byte-identical carry-over, zero copy
+            except OSError:
+                shutil.copy2(f, dst)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    _atomic_swap(staged, path)
+    return rows
 
 
 def _merge(
@@ -166,7 +239,7 @@ def upsert_parquet(
       row (DO UPDATE). ``update_cols=[]``: matched keys keep the
       existing row (DO NOTHING), mirroring reference lib.ts:91.
     - ``order_col``: dedupe within the batch keeping the latest by
-      this column (else arbitrary-deterministic first).
+      this column (else the smallest row, :func:`_dedupe`).
     - ``allow_schema_evolution``: batch columns the table lacks are
       ADDED (NULL for untouched rows); table columns the batch lacks
       are NULL-filled in the batch (:func:`_align_schemas`). Off by
@@ -185,11 +258,7 @@ def upsert_parquet(
     the written plan, so the table is not read back to count it.
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = _dedupe(batch, keys, order_col)
 
     exists = os.path.exists(path)
     if not exists:
@@ -224,14 +293,6 @@ def upsert_parquet(
     result.write.mode("overwrite").parquet(staged)
     _atomic_swap(staged, path)
     return {"path": path, "total": total(), "mode": "update" if do_update else "insert_only"}
-
-
-def _part_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
 
 
 def upsert_parquet_cow(
@@ -277,17 +338,13 @@ def upsert_parquet_cow(
     alone and bootstraps the manifest for the next call.
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = _dedupe(batch, keys, order_col)
     if not os.path.exists(path):
-        staged = path + ".staging"
-        batch, n = observe_rows(batch)
-        batch.write.mode("overwrite").parquet(staged)
-        _atomic_swap(staged, path)
-        out = {"path": path, "inserted": n(), "mode": "create"}
+        out = {
+            "path": path,
+            "inserted": _rewrite_and_swap(batch, path, [], "m-"),
+            "mode": "create",
+        }
         if bloom:
             from prisma_migrator_spark.writers import bloom as bloom_sidecar
 
@@ -295,8 +352,6 @@ def upsert_parquet_cow(
                 spark, path, keys[0]
             )
         return out
-
-    from prisma_migrator_spark.writers.layout import file_key_ranges_df
 
     existing_schema = spark.read.parquet(path).schema
     evolved = [c for c in batch.columns if c not in existing_schema.names]
@@ -312,29 +367,7 @@ def upsert_parquet_cow(
         )
     prune_key = keys[0]
     files = _part_files(path)
-    # footer ranges as a DataFrame: driver-serial for small tables,
-    # executor-parallel past the threshold (layout.file_key_ranges_df)
-    # — the serial footer loop dominates CoW planning at 1000s of
-    # files. A NULL range means 'no usable stats': such a file joins
-    # every batch key (conservatively rewritten whenever the batch is
-    # non-empty; an empty batch rewrites nothing, correctly).
-    rng = file_key_ranges_df(
-        spark, files, prune_key, existing_schema[prune_key].dataType
-    )
-    hits = bounded_collect(
-        batch.select(F.col(prune_key).alias("__k"))
-        .distinct()
-        .join(
-            F.broadcast(rng),
-            F.col("__lo").isNull()
-            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
-        )
-        .select("__file")
-        .distinct(),
-        len(files),
-        "one row per data file in the table footprint",
-    )
-    rewrite = {r["__file"] for r in hits}
+    rewrite = _files_holding_keys(spark, batch, files, existing_schema[prune_key])
 
     if bloom:
         from prisma_migrator_spark.writers import bloom as bloom_sidecar
@@ -349,35 +382,21 @@ def upsert_parquet_cow(
         )
         rewrite &= set(survivors)
 
-    matched = sorted(rewrite)
     untouched = [f for f in files if f not in rewrite]
-    if matched:
-        existing_sub = spark.read.schema(existing_schema).parquet(*matched)
+    if rewrite:
+        existing_sub = spark.read.schema(existing_schema).parquet(*sorted(rewrite))
         result = _merge(
             existing_sub, batch.select(*existing_sub.columns), keys, update_cols
         )
     else:
         # No file can contain any batch key: every batch row is new.
-        result = batch.select(*[f.name for f in existing_schema.fields])
-
-    staged_rw = path + ".staging.rewrite"
-    result.write.mode("overwrite").parquet(staged_rw)
-    staged = path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched:  # hard-link: zero-copy, byte-identical
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "m-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, path)
+        result = batch.select(*existing_schema.names)
+    _rewrite_and_swap(result, path, untouched, "m-")
     out = {
         "path": path,
         "mode": "update" if (update_cols is None or update_cols) else "insert_only",
         "files_total": len(files),
-        "files_rewritten": len(matched),
+        "files_rewritten": len(rewrite),
         "files_kept": len(untouched),
     }
     if bloom:
@@ -419,11 +438,7 @@ def upsert_partitioned(
     by the batch's partition fan-out, not table size.
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = _dedupe(batch, keys, order_col)
     if not os.path.exists(path):
         batch.write.mode("overwrite").partitionBy(partition_col).parquet(path)
         return {"path": path, "mode": "create", "partitions": "all"}
@@ -463,86 +478,36 @@ def delete_keys_cow(
     retention-expiry write a data platform needs and the reference
     (append/upsert only, src/utils/lib.ts:76-95) never had.
 
-    Same machinery as :func:`upsert_parquet_cow`: footer key-range
-    stats prune the file set to those that COULD hold a doomed key;
-    only those are read, anti-joined against the key set, and
-    rewritten — every other file is hard-linked untouched
+    This is ``merge_into``'s delete-only shape (every matched row is
+    deleted, nothing inserts), so it prunes and swaps like
+    :func:`upsert_parquet_cow`: only files whose footer key range
+    could hold a doomed key are read, anti-joined against the key set
+    and rewritten — every other file is hard-linked untouched
     (byte-identical, zero IO). Deleting 1k users from a 100 TB table
     clustered by user rewrites only the files their rows live in.
     Idempotent in content; keys outside every file's range (already
     fully absent) prune to a zero-rewrite noop, while a repeat delete
     of keys INSIDE a surviving file's min/max conservatively rewrites
-    that file (footer stats prove possible presence, never absence —
-    the same conservatism as the CoW upsert).
+    that file (footer stats prove possible presence, never absence).
 
     ``keys_df`` needs exactly the ``key_cols`` columns (extra columns
     are dropped). Multi-column keys prune on ``key_cols[0]`` and
     match on all columns, like the CoW upsert.
     """
-    keys = list(key_cols)
-    doomed = keys_df.select(*keys).dropDuplicates(keys)
     if not os.path.exists(path):
         return {"path": path, "mode": "noop", "files_rewritten": 0}
+    from prisma_migrator_spark.writers.merge import merge_into
 
-    from prisma_migrator_spark.writers.layout import file_key_ranges_df
-
-    existing_schema = spark.read.parquet(path).schema
-    prune_key = keys[0]
-    files = _part_files(path)
-    # same pruning source as upsert_parquet_cow: NULL range = no
-    # stats, joins every doomed key (conservative rewrite)
-    rng = file_key_ranges_df(
-        spark, files, prune_key, existing_schema[prune_key].dataType
+    keys = list(key_cols)
+    rep = merge_into(
+        spark,
+        path,
+        keys_df.select(*keys),
+        keys,
+        when_matched_delete=F.lit(True),
+        insert=False,
     )
-    hits = bounded_collect(
-        doomed.select(F.col(prune_key).alias("__k"))
-        .distinct()
-        .join(
-            F.broadcast(rng),
-            F.col("__lo").isNull()
-            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
-        )
-        .select("__file")
-        .distinct(),
-        len(files),
-        "one row per data file in the table footprint",
-    )
-    rewrite = {r["__file"] for r in hits}
-
-    matched = sorted(rewrite)
-    untouched = [f for f in files if f not in rewrite]
-    if not matched:
-        return {
-            "path": path,
-            "mode": "noop",
-            "files_total": len(files),
-            "files_rewritten": 0,
-            "files_kept": len(untouched),
-        }
-
-    survivors = anti_join(
-        spark.read.schema(existing_schema).parquet(*matched), doomed, keys
-    )
-    staged_rw = path + ".staging.rewrite"
-    survivors.write.mode("overwrite").parquet(staged_rw)
-    staged = path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched:
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "d-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, path)
-    return {
-        "path": path,
-        "mode": "delete",
-        "files_total": len(files),
-        "files_rewritten": len(matched),
-        "files_kept": len(untouched),
-    }
+    return {**rep, "mode": "delete" if rep["files_rewritten"] else "noop"}
 
 
 def write_entity(

@@ -1,9 +1,9 @@
 """Table versioning / time travel over plain parquet directories.
 
-Every mutating writer in this package (``upsert_parquet_cow``,
-``delete_keys_cow``, ``compact_small_files``, ``zorder_write``)
-replaces the table directory atomically — after which yesterday's
-table is gone. This module adds the missing lakehouse pillar on the
+The copy-on-write writers in this package (``upsert_parquet_cow``,
+``delete_keys_cow``, ``merge_into``, ``compact_small_files``) replace
+the table directory atomically, and ``zorder_write`` overwrites it in
+place — after either, yesterday's table is gone. This module adds the missing lakehouse pillar on the
 same no-format principles: a SNAPSHOT is a sibling directory of
 hard links to the current data files (zero data copy, zero read — the
 same trick the CoW merge uses for untouched files), so keeping N

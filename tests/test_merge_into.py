@@ -104,7 +104,7 @@ def test_merge_insert_fills_missing_columns_null(spark, tmp_path):
 
 
 def test_merge_cow_prunes_files_and_keeps_bytes(spark, tmp_path):
-    """cow=True: only files whose key range intersects the source are
+    """Only files whose key range intersects the source are
     rewritten; the rest are byte-identical hard links."""
     path = str(tmp_path / "t.parquet")
     _table(
@@ -117,7 +117,7 @@ def test_merge_cow_prunes_files_and_keeps_bytes(spark, tmp_path):
         os.path.basename(f): open(f, "rb").read() for f in _part_files(path)
     }
     source = spark.createDataFrame([Row(k=5, v="U", qty=999)])
-    rep = merge_into(spark, path, source, ["k"], cow=True)
+    rep = merge_into(spark, path, source, ["k"])
     assert rep["files_total"] == 4
     assert rep["files_rewritten"] == 1
     assert rep["files_kept"] == 3
@@ -136,7 +136,7 @@ def test_merge_cow_prunes_files_and_keeps_bytes(spark, tmp_path):
     dup = spark.createDataFrame(
         [Row(k=7, v="old", qty=1, seq=1), Row(k=7, v="new", qty=2, seq=2)]
     )
-    merge_into(spark, path, dup, ["k"], order_col="seq", cow=True)
+    merge_into(spark, path, dup, ["k"], order_col="seq")
     assert _contents(spark, path)[7] == ("new", 2)
 
 
@@ -155,3 +155,16 @@ def test_merge_delete_only_shape(spark, tmp_path):
     )
     got = _contents(spark, path)
     assert set(got) == set(range(10)) - {3, 4}
+
+    # a key outside every file's range rewrites nothing and adds no file
+    files = _part_files(path)
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame([Row(k=1000)]),
+        ["k"],
+        when_matched_delete=F.lit(True),
+        insert=False,
+    )
+    assert _part_files(path) == files
+    assert _contents(spark, path) == got

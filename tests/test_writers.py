@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import Row
@@ -416,6 +417,12 @@ def test_upsert_cow_appends_without_rewrite_when_no_overlap(spark, tmp_path):
         assert after[b] == before[b]
     assert spark.read.parquet(path).count() == 405
 
+    # an empty batch rewrites nothing and adds no (schema-only) file
+    empty = spark.createDataFrame([], "k long, v string, ts long")
+    rep = upsert_parquet_cow(spark, empty, path, ["k"])
+    assert rep["files_rewritten"] == 0
+    assert _file_bytes(path) == after
+
 
 def test_upsert_cow_do_nothing_and_partial_update(spark, tmp_path):
     from prisma_migrator_spark.writers.upsert import upsert_parquet_cow
@@ -436,6 +443,76 @@ def test_upsert_cow_do_nothing_and_partial_update(spark, tmp_path):
     )
     row = {r["k"]: r for r in spark.read.parquet(path).collect()}[4]
     assert row["v"] == "P" and row["ts"] == 10
+
+
+def test_every_writer_agrees_on_one_batch(spark, tmp_path):
+    """The four keyed writers turn one table and one batch into the
+    same multiset for each ON CONFLICT shape, whatever the batch's row
+    order: updates, inserts, and in-batch duplicate keys whose rows
+    differ (the smallest row wins when no ``order_col`` is given)."""
+    from prisma_migrator_spark.writers.merge import merge_into
+    from prisma_migrator_spark.writers.upsert import (
+        upsert_parquet_cow,
+        upsert_partitioned,
+    )
+
+    base = [{"k": k, "v": f"v{k}", "q": k, "p": k % 3} for k in range(40)]
+    rows = [
+        {"k": 3, "v": "y", "q": 1, "p": 0},  # update, duplicated
+        {"k": 3, "v": "x", "q": 2, "p": 0},
+        {"k": 17, "v": "u", "q": 5, "p": 2},  # plain update
+        {"k": 100, "v": "b", "q": 7, "p": 1},  # insert, duplicated
+        {"k": 100, "v": "a", "q": 8, "p": 1},
+        {"k": 101, "v": "n", "q": 9, "p": 2},  # plain insert
+    ]
+    winners = {3: ("x", 2, 0), 17: ("u", 5, 2), 100: ("a", 8, 1), 101: ("n", 9, 2)}
+    old = {r["k"]: (r["v"], r["q"], r["p"]) for r in base}
+    expected = {
+        "all": {**old, **winners},
+        "subset": {
+            **{k: winners[k] for k in (100, 101)},
+            **old,
+            3: ("x", 3, 0),
+            17: ("u", 17, 2),
+        },
+        "nothing": {**{k: winners[k] for k in (100, 101)}, **old},
+    }
+    shapes = {
+        # shape: (update_cols for the upserts, merge_into clauses)
+        "all": (None, {}),
+        "subset": (["v"], {"update_set": {"v": F.col("s.v")}}),
+        "nothing": ([], {"when_matched_update": F.lit(False)}),
+    }
+    writers = {
+        "upsert_parquet": lambda b, path, cols, _: upsert_parquet(
+            spark, b, path, ["k"], update_cols=cols
+        ),
+        "upsert_parquet_cow": lambda b, path, cols, _: upsert_parquet_cow(
+            spark, b, path, ["k"], update_cols=cols
+        ),
+        "upsert_partitioned": lambda b, path, cols, _: upsert_partitioned(
+            spark, b, path, ["k"], "p", update_cols=cols
+        ),
+        "merge_into": lambda b, path, _, clauses: merge_into(
+            spark, path, b, ["k"], **clauses
+        ),
+    }
+    table = _df(spark, base).repartitionByRange(4, "k")
+    table.write.parquet(str(tmp_path / "plain"))
+    table.write.partitionBy("p").parquet(str(tmp_path / "partitioned"))
+    for order, batch_rows in (("given", rows), ("reversed", rows[::-1])):
+        batch = _df(spark, batch_rows)
+        for shape, (cols, clauses) in shapes.items():
+            for name, write in writers.items():
+                path = str(tmp_path / f"{name}-{shape}-{order}.parquet")
+                layout = "partitioned" if name == "upsert_partitioned" else "plain"
+                shutil.copytree(str(tmp_path / layout), path)
+                write(batch, path, cols, clauses)
+                got = spark.read.parquet(path).select("k", "v", "q", "p").collect()
+                assert len(got) == len(expected[shape]), (name, shape, order)
+                assert {r["k"]: (r["v"], r["q"], r["p"]) for r in got} == expected[
+                    shape
+                ], (name, shape, order)
 
 
 def test_delete_keys_cow_rewrites_only_holding_files(spark, tmp_path):
