@@ -2,9 +2,20 @@
 
 Pattern for image/audio/video at 100 TB: the payload is an opaque
 ``binary`` column (or a reference to object storage), metadata is a
-typed struct, and decode/feature-extraction runs as Arrow-batched
-Pandas UDFs via ``mapInPandas`` — Python touches each batch once,
-everything else stays columnar.
+typed struct, and decode/feature-extraction runs Arrow-batched via
+``mapInPandas`` — Python touches each batch once, everything else
+stays columnar.
+
+Every per-row stage — the decoders (``parse_*_metadata``,
+``resize_*``, :func:`extract_features`), the fingerprinters
+(:func:`image_phash`, :func:`audio_fingerprint`, :func:`video_phash`)
+and the synthesizers (``attach_*_payload``) — runs through one helper,
+:func:`_per_row`. Its fault-isolation rule is the module's only one: a
+row whose function raises gets NULL fields, never a task failure; the
+decoders keep that NULL row, the fingerprinters drop it (a corrupt
+payload can't be near-anything). Each stage outputs its ``id_col``
+unchanged. :func:`sample_frames` is the one fan-out stage (zero or
+more rows per payload) and keeps its own ``mapInPandas``.
 
 Five modalities run FULLY REAL bytes end-to-end, stdlib-only:
 WAV/RIFF audio (synthesis + chunk-walk parse + RMS), 24-bit BMP
@@ -24,12 +35,58 @@ per-format decoders; there is no ``fake=True`` stand-in left.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FEATURE_SCHEMA = "doc_id bigint, n_bytes int, features array<double>"
+
+def _per_row(
+    df: DataFrame,
+    fn: Callable,
+    cols: list[str],
+    schema: str,
+    keep: list[str],
+) -> DataFrame:
+    """Run ``fn(*row)`` over the ``cols`` of each row, Arrow-batched in
+    one ``mapInPandas``. Output: the ``keep`` columns as they came in
+    (the stage's id column first), then one column per field of the
+    DDL ``schema``. ``fn`` returns a tuple of field values, or a bare
+    value when ``schema`` has one field.
+
+    Fault isolation: a row where ``fn`` raises (or returns None) gets
+    NULL in every field — one bad blob out of a billion must not fail
+    the stage.
+
+    ``mapInPandas`` rather than a pandas UDF: Spark pushes a filter on
+    a UDF's result below the projection and then evaluates the UDF
+    twice, once for the filter and once for the column; the opaque
+    ``MapInPandas`` node runs ``fn`` once per row whatever sits above."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    fields = StructType.fromDDL(schema)
+    names, nulls = fields.names, (None,) * len(fields.names)
+    src = df.select(*dict.fromkeys([*keep, *cols]))
+
+    def call(row: tuple) -> tuple:
+        try:
+            out = fn(*row)
+        except Exception:
+            return nulls
+        if out is None:
+            return nulls
+        return (out,) if len(names) == 1 else out
+
+    def run(batches):
+        for pdf in batches:
+            rows = [call(r) for r in zip(*(pdf[c].tolist() for c in cols))]
+            new = pd.DataFrame(rows, columns=names, index=pdf.index, dtype=object)
+            yield pd.concat([pdf[keep], new], axis=1)
+
+    return src.mapInPandas(
+        run, StructType([src.schema[c] for c in keep] + fields.fields)
+    )
 
 
 def attach_binary_payload(
@@ -90,20 +147,14 @@ def resize_images(
     height: int = 64,
 ) -> DataFrame:
     """Arrow-batched REAL image resize over the binary payload
-    (``mapInPandas``): decode any supported format (BMP/PNG/JPEG),
+    (:func:`_per_row`): decode any supported format (BMP/PNG/JPEG),
     nearest-neighbor resample, re-emit as 24-bit BMP — the thumbnail
     stage of an image pipeline, format-normalizing on the way out.
     Undecodable payloads yield a NULL-payload row (fault isolation),
     never a task failure."""
-    import pandas as pd
 
-    schema = "doc_id bigint, payload binary, width int, height int"
-
-    def _resize_one(p: bytes) -> bytes | None:
-        try:
-            src_w, src_h, rows = image_pixels(bytes(p))
-        except Exception:
-            return None
+    def _resize_one(p: bytes) -> bytes:
+        src_w, src_h, rows = image_pixels(p)
         pad = (-(width * 3)) % 4
         out_rows = []
         for oy in range(height - 1, -1, -1):  # BMP is bottom-up
@@ -116,18 +167,10 @@ def resize_images(
             out_rows.append(bytes(line))
         return bmp_wrap(b"".join(out_rows), width, height)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"].map(_resize_one),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema)
+    resized = _per_row(df, _resize_one, ["payload"], "payload binary", ["doc_id"])
+    return resized.select(
+        "*", F.lit(width).alias("width"), F.lit(height).alias("height")
+    )
 
 
 def extract_features(
@@ -135,29 +178,20 @@ def extract_features(
     n_bins: int = 8,
 ) -> DataFrame:
     """Arrow-batched REAL feature extraction over the binary payload
-    (``mapInPandas``): the scale-path shape for any decode step.
+    (:func:`_per_row`): the scale-path shape for any decode step.
     Batches stream through Python; nothing driver-side. Non-image
-    payloads yield NULL features (fault isolation)."""
-    import pandas as pd
-
-    def _feat(p: bytes) -> list[float] | None:
-        try:
-            return decode_image(bytes(p), n_bins=n_bins)
-        except Exception:
-            return None
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "features": pdf["payload"].map(_feat),
-                }
-            )
-            yield out
-
-    return df.select("doc_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    payloads yield NULL features (fault isolation) and keep their
+    ``n_bytes``."""
+    sized = df.select(
+        "doc_id", "payload", F.octet_length("payload").alias("n_bytes")
+    )
+    return _per_row(
+        sized,
+        lambda p: decode_image(p, n_bins=n_bins),
+        ["payload"],
+        "features array<double>",
+        ["doc_id", "n_bytes"],
+    )
 
 
 # --- WAV/RIFF audio: a FULLY REAL modality (stdlib-only) --------------
@@ -202,28 +236,17 @@ def attach_wav_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Audio variant of `attach_binary_payload`: a real WAV per row
-    (Arrow-batched Pandas UDF — byte synthesis is Python-side work,
-    exactly where a real pipeline's download/transcode step sits)."""
-    import pandas as pd
-
-    # modern type-hinted UDF form via functions/arrow.py — the
-    # deprecated PandasUDFType enum is gone repo-wide (ADVICE r7)
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_wav(ids, texts):
-        return pd.Series(
-            [synthesize_wav(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    make_wav = scalar_pandas_udf("binary", _make_wav)
-
-    return df.select(
-        id_col, make_wav(F.col(id_col), F.col(text_col)).alias("payload")
+    (Arrow-batched through :func:`_per_row` — byte synthesis is
+    Python-side work, exactly where a real pipeline's
+    download/transcode step sits)."""
+    return _per_row(
+        df, lambda i, t: synthesize_wav(i, t or ""), [id_col, text_col],
+        "payload binary", [id_col],
     )
 
 
 WAV_META_SCHEMA = (
-    "doc_id bigint, sample_rate int, n_channels int, bits int, "
+    "sample_rate int, n_channels int, bits int, "
     "n_samples int, duration_ms double, rms double"
 )
 
@@ -278,31 +301,7 @@ def parse_wav_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataF
         rms = math.sqrt(sum(s * s for s in samples) / max(len(samples), 1))
         return rate, n_ch, bits, n, round(1000.0 * n / rate, 6), round(rms, 6)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 6)))
-            cols = list(zip(*rows)) if rows else [[]] * 7
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "sample_rate": pd.array(cols[1], dtype="Int32"),
-                    "n_channels": pd.array(cols[2], dtype="Int32"),
-                    "bits": pd.array(cols[3], dtype="Int32"),
-                    "n_samples": pd.array(cols[4], dtype="Int32"),
-                    "duration_ms": pd.array(cols[5], dtype="Float64"),
-                    "rms": pd.array(cols[6], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, WAV_META_SCHEMA)
+    return _per_row(with_payload, parse_one, ["payload"], WAV_META_SCHEMA, [id_col])
 
 
 # --- BMP: the REAL image modality (stdlib-only, like WAV for audio) ---
@@ -364,27 +363,29 @@ def attach_bmp_payload(
     width: int = 16, height: int = 16,
 ) -> DataFrame:
     """Image variant of ``attach_wav_payload``: a real BMP per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_bmp(ids, texts):
-        return pd.Series(
-            [synthesize_bmp(int(i), t or "", width, height)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_bmp = scalar_pandas_udf("binary", _make_bmp)
-
-    return df.select(
-        id_col, make_bmp(F.col(id_col), F.col(text_col)).alias("payload")
+    return _per_row(
+        df, lambda i, t: synthesize_bmp(i, t or "", width, height),
+        [id_col, text_col], "payload binary", [id_col],
     )
 
 
 BMP_META_SCHEMA = (
-    "doc_id bigint, width int, height int, bpp int, "
+    "width int, height int, bpp int, "
     "mean_r double, mean_g double, mean_b double, luma double"
 )
+
+
+def _image_meta(width: int, height: int, bpp: int, sr: int, sg: int, sb: int):
+    """One ``BMP_META_SCHEMA`` row from per-channel pixel sums: the
+    means and their BT.601 luma, rounded to 6 places — the tail every
+    image parser shares."""
+    n = width * height
+    mr, mg, mb = sr / n, sg / n, sb / n
+    luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
+    return (
+        width, height, bpp,
+        round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
+    )
 
 
 def parse_bmp_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -409,7 +410,8 @@ def parse_bmp_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataF
         planes, bpp, compression = struct.unpack("<HHI", b[26:34])
         if hdr_size < 40 or planes != 1 or bpp != 24 or compression != 0:
             return None
-        top_down = height < 0
+        # means are row-order independent: a top-down BMP (negative
+        # height) needs no flip
         height = abs(height)
         if width <= 0 or height <= 0:
             return None
@@ -423,42 +425,9 @@ def parse_bmp_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataF
             sb += sum(row[0::3])
             sg += sum(row[1::3])
             sr += sum(row[2::3])
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        # means are row-order independent, so top_down needs no flip
-        _ = top_down
-        return (
-            width, height, bpp,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
+        return _image_meta(width, height, bpp, sr, sg, sb)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    return _per_row(with_payload, parse_one, ["payload"], BMP_META_SCHEMA, [id_col])
 
 
 def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
@@ -499,21 +468,12 @@ def resize_bmp_payloads(
 ) -> DataFrame:
     """Distributed real-image resize: every payload decoded, resampled,
     re-encoded inside Arrow batches — the thumbnail stage of an image
-    training pipeline, running genuine bytes end-to-end."""
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    rb = resize_bmp(bytes(payload), out_w, out_h)
-                except Exception:
-                    rb = None
-                out.append({"doc_id": int(i), "payload": rb})
-            yield pd.DataFrame(out)
-
-    return with_payload.mapInPandas(run, f"{id_col} bigint, payload binary")
+    training pipeline, running genuine bytes end-to-end. A row whose
+    resize raises yields a NULL payload."""
+    return _per_row(
+        with_payload, lambda p: resize_bmp(p, out_w, out_h), ["payload"],
+        "payload binary", [id_col],
+    )
 
 
 def bmp_pixels(b: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
@@ -611,20 +571,9 @@ def attach_png_payload(
     width: int = 16, height: int = 16,
 ) -> DataFrame:
     """PNG variant of ``attach_bmp_payload``: a real PNG per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_png(ids, texts):
-        return pd.Series(
-            [synthesize_png(int(i), t or "", width, height)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_png = scalar_pandas_udf("binary", _make_png)
-
-    return df.select(
-        id_col, make_png(F.col(id_col), F.col(text_col)).alias("payload")
+    return _per_row(
+        df, lambda i, t: synthesize_png(i, t or "", width, height),
+        [id_col, text_col], "payload binary", [id_col],
     )
 
 
@@ -733,49 +682,15 @@ def parse_png_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataF
     NULL-metadata rows, never task failures."""
 
     def parse_one(b: bytes):
-        try:
-            width, height, channels, lines = _png_defiltered(b)
-        except Exception:
-            return None
+        width, height, channels, lines = _png_defiltered(b)
         sr = sg = sb = 0
         for line in lines:
             sr += sum(line[0::channels])
             sg += sum(line[1::channels])
             sb += sum(line[2::channels])
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        return (
-            width, height, 8 * channels,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
+        return _image_meta(width, height, 8 * channels, sr, sg, sb)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    return _per_row(with_payload, parse_one, ["payload"], BMP_META_SCHEMA, [id_col])
 
 
 # --- JPEG: third REAL image format (baseline DCT codec, stdlib) -------
@@ -814,20 +729,9 @@ def attach_jpeg_payload(
 ) -> DataFrame:
     """JPEG variant of ``attach_bmp_payload``: a real baseline JPEG
     per row, encoded inside Arrow batches."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_jpeg(ids, texts):
-        return pd.Series(
-            [synthesize_jpeg(int(i), t or "", width, height, quality)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_jpeg = scalar_pandas_udf("binary", _make_jpeg)
-
-    return df.select(
-        id_col, make_jpeg(F.col(id_col), F.col(text_col)).alias("payload")
+    return _per_row(
+        df, lambda i, t: synthesize_jpeg(i, t or "", width, height, quality),
+        [id_col, text_col], "payload binary", [id_col],
     )
 
 
@@ -849,40 +753,9 @@ def parse_jpeg_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> Data
                 sr += r
                 sg += g
                 sb += bl
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        return (
-            width, height, 24,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
+        return _image_meta(width, height, 24, sr, sg, sb)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    return _per_row(with_payload, parse_one, ["payload"], BMP_META_SCHEMA, [id_col])
 
 
 # --- AVI: the REAL video modality (stdlib-only, multi-frame RIFF) -----
@@ -977,20 +850,9 @@ def attach_avi_payload(
     width: int = 16, height: int = 16, n_frames: int = 8,
 ) -> DataFrame:
     """Video variant of ``attach_wav_payload``: a real AVI per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_avi(ids, texts):
-        return pd.Series(
-            [synthesize_avi(int(i), t or "", width, height, n_frames)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_avi = scalar_pandas_udf("binary", _make_avi)
-
-    return df.select(
-        id_col, make_avi(F.col(id_col), F.col(text_col)).alias("payload")
+    return _per_row(
+        df, lambda i, t: synthesize_avi(i, t or "", width, height, n_frames),
+        [id_col, text_col], "payload binary", [id_col],
     )
 
 
@@ -1088,8 +950,7 @@ def parse_avi(b: bytes):
 
 
 FRAME_SCHEMA = (
-    "doc_id bigint, frame_idx int, n_frames int, width int, height int, "
-    "frame binary"
+    "frame_idx int, n_frames int, width int, height int, frame binary"
 )
 
 
@@ -1135,7 +996,7 @@ def sample_frames(
             cols = list(zip(*rows)) if rows else [[]] * 6
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
+                    id_col: pd.array(cols[0], dtype="int64"),
                     "frame_idx": pd.array(cols[1], dtype="int32"),
                     "n_frames": pd.array(cols[2], dtype="int32"),
                     "width": pd.array(cols[3], dtype="int32"),
@@ -1144,7 +1005,9 @@ def sample_frames(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, FRAME_SCHEMA)
+    return df.select(id_col, "payload").mapInPandas(
+        run, f"{id_col} bigint, {FRAME_SCHEMA}"
+    )
 
 
 # --- perceptual hashing (image near-dup dedup) ------------------------
@@ -1224,28 +1087,15 @@ def image_phash(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Arrow-batched pHash stage: ``(id, payload)`` -> ``(id, phash)``
-    via ``mapInPandas`` — decode + DCT are per-row Python compute
+    via :func:`_per_row` — decode + DCT are per-row Python compute
     (the justified UDF shape for binary media; no built-in expresses
     a codec), batched through Arrow, embarrassingly parallel, zero
-    shuffle. Undecodable payloads are DROPPED (fault isolation: a
-    corrupt image can't be near-anything), never task failures."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, phash string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    hashes.append(phash64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "phash": hashes})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    shuffle. Undecodable payloads are DROPPED (their NULL hash is
+    filtered out: a corrupt image can't be near-anything), never task
+    failures."""
+    return _per_row(
+        df, phash64, [payload_col], "phash string", [id_col]
+    ).where(F.col("phash").isNotNull())
 
 
 def pattern_rows(
@@ -1316,14 +1166,10 @@ def attach_image_variant_payload(
     - variant 2: JPEG re-encode at ``jpeg_quality`` (lossy)
     - variant 3: nearest-neighbor resize to ``resize_to`` px (BMP)
 
-    Synthesis runs inside Arrow batches (``mapInPandas``), like every
+    Synthesis runs inside Arrow batches (:func:`_per_row`), like every
     attach stage here; group membership is ``id``-derived so the
     corpus is deterministic at any scale factor."""
-    import pandas as pd
-
     from prisma_migrator_spark.llm.jpeg import encode_jpeg
-
-    schema = f"{id_col} bigint, payload binary"
 
     def _make(i: int) -> bytes:
         rows = pattern_rows(i // group_size, width, height)
@@ -1337,15 +1183,7 @@ def attach_image_variant_payload(
             return resize_bmp(bmp, resize_to, resize_to)
         return bmp
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _per_row(df, _make, [id_col], "payload binary", [id_col])
 
 
 # --- audio fingerprinting (near-dup dedup, r7) -------------------------
@@ -1456,23 +1294,9 @@ def audio_fingerprint(
     """Arrow-batched fingerprint stage: ``(id, payload)`` ->
     ``(id, afp)``; undecodable payloads are DROPPED (fault
     isolation), mirroring `image_phash`."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, afp string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fps = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    fps.append(afp64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "afp": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _per_row(
+        df, afp64, [payload_col], "afp string", [id_col]
+    ).where(F.col("afp").isNotNull())
 
 
 def synthesize_tone_mosaic(
@@ -1538,10 +1362,6 @@ def attach_audio_variant_payload(
     - variant 3: resynthesized at 16 kHz (same Hz content)
     - variant 4: silence-padded both ends
     """
-    import pandas as pd
-
-    schema = f"{id_col} bigint, payload binary"
-
     def _make(i: int) -> bytes:
         g, v = i // group_size, i % group_size
         if v == 1:
@@ -1554,15 +1374,7 @@ def attach_audio_variant_payload(
             return synthesize_tone_mosaic(g, pad=400)
         return synthesize_tone_mosaic(g)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _per_row(df, _make, [id_col], "payload binary", [id_col])
 
 
 # --- video fingerprinting (near-dup dedup, r7) --------------------------
@@ -1630,23 +1442,9 @@ def video_phash(
     ``(id, vhash)``; undecodable payloads are DROPPED (fault
     isolation), mirroring :func:`image_phash` /
     :func:`audio_fingerprint`."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, vhash string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fps = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    fps.append(vhash64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "vhash": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _per_row(
+        df, vhash64, [payload_col], "vhash string", [id_col]
+    ).where(F.col("vhash").isNotNull())
 
 
 def synthesize_mosaic_avi(
@@ -1697,10 +1495,6 @@ def attach_video_variant_payload(
     - variant 3: spatially re-rendered at 48px
     - variant 4: brightness re-leveled to 70%
     """
-    import pandas as pd
-
-    schema = f"{id_col} bigint, payload binary"
-
     def _make(i: int) -> bytes:
         g, v = i // group_size, i % group_size
         if v == 1:
@@ -1713,12 +1507,4 @@ def attach_video_variant_payload(
             return synthesize_mosaic_avi(g, scale=0.7)
         return synthesize_mosaic_avi(g)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _per_row(df, _make, [id_col], "payload binary", [id_col])

@@ -38,7 +38,6 @@ def salted_distinct_pair_agg(
     group: Sequence[str],
     elements: Sequence[Column | str],
     out: str = "pairs",
-    n_salt: int = 16,
 ) -> DataFrame:
     """Skew-resistant form of :func:`distinct_pair_agg` for hot keys.
 
@@ -59,8 +58,7 @@ def salted_distinct_pair_agg(
        final sort. Building one array per key is inherently
        single-reducer; what scales is doing ALL dedup work before it.
 
-    ``n_salt`` is kept for API stability; the element-keyed shuffle
-    makes an explicit salt count unnecessary.
+    The element-keyed shuffle makes an explicit salt count unnecessary.
 
     Results are identical to the unsalted form; use when a key's group
     size is ≫ the average (e.g. one app in every category).

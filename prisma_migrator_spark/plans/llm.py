@@ -3931,11 +3931,8 @@ def video_frame_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("frame_idx"),
         F.col("frame").alias("payload"),
     )
-    stats = parse_bmp_metadata(
-        keyed.select(F.col("frame_key").alias("doc_id"), "payload")
-    ).select(
-        F.col("doc_id").alias("frame_key"),
-        "mean_r", "mean_g", "mean_b", "luma",
+    stats = parse_bmp_metadata(keyed, id_col="frame_key").select(
+        "frame_key", "mean_r", "mean_g", "mean_b", "luma"
     )
     return (
         keyed.select("frame_key", "doc_id", "frame_idx")

@@ -1054,6 +1054,27 @@ def test_repeated_spans_constructed(spark):
     for d in (0, 1):
         assert out[d]["dup_frac"] is not None and out[d]["dup_frac"] > 0
 
+    # boilerplate skew: 90 % of 20k docs share one 16-token block. The
+    # duplicated-hash side stays small, so every join broadcasts (no
+    # reducer owns the hot window hash) and exactly the carriers flag.
+    def tail(prefix: str, n: int):
+        return F.concat_ws(
+            " ", *[F.concat(F.lit(f"{prefix}{j}x"), "doc_id") for j in range(n)]
+        )
+
+    block = " ".join(f"bp{i}" for i in range(16))
+    boiler = spark.range(20_000).select(F.col("id").alias("doc_id")).select(
+        "doc_id",
+        F.when(F.col("doc_id") % 10 < 9, F.concat(F.lit(block + " "), tail("u", 8)))
+        .otherwise(tail("v", 24))
+        .alias("text"),
+    )
+    stats = repeated_span_stats(boiler, k=8, stride=4)
+    plan = stats._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert stats.where(F.col("n_dup_windows") > 0).count() == 18_000
+
 
 def test_strip_repeated_spans_constructed(spark):
     """The shared block disappears from BOTH carriers while their
@@ -1163,14 +1184,20 @@ def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_path):
         chunk.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         ).write.mode("append").parquet(src)
-        run_to_parquet(
+        prog = run_to_parquet(
             streaming_funnel(read_events_stream(spark, src, watermark="1 second")),
             out,
             ckpt,
         )
+        return prog["stateOperators"][0]["numRowsTotal"]
 
-    drain(ev.where(F.col("ts") < mid))
-    drain(ev.where(F.col("ts") >= mid))
+    def viewers(df):
+        return df.where(F.col("event_type") == "view").select("user_id").distinct().count()
+
+    first = ev.where(F.col("ts") < mid)
+    state_rows = [drain(first), drain(ev.where(F.col("ts") >= mid))]
+    # state is one row per user with a view, however much input arrives
+    assert state_rows == [viewers(first), viewers(ev)]
 
     emitted = spark.read.parquet(out)
     # latest emission per user = the one with the max stage (stages
@@ -2126,6 +2153,19 @@ def test_bmp_roundtrip_against_pixel_reference(spark):
         r2 = meta2[i]
         assert (r2.width, r2.height, r2.bpp) == (8, 8, 24)
         assert abs(r2.mean_r - got[i].mean_r) < 20  # NN-resample drift
+    # a caller's id column comes out of parse and resize under its name
+    keyed = attach_bmp_payload(docs).withColumnRenamed("doc_id", "k")
+    k_meta = parse_bmp_metadata(keyed, id_col="k")
+    assert k_meta.columns[0] == "k"
+    assert {r.k: r.luma for r in k_meta.collect()} == {
+        i: got[i].luma for i in range(12)
+    }
+    k_resized = resize_bmp_payloads(keyed, 8, 8, id_col="k")
+    assert k_resized.columns == ["k", "payload"]
+    k_meta2 = parse_bmp_metadata(k_resized, id_col="k").collect()
+    assert {r.k: (r.width, r.height) for r in k_meta2} == dict.fromkeys(
+        range(12), (8, 8)
+    )
     # odd width exercises the 4-byte row padding path
     odd = spark.createDataFrame([Row(doc_id=7, text="odd")])
     b = synthesize_bmp(7, "odd", width=5, height=3)
@@ -2733,9 +2773,12 @@ def test_streaming_topk_matches_batch(spark, sf_dir, tmp_path):
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     schema = "event_id bigint, event_type string, value double"
 
+    state_rows = []
+
     def drain():
         stream = spark.readStream.schema(schema).parquet(src)
-        run_to_parquet(streaming_topk_per_key(stream, k=3), out, ckpt)
+        prog = run_to_parquet(streaming_topk_per_key(stream, k=3), out, ckpt)
+        state_rows.append(prog["stateOperators"][0]["numRowsTotal"])
         sink = spark.read.parquet(out)
         latest = sink.join(
             sink.groupBy("event_type").agg(F.max("version").alias("version")),
@@ -2761,6 +2804,9 @@ def test_streaming_topk_matches_batch(spark, sf_dir, tmp_path):
     stage2.write.parquet(src, mode="append")
     snap2, sink = drain()
     assert snap2 == batch_topk(events)
+    # state is one leaderboard row per key, flat while input grows
+    n_keys = events.select("event_type").distinct().count()
+    assert state_rows == [n_keys, n_keys]
 
     pdf = sink.toPandas()
     for et, grp in pdf.groupby("event_type"):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import itertools
+from contextlib import contextmanager
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -12,16 +15,101 @@ from prisma_migrator_spark.operators.aggregates import (
 )
 from prisma_migrator_spark.operators.dedup import latest_per_key
 
+#: Broadcast off and AQE's skew thresholds scaled down to a 200k-row
+#: slice, so a local sort-merge join meets the skew a cluster would.
+_SKEW_SMJ = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32k",
+}
+_NO_COALESCE = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+_JOB_GROUPS = itertools.count()
+
+
+@contextmanager
+def _session_conf(spark, conf: dict[str, str]):
+    """Set session confs for the block and restore them afterwards."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _hub_skewed(spark):
+    """200k rows (``id``), 90 % of them on join key ``jk`` = 0 and the
+    rest over 100 other keys."""
+    hot = F.col("id") % 10 < 9
+    return spark.range(200_000).select(
+        F.when(hot, F.lit(0)).otherwise(F.col("id") % 1000).alias("jk"), "id"
+    )
+
+
+def _noop_run(spark, df) -> tuple[list[list[int]], str]:
+    """Write ``df`` to the noop sink under a fresh job group, then read
+    from the status store (the one perfbench/spans.py reads): the
+    shuffle records each task read, for every stage that read any, and
+    the final physical plan of the write."""
+    sc = spark.sparkContext
+    group = f"skew-pin-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    jobs = [
+        j for j in as_java(store.jobsList(None))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    ]
+    stages = []
+    for sid in sorted({s for j in jobs for s in as_java(j.stageIds())}):
+        read = [
+            t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+            for t in as_java(store.taskList(sid, 0, 1 << 20))
+            if t.taskMetrics().isDefined()
+        ]
+        if sum(read):
+            stages.append(read)
+    job_ids = {j.jobId() for j in jobs}
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    plan = "\n".join(
+        ex.physicalPlanDescription()
+        for ex in as_java(sql_store.executionsList())
+        if job_ids & set(as_java(ex.jobs()).keySet())
+    )
+    return stages, plan
+
 
 def test_salted_distinct_agg_matches_unsalted(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     plain = distinct_pair_agg(li, ["l_suppkey"], ["l_returnflag", "l_linestatus"])
     salted = salted_distinct_pair_agg(
-        li, ["l_suppkey"], ["l_returnflag", "l_linestatus"], n_salt=8
+        li, ["l_suppkey"], ["l_returnflag", "l_linestatus"]
     )
     a = {r.l_suppkey: r.pairs for r in plain.collect()}
     b = {r.l_suppkey: r.pairs for r in salted.collect()}
     assert a == b
+    # the hot key spreads: with 90 % of rows on one key, the
+    # element-keyed dedup stage (the one reading the most records)
+    # runs on every reducer and none reads more than ~a quarter
+    elems = _hub_skewed(spark).select("jk", (F.col("id") % 50_000).alias("e"))
+    with _session_conf(spark, _NO_COALESCE):
+        stages, _ = _noop_run(spark, salted_distinct_pair_agg(elems, ["jk"], ["e"]))
+    dedup = max(stages, key=sum)
+    assert len(dedup) == 4
+    assert max(dedup) < 0.35 * sum(dedup), dedup
 
 
 def test_latest_per_key_map_fallback(spark):
@@ -295,6 +383,40 @@ def test_salted_join_matches_plain(spark, sf_dir):
         )
     )
     assert got_l == plain_l
+
+    # skew: a same-key aggregate after the join needs the join's hash
+    # partitioning, so AQE leaves the hot partition whole and one task
+    # reads every hot row; salting spreads them over the reducers
+    probe = _hub_skewed(spark)
+    build = spark.range(1000).select(F.col("id").alias("jk"), F.lit(2.0).alias("w"))
+
+    def summed(joined):
+        return joined.groupBy("jk").agg(F.sum(F.col("id") * F.col("w")).alias("s"))
+
+    with _session_conf(spark, {**_SKEW_SMJ, **_NO_COALESCE}):
+        plain_stages, plain_plan = _noop_run(spark, summed(probe.join(build, "jk")))
+        salted_stages, _ = _noop_run(
+            spark, summed(salted_join(probe, build, ["jk"], n_salt=32))
+        )
+    assert "skew=true" not in plain_plan
+    assert max(max(plain_stages, key=sum)) >= 180_000  # all 180k hot rows
+    salted_hot = max(salted_stages, key=sum)
+    assert max(salted_hot) < 0.4 * sum(salted_hot), salted_hot
+
+
+def test_aqe_splits_skewed_sort_merge_join(spark):
+    """With nothing downstream needing the join's hash partitioning,
+    AQE splits the hot partition of a sort-merge join (90 % of probe
+    rows on one key): the join stage runs more tasks than there are
+    shuffle partitions."""
+    probe = _hub_skewed(spark)
+    build = spark.range(1000).select(F.col("id").alias("jk"), F.lit(2.0).alias("w"))
+    joined = probe.join(build, "jk").select((F.col("id") * F.col("w")).alias("s"))
+    with _session_conf(spark, _SKEW_SMJ):
+        stages, plan = _noop_run(spark, joined)
+    assert "SortMergeJoin(skew=true)" in plan
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(max(stages, key=sum)) > partitions
 
 
 def test_bucketed_interval_join_randomized_cross_check(spark):

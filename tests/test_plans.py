@@ -259,22 +259,6 @@ def test_order_price_quartiles_has_no_window(spark):
     assert "Exchange SinglePartition" in plan  # the 1-row cuts agg only
 
 
-def test_driver_window_spans_all_families():
-    """The round driver records correctness for only the FIRST 50
-    registered queries. Pin that the explicit window is exactly 50,
-    every entry carries a DuckDB oracle (hash-green capable, not
-    rows-only), and queries() actually leads with it — so no operator
-    family can silently fall out of the driver's correctness report
-    when a query is added or registration order drifts."""
-    import prisma_migrator_spark.plans as plans
-
-    window = plans.DRIVER_WINDOW
-    assert len(window) == 50
-    assert len(set(window)) == 50
-    assert all(n in plans.ORACLES for n in window)
-    assert list(plans.QUERIES)[:50] == window
-
-
 def _unpartitioned_window_specs(plan: str) -> list[str]:
     """windowspecdefinition whose FIRST argument is an ordering
     expression (`x ASC/DESC ...`) has an empty partition spec — the
