@@ -69,7 +69,10 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
 #: lazy HANDLE is pure metadata caching: no rows are materialized,
 #: every action still computes from the parquet files. Keyed by
 #: (session, session timezone, absolute path, content signature) so a
-#: new session or a rewritten file never serves a stale plan.
+#: new session or a rewritten file never serves a stale plan. A miss
+#: also calls ``spark.catalog.refreshByPath`` first: a frame cached over
+#: the old files (a query's pin) would otherwise still match the new
+#: handle's plan and serve the old rows. The refresh runs no job.
 _DF_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -143,6 +146,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if key is not None and key in _DF_CACHE:
         return _DF_CACHE[key]
 
+    spark.catalog.refreshByPath(path)
     ns_cols = _nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,41 +1,61 @@
-"""Arrow-batched struct UDF construction without the deprecated enum.
+"""The package's one per-row Python stage: :func:`_per_row`.
 
-``pandas_udf(fn, rt, PandasUDFType.SCALAR)`` is the legacy Spark-2.x
-form — it works on the pinned Spark but warns and is slated for
-removal (ADVICE r7). The modern form infers the eval type from type
-hints, and ``typing.get_type_hints`` evaluates those hints against the
-DEFINING module's globals — which is exactly why the call site
-(`llm/text.py`) could not use it with its function-local ``import
-pandas as pd``. This module imports pandas at module level so the
-hints on the wrapper below always resolve.
-
-The wrapper uses the ITERATOR form (`SCALAR_ITER`): same Arrow batch
-transfer as plain SCALAR, plus per-task setup (codec tables, zlib)
-amortizes across batches instead of re-running per batch.
+Every Python function applied row by row — the multimodal decoders,
+fingerprinters and synthesizers (``llm/multimodal.py``) and the zlib
+ratio (``llm/text.zlib_ratio_df``) — runs Arrow-batched through one
+``mapInPandas``, so Python touches each batch once and every stage
+shares one fault-isolation rule.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Tuple
+from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
-def struct_pandas_udf(
-    return_type: str,
-    fn: Callable[..., "pd.DataFrame"],
-):
-    """Modern pandas UDF over a STRUCT-returning per-batch function
-    ``fn(*series) -> pd.DataFrame`` whose columns are the struct
-    fields. Spark yields a bare Series when the UDF takes one column
-    and a tuple when it takes several — the wrapper normalizes both
-    shapes."""
+def _per_row(
+    df: DataFrame,
+    fn: Callable,
+    cols: list[str],
+    schema: str,
+    keep: list[str],
+) -> DataFrame:
+    """Run ``fn(*row)`` over the ``cols`` of each row, Arrow-batched in
+    one ``mapInPandas``. Output: the ``keep`` columns as they came in,
+    then one column per field of the DDL ``schema``. ``fn`` returns a tuple of field values, or a bare
+    value when ``schema`` has one field.
 
-    def _it(
-        batches: Iterator[Tuple[pd.Series, ...]]
-    ) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield fn(*b) if isinstance(b, tuple) else fn(b)
+    Fault isolation: a row where ``fn`` raises (or returns None) gets
+    NULL in every field — one bad blob out of a billion must not fail
+    the stage.
 
-    return pandas_udf(_it, return_type)
+    ``mapInPandas`` rather than a pandas UDF: Spark pushes a filter on
+    a UDF's result below the projection and then evaluates the UDF
+    twice, once for the filter and once for the column; the opaque
+    ``MapInPandas`` node runs ``fn`` once per row whatever sits above."""
+    import pandas as pd
+
+    fields = StructType.fromDDL(schema)
+    names, nulls = fields.names, (None,) * len(fields.names)
+    src = df.select(*dict.fromkeys([*keep, *cols]))
+
+    def call(row: tuple) -> tuple:
+        try:
+            out = fn(*row)
+        except Exception:
+            return nulls
+        if out is None:
+            return nulls
+        return (out,) if len(names) == 1 else out
+
+    def run(batches):
+        for pdf in batches:
+            rows = [call(r) for r in zip(*(pdf[c].tolist() for c in cols))]
+            new = pd.DataFrame(rows, columns=names, index=pdf.index, dtype=object)
+            yield pd.concat([pdf[keep], new], axis=1)
+
+    return src.mapInPandas(
+        run, StructType([src.schema[c] for c in keep] + fields.fields)
+    )

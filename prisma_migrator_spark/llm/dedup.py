@@ -21,6 +21,11 @@ Design for 100 TB:
 
 All hashes are md5-derived → deterministic across engines, runs, and
 partitionings (no JVM hash seeding).
+
+The Hamming-space joins (:func:`hamming_band_pairs`,
+:func:`incremental_hamming_pairs`) keep their signature frames in the
+session cache through ``operators/driver_state.pin``; the query
+registry releases them before it builds the next registered query.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from prisma_migrator_spark.operators.driver_state import bounded_collect
+from prisma_migrator_spark.operators.driver_state import bounded_collect, pin
 
 from prisma_migrator_spark.llm.text import content_fingerprint, normalized_text
 
@@ -560,26 +565,6 @@ def hamming_bits(a: Column, b: Column, n_bits: int) -> Column:
     return out
 
 
-#: Signature frames pinned by :func:`hamming_band_pairs`, released at
-#: the next call (same bounded-cache-residency discipline as
-#: ``plans/graph._SNAPSHOTS``).
-_SIG_CACHES: list[DataFrame] = []
-
-
-def release_signature_caches() -> int:
-    """Unpersist signature frames pinned by prior
-    :func:`hamming_band_pairs` calls; returns how many were freed.
-    Safe at any time — a released frame recomputes through its plan."""
-    n = len(_SIG_CACHES)
-    for df in _SIG_CACHES:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # session already stopped
-            pass
-    _SIG_CACHES.clear()
-    return n
-
-
 def hamming_band_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -636,26 +621,22 @@ def hamming_band_pairs(
     cap can only DROP FEWER pairs than before (recall is monotone
     better; uncapped output is set-identical to the direct join).
 
-    The signature frame is persisted: it feeds the rep collapse, the
-    membership map, and the expansion legs, and is signature-sized
-    (one short string per doc), not corpus-sized. Like the graph
-    edge snapshots (ADVICE r6 #1), the persist is NOT
-    session-lifetime: each call releases the previous call's
-    signature cache (bounded residency at one query's frame; a
-    released frame recomputes, never fails), and
-    :func:`release_signature_caches` frees the last one.
+    The signature frame and its rep collapse are pinned
+    (``operators/driver_state.pin``): they feed the membership map and
+    the expansion legs, and are signature-sized (one short string per
+    doc), not corpus-sized. Like the graph edge snapshots, the pins
+    are NOT session-lifetime: the query registry releases them before
+    it builds the next registered query (a released frame
+    recomputes, never fails).
     """
     from itertools import combinations
 
-    release_signature_caches()
-    sigs = sigs.persist()
-    _SIG_CACHES.append(sigs)
+    sigs = pin(sigs)
     n_bands = n_bits // band_bits
     if not 1 <= band_arity <= n_bands:
         raise ValueError(f"band_arity must be in [1, {n_bands}]")
 
-    reps = sigs.groupBy(sig_col).agg(F.min(id_col).alias("__rid")).persist()
-    _SIG_CACHES.append(reps)
+    reps = pin(sigs.groupBy(sig_col).agg(F.min(id_col).alias("__rid")))
 
     def band(b: int):
         return F.substring(sig_col, b * band_bits + 1, band_bits)
@@ -784,11 +765,11 @@ def incremental_hamming_pairs(
     off the decode. Bucket-cap counts are computed over ALL distinct
     signatures (identical statistics to the cold job, so capped
     output parity holds); that pass is a scan of the signature
-    table, never the media."""
+    table, never the media. The index ∪ delta signature frame and its
+    rep collapse are pinned, as in :func:`hamming_band_pairs`."""
     from itertools import combinations
 
-    release_signature_caches()
-    all_sigs = (
+    all_sigs = pin(
         existing_sigs.select(id_col, sig_col)
         .withColumn("__new", F.lit(False))
         .unionByName(
@@ -796,24 +777,19 @@ def incremental_hamming_pairs(
                 "__new", F.lit(True)
             )
         )
-        .persist()
     )
-    _SIG_CACHES.append(all_sigs)
     n_bands = n_bits // band_bits
     if not 1 <= band_arity <= n_bands:
         raise ValueError(f"band_arity must be in [1, {n_bands}]")
 
     # collapse-exact-first across index ∪ delta, tracking whether any
     # member of each signature group is new
-    reps = (
-        all_sigs.groupBy(sig_col)
-        .agg(
+    reps = pin(
+        all_sigs.groupBy(sig_col).agg(
             F.min(id_col).alias("__rid"),
             F.max(F.col("__new").cast("int")).alias("__touch"),
         )
-        .persist()
     )
-    _SIG_CACHES.append(reps)
 
     def band(b: int):
         return F.substring(sig_col, b * band_bits + 1, band_bits)

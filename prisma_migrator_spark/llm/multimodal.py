@@ -10,12 +10,12 @@ Every per-row stage — the decoders (``parse_*_metadata``,
 ``resize_*``, :func:`extract_features`), the fingerprinters
 (:func:`image_phash`, :func:`audio_fingerprint`, :func:`video_phash`)
 and the synthesizers (``attach_*_payload``) — runs through one helper,
-:func:`_per_row`. Its fault-isolation rule is the module's only one: a
-row whose function raises gets NULL fields, never a task failure; the
-decoders keep that NULL row, the fingerprinters drop it (a corrupt
-payload can't be near-anything). Each stage outputs its ``id_col``
-unchanged. :func:`sample_frames` is the one fan-out stage (zero or
-more rows per payload) and keeps its own ``mapInPandas``.
+``functions/arrow._per_row``. Its fault-isolation rule is the module's
+only one: a row whose function raises gets NULL fields, never a task
+failure; the decoders keep that NULL row, the fingerprinters drop it
+(a corrupt payload can't be near-anything). Each stage outputs its
+``id_col`` unchanged. :func:`sample_frames` is the one fan-out stage
+(zero or more rows per payload) and keeps its own ``mapInPandas``.
 
 Five modalities run FULLY REAL bytes end-to-end, stdlib-only:
 WAV/RIFF audio (synthesis + chunk-walk parse + RMS), 24-bit BMP
@@ -35,58 +35,10 @@ per-format decoders; there is no ``fake=True`` stand-in left.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _per_row(
-    df: DataFrame,
-    fn: Callable,
-    cols: list[str],
-    schema: str,
-    keep: list[str],
-) -> DataFrame:
-    """Run ``fn(*row)`` over the ``cols`` of each row, Arrow-batched in
-    one ``mapInPandas``. Output: the ``keep`` columns as they came in
-    (the stage's id column first), then one column per field of the
-    DDL ``schema``. ``fn`` returns a tuple of field values, or a bare
-    value when ``schema`` has one field.
-
-    Fault isolation: a row where ``fn`` raises (or returns None) gets
-    NULL in every field — one bad blob out of a billion must not fail
-    the stage.
-
-    ``mapInPandas`` rather than a pandas UDF: Spark pushes a filter on
-    a UDF's result below the projection and then evaluates the UDF
-    twice, once for the filter and once for the column; the opaque
-    ``MapInPandas`` node runs ``fn`` once per row whatever sits above."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(schema)
-    names, nulls = fields.names, (None,) * len(fields.names)
-    src = df.select(*dict.fromkeys([*keep, *cols]))
-
-    def call(row: tuple) -> tuple:
-        try:
-            out = fn(*row)
-        except Exception:
-            return nulls
-        if out is None:
-            return nulls
-        return (out,) if len(names) == 1 else out
-
-    def run(batches):
-        for pdf in batches:
-            rows = [call(r) for r in zip(*(pdf[c].tolist() for c in cols))]
-            new = pd.DataFrame(rows, columns=names, index=pdf.index, dtype=object)
-            yield pd.concat([pdf[keep], new], axis=1)
-
-    return src.mapInPandas(
-        run, StructType([src.schema[c] for c in keep] + fields.fields)
-    )
+from prisma_migrator_spark.functions.arrow import _per_row
 
 
 def attach_binary_payload(

@@ -427,35 +427,26 @@ def zlib_ratio_df(df: DataFrame, text_col: str = "text",
     is deterministic across runs and machines.
 
     This is the one text signal that genuinely needs Python (no JVM
-    deflate exposed as a SQL function), so it runs as an Arrow-batched
-    pandas UDF — each batch crosses the language boundary once; the
-    stage stays embarrassingly parallel, zero shuffle. Built through
-    the modern type-hinted iterator form (`functions/arrow.py`), not
-    the deprecated PandasUDFType enum (ADVICE r7)."""
-    import pandas as pd
+    deflate exposed as a SQL function), so it runs Arrow-batched through
+    ``functions/arrow._per_row`` — each batch crosses the language
+    boundary once; the stage stays embarrassingly parallel, zero
+    shuffle, and a filter on the ratio cannot make Spark compress a
+    row twice."""
+    import zlib
 
-    from prisma_migrator_spark.functions.arrow import struct_pandas_udf
+    from prisma_migrator_spark.functions.arrow import _per_row
 
-    def _ratio_batch(texts):
-        import zlib
+    def one(s):
+        if s is None:
+            return None
+        raw = s.encode("utf-8")
+        if not raw:
+            return (0, None)
+        return (len(raw), round(len(zlib.compress(raw, level)) / len(raw), 6))
 
-        def one(s):
-            if s is None:
-                return (None, None)
-            raw = s.encode("utf-8")
-            if not raw:
-                return (0, None)
-            return (len(raw),
-                    round(len(zlib.compress(raw, level)) / len(raw), 6))
-
-        vals = [one(s) for s in texts]
-        return pd.DataFrame(vals, columns=["n_bytes", "zlib_ratio"])
-
-    _ratio = struct_pandas_udf(
-        "struct<n_bytes: long, zlib_ratio: double>", _ratio_batch
+    return _per_row(
+        df, one, [text_col], "n_bytes long, zlib_ratio double", df.columns
     )
-    out = df.withColumn("__z", _ratio(F.col(text_col)))
-    return out.select(*df.columns, "__z.n_bytes", "__z.zlib_ratio").drop("__z")
 
 
 def hashed_doc_vector_arrays(

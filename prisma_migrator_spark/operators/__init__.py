@@ -1,4 +1,4 @@
-from prisma_migrator_spark.operators.dedup import exact_dedupe, latest_per_key  # noqa: F401
+from prisma_migrator_spark.operators.dedup import latest_per_key  # noqa: F401
 from prisma_migrator_spark.operators.joins import anti_join, semi_join  # noqa: F401
 from prisma_migrator_spark.operators.scoring import (  # noqa: F401
     group_sizes,

@@ -1,4 +1,4 @@
-"""Latest-per-key dedup and exact dedup.
+"""Latest-per-key dedup.
 
 ``latest_per_key`` is the Spark-native form of PostgreSQL
 ``SELECT DISTINCT ON (key) ... ORDER BY key, ts DESC``
@@ -87,15 +87,3 @@ def latest_per_key(
         .filter(F.col(rn) == 1)
         .drop(rn)
     )
-
-
-def exact_dedupe(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal.
-
-    With ``keys=None``: full-row ``dropDuplicates()`` (hash-groupBy on
-    all columns). With keys: keeps an arbitrary-but-deterministic row
-    per key? No — Spark's dropDuplicates(keys) keeps an arbitrary row;
-    for deterministic semantics use :func:`latest_per_key`. This
-    variant is the fast path when any representative row is fine.
-    """
-    return df.dropDuplicates(list(keys)) if keys else df.dropDuplicates()

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prisma_migrator_spark.catalog import load_table
+from prisma_migrator_spark.operators.driver_state import pin
 from prisma_migrator_spark.operators.joins import interval_join
 from prisma_migrator_spark.operators.ranking import topk_per_group
 from prisma_migrator_spark.plans.registry import query
@@ -327,23 +328,21 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_type"
     )
     # v and c feed BOTH the next stage and the final join; without
-    # persist each consumer recomputes the lineage and the fact is
-    # scanned 6x instead of 3x. The persisted frames are user-level
+    # the pins each consumer recomputes the lineage and the fact is
+    # scanned 6x instead of 3x. The pinned frames are user-level
     # aggregates (one timestamp per user), orders smaller than the
     # fact they summarize.
-    v = (
+    v = pin(
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .persist()
     )
-    c = (
+    c = pin(
         ev.where(F.col("event_type") == "click")
         .join(v, "user_id")
         .where(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .persist()
     )
     p = (
         ev.where(F.col("event_type") == "purchase")

@@ -17,9 +17,13 @@ Scale notes:
   Σ per-order-size² (orders hold ≤7 items), never n².
 - Each PageRank iteration is ONE shuffle: edges ⋈ ranks on src
   (both pre-partitioned on the join key — AQE reuses the layout),
-  then a groupBy(dst) sum. Ranks are persisted per iteration and
-  unpersisted after the next materializes (same discipline as
-  llm/dedup.connected_components' label propagation).
+  then a groupBy(dst) sum. Rank state is checkpointed every
+  ``checkpoint_every`` iterations (see :func:`pagerank`).
+- Edge frames with several consumers are snapshotted
+  (:func:`_snapshot_edges`) through ``operators/driver_state.pin``;
+  the query registry releases them before it builds the next
+  registered query. Label propagation persists its edge frame and
+  unpersists it itself, before it returns.
 - Determinism: contributions are rounded per iteration on BOTH
   engines, so cross-engine float summation drift cannot compound.
 """
@@ -30,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prisma_migrator_spark.catalog import load_table
+from prisma_migrator_spark.operators.driver_state import pin
 from prisma_migrator_spark.plans.registry import query
 
 #: Fact rows below which graph-mass stages keep the session shuffle
@@ -420,7 +425,6 @@ def copurchase_triangles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles, independently derived.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    release_graph_snapshots()  # free the previous graph query's cache
     # snapshot the symmetric edge list once: it feeds the degree agg
     # AND (via the orientation) all three legs of the triangle join —
     # without the snapshot the lineitem self-join subtree re-executes
@@ -428,35 +432,6 @@ def copurchase_triangles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _snapshot_edges(copurchase_edges(li))
     corners = _oriented_triangle_corners(und)
     return corners.groupBy("part").agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-#: Edge frames pinned by :func:`_snapshot_edges`, so they can be
-#: released. ``persist()`` registers a frame in the session
-#: CacheManager, which (unlike a localCheckpoint's blocks, freed by
-#: the ContextCleaner once the RDD is GC'd) holds it for the
-#: session's LIFETIME — without an explicit unpersist a long session
-#: running many graph queries accumulates 2-3 multi-GB frames per
-#: query (ADVICE r6 #1).
-_SNAPSHOTS: list[DataFrame] = []
-
-
-def release_graph_snapshots() -> int:
-    """Unpersist every edge frame pinned by a prior graph query and
-    return how many were released. Called automatically at the entry
-    of each registered graph query (bounding cache residency at one
-    query's frames instead of the whole session's); also public for
-    callers that want the memory back immediately after consuming a
-    result. Releasing is always SAFE: a graph DataFrame whose backing
-    snapshot was unpersisted recomputes through the original plan on
-    its next action — slower, never wrong."""
-    n = len(_SNAPSHOTS)
-    for df in _SNAPSHOTS:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _SNAPSHOTS.clear()
-    return n
 
 
 def _snapshot_edges(df: DataFrame) -> DataFrame:
@@ -474,13 +449,11 @@ def _snapshot_edges(df: DataFrame) -> DataFrame:
     evicted cache block recomputes instead of failing — strictly
     kinder than an evicted checkpoint block, which is fatal.
 
-    Every snapshot is tracked in :data:`_SNAPSHOTS` and released by
-    the NEXT graph query's entry (or an explicit
-    :func:`release_graph_snapshots`), so the cache never outlives the
-    queries that need it."""
-    df = df.persist()
+    The snapshot goes through ``driver_state.pin``: it is released
+    before the next registered query is built, so the cache never
+    outlives the query that needs it."""
+    df = pin(df)
     df.count()
-    _SNAPSHOTS.append(df)
     return df
 
 
@@ -720,7 +693,6 @@ def copurchase_triangles_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame
     induced-subgraph result exactly; the dropped-mass report is
     available from :func:`triangle_counts_capped`."""
     li = load_table(spark, sf_dir, "lineitem")
-    release_graph_snapshots()  # free the previous graph query's cache
     width = _graph_width(spark, li)
     und = _snapshot_edges(copurchase_edges(li, n_partitions=width))
     counts, _dropped = triangle_counts_capped(und, _TRI_CAP, width)
@@ -753,7 +725,6 @@ def copurchase_cap_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and edges the capped triangle count excludes — the honesty row
     that makes the cap a documented subgraph, not a silent truncation."""
     li = load_table(spark, sf_dir, "lineitem")
-    release_graph_snapshots()  # free the previous graph query's cache
     width = _graph_width(spark, li)
     und = _snapshot_edges(copurchase_edges(li, n_partitions=width))
     _counts, dropped = triangle_counts_capped(und, _TRI_CAP, width)
@@ -790,7 +761,6 @@ def copurchase_triangles_sampled_q(spark: SparkSession, sf_dir: str) -> DataFram
     engine-portable, so the oracle reproduces the exact sampled
     subgraph and the gate checks the estimator end-to-end."""
     li = load_table(spark, sf_dir, "lineitem")
-    release_graph_snapshots()  # free the previous graph query's cache
     width = _graph_width(spark, li)
     return triangle_estimate_sampled(
         copurchase_pairs(li, n_partitions=width), _TRI_KEEP_PCT, width

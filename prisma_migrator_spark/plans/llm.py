@@ -2189,7 +2189,7 @@ def corpus_recipe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized stage is hash-partitioned; the only serial pieces
     are O(n_buckets) offset windows and a 1-row percentile.
 
-    The post-gate frame is persist()ed: three downstream consumers
+    The post-gate frame is pinned: three downstream consumers
     (shuffle bucketing, bucket counts, shard offsets) would otherwise
     each re-run sample -> dedup -> percentile from the scan — the
     plan audit showed the percentile subtree 4x before the persist.
@@ -2202,6 +2202,7 @@ def corpus_recipe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         deterministic_shuffle_rank,
     )
     from prisma_migrator_spark.llm.text import quality_score, token_count
+    from prisma_migrator_spark.operators.driver_state import pin
 
     docs = load_table(spark, sf_dir, "documents")
     rate = (
@@ -2218,11 +2219,10 @@ def corpus_recipe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count(F.col("text")).alias("n_tokens"),
     )
     thr = q.agg(F.expr("percentile(quality, 0.10)").alias("__thr"))
-    gated = (
+    gated = pin(
         q.crossJoin(F.broadcast(thr))
         .where((F.col("quality") > F.col("__thr")) & (F.col("n_tokens") >= 1))
         .select("doc_id", "quality", "n_tokens")
-        .persist()
     )
     shuf = deterministic_shuffle_rank(gated, salt="epoch0", n_buckets=64)
     off = global_running_offset(
@@ -5231,8 +5231,8 @@ def compression_ratio_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher and RefinedWeb repetition filters approximate with n-gram
     fractions, here measured directly).
 
-    Plan shape: one Arrow-batched pandas-UDF map pass (the sanctioned
-    Python shape — zlib per batch, zero shuffle), then a 1-row exact
+    Plan shape: one Arrow-batched ``mapInPandas`` pass per use of the
+    scored frame (zlib per batch, zero shuffle), then a 1-row exact
     percentile aggregate broadcast back for the flag (the
     quality_gate_p10 pattern; approx_percentile at unbounded scale).
     """

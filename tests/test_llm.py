@@ -4503,8 +4503,13 @@ def test_zlib_ratio_matches_direct_zlib_and_orders_repetitive_below_prose(
     d = str(tmp_path / "sf")
     os.makedirs(d, exist_ok=True)
     df.write.parquet(f"{d}/documents.parquet")
-    out = {r["doc_id"]: r for r in
-           compression_ratio_quality_q(spark, d).collect()}
+    df = compression_ratio_quality_q(spark, d)
+    # one Python stage per use of the scored frame: under the NOT NULL
+    # filter, a pandas UDF would be evaluated twice per row
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 2
+    assert "ArrowEvalPython" not in plan
+    out = {r["doc_id"]: r for r in df.collect()}
     # exact parity with direct zlib at the pinned level
     for i, t, *_ in rows:
         raw = t.encode("utf-8")

@@ -265,34 +265,32 @@ def test_triangle_edge_frames_read_from_columnar_cache(spark, sf_dir):
 
 
 def test_graph_snapshots_released_between_queries(spark, sf_dir):
-    """The edge-frame persists are NOT session-lifetime (ADVICE r6
-    #1): each graph query's entry releases the previous query's
-    snapshots, bounding CacheManager residency at one query's frames,
-    and release_graph_snapshots() frees the last one on demand. The
-    released frame stays CORRECT — it just recomputes."""
+    """The edge-frame snapshots are NOT session-lifetime: they are
+    pinned (driver_state.pin), building the next registered query
+    releases the previous query's pins, bounding CacheManager
+    residency at one query's frames, and release_pins() frees the last
+    ones on demand. The released frame stays CORRECT — it just
+    recomputes."""
+    from prisma_migrator_spark.operators.driver_state import _PINNED, release_pins
     from prisma_migrator_spark.plans import QUERIES
-    from prisma_migrator_spark.plans.graph import (
-        _SNAPSHOTS,
-        release_graph_snapshots,
-    )
 
     spark.catalog.clearCache()
-    release_graph_snapshots()
+    release_pins()
     df1 = QUERIES["copurchase_triangles"](spark, sf_dir)
     n1 = df1.count()
-    first_batch = list(_SNAPSHOTS)
+    first_batch = list(_PINNED)
     assert first_batch, "triangle query should pin snapshot frames"
 
     # next graph query's construction frees the previous query's pins
     # (registry rotates: only the NEW query's frames remain tracked)
     QUERIES["copurchase_triangles_capped"](spark, sf_dir)
-    assert first_batch[0] not in _SNAPSHOTS
+    assert first_batch[0] not in _PINNED
 
     # explicit release drains the rest; NOTHING stays cached after —
     # storageLevel is a plan-keyed CacheManager lookup, so this also
     # proves the rotation actually unpersisted (not just untracked)
-    assert release_graph_snapshots() > 0
-    assert not _SNAPSHOTS
+    assert release_pins() > 0
+    assert not _PINNED
     assert all(f.storageLevel.useMemory is False for f in first_batch), (
         "edge-frame plans still registered in the CacheManager"
     )
