@@ -26,6 +26,8 @@ from pyspark.sql import SparkSession
 # plus the classes other queries add.
 _CODEGEN_CACHE_ENTRIES = 1024
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "prisma-migrator-spark",
@@ -49,6 +51,11 @@ def get_spark(
       and ``perfbench`` all build through here and so get it.
     - Spark UI off: ``perfbench`` reads per-stage metrics from the
       in-process status store, which needs no UI.
+    - the package's parent folder on the Python workers' PYTHONPATH
+      (Spark merges it with the workers' own): functions defined in
+      the package are pickled by reference, so a worker must import
+      the package even when the driver found it through a script's
+      ``sys.path`` entry and runs in another working directory.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
@@ -70,6 +77,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

@@ -135,7 +135,6 @@ def build_bloom_sidecars(
     path: str,
     key: str,
     fpp: float = 0.01,
-    distributed_threshold: int | None = None,
 ) -> dict:
     """Build or incrementally refresh the Bloom sidecar manifest for
     ``path``'s key column. Rows for files still present (same
@@ -144,8 +143,6 @@ def build_bloom_sidecars(
     from prisma_migrator_spark.operators.driver_state import bounded_collect
     from prisma_migrator_spark.writers.upsert import _atomic_swap, _part_files
 
-    if distributed_threshold is None:
-        distributed_threshold = DISTRIBUTED_BLOOM_THRESHOLD
     files = _part_files(path)
     ident = {os.path.basename(f): os.path.getsize(f) for f in files}
 
@@ -166,7 +163,7 @@ def build_bloom_sidecars(
     have = {r[0] for r in reused}
     todo = [f for f in files if os.path.basename(f) not in have]
 
-    if len(todo) <= distributed_threshold:
+    if len(todo) <= DISTRIBUTED_BLOOM_THRESHOLD:
         built_rows = [_file_bloom_row(f, key, fpp) for f in todo]
         out = spark.createDataFrame(reused + built_rows, _MANIFEST_SCHEMA)
     else:
@@ -202,24 +199,19 @@ def build_bloom_sidecars(
 
 
 def bloom_prunable_files(
-    spark: SparkSession,
-    path: str,
-    values,
-    distributed_threshold: int | None = None,
+    spark: SparkSession, path: str, values
 ) -> tuple[list[str], int]:
     """Files that MIGHT contain any of ``values`` per the sidecar
     manifest, plus the total file count. Files without a (current)
     sidecar row are conservatively included — membership "no" is the
     only answer a Bloom filter may give definitively, and only for
     files it has actually indexed. Probing is manifest-sized: below
-    ``distributed_threshold`` manifest rows it runs on the driver;
+    ``DISTRIBUTED_BLOOM_THRESHOLD`` manifest rows it runs on the driver;
     above, the bitsets stay on executors and only the (tiny) key-hash
     list is broadcast."""
     from prisma_migrator_spark.operators.driver_state import bounded_collect
     from prisma_migrator_spark.writers.upsert import _part_files
 
-    if distributed_threshold is None:
-        distributed_threshold = DISTRIBUTED_BLOOM_THRESHOLD
     files = _part_files(path)
     ident = {os.path.basename(f): os.path.getsize(f) for f in files}
     by_base = {os.path.basename(f): f for f in files}
@@ -230,7 +222,7 @@ def bloom_prunable_files(
     hashes = [_key_hashes(v) for v in values if v is not None]
     manifest = spark.read.parquet(side)
 
-    if len(ident) <= distributed_threshold:
+    if len(ident) <= DISTRIBUTED_BLOOM_THRESHOLD:
         rows = bounded_collect(
             manifest,
             2 * len(ident) + 1024,

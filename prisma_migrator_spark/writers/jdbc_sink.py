@@ -34,7 +34,8 @@ import math
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from prisma_migrator_spark.operators.dedup import _orderable, latest_per_key
 
 PG_MAX_PARAMS = 50_000  # reference src/utils/lib.ts:78
 
@@ -121,21 +122,26 @@ def build_staging_merge_sql(
 
 
 def dedupe_batch(batch: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """One row per key, deterministically (min-struct over the other
-    columns). ON CONFLICT DO UPDATE raises ``cannot affect row a
+    """One row per key, deterministically: the smallest by the other
+    columns in order (``latest_per_key`` ascending, so a min-struct
+    aggregate). ON CONFLICT DO UPDATE raises ``cannot affect row a
     second time`` if one statement carries duplicate keys — the
     reference never hits this only because its scraper de-dupes by
-    handle upstream; the engine must not rely on that."""
+    handle upstream; the engine must not rely on that.
+
+    A map column cannot be ordered, so it rides as payload and the
+    window fallback of ``latest_per_key`` picks the row: rows that
+    differ only in a map column tie, and which of them wins is not
+    pinned."""
     keys = list(key_cols)
-    rest = [c for c in batch.columns if c not in keys]
+    rest = [
+        f.name
+        for f in batch.schema
+        if f.name not in keys and _orderable(f.dataType)
+    ]
     if not rest:
         return batch.dropDuplicates(keys)
-    return (
-        batch.groupBy(*keys)
-        .agg(F.min(F.struct(*rest)).alias("__row"))
-        .select(*keys, *[F.col(f"__row.{c}").alias(c) for c in rest])
-        .select(*batch.columns)
-    )
+    return latest_per_key(batch, keys, rest[0], rest[1:], descending=False)
 
 
 def spark_jdbc_staging_writer(

@@ -6,11 +6,13 @@ Delta/Iceberg keep the same information in their metadata layers):
 
 - :func:`table_manifest` — the per-file min/max statistics table,
   computed from parquet FOOTERS only (no data pages). Below
-  ``distributed_threshold`` files it reads footers on the driver
-  (micro-table regime); above, it fans the file list out through
+  ``DISTRIBUTED_FOOTER_THRESHOLD`` files it reads footers on the
+  driver (micro-table regime); above, it fans the file list out through
   ``mapInPandas`` so a million-file table costs one metadata-sized
   Spark job instead of a serial driver loop — the difference between
   CoW MERGE planning scaling with |touched files| vs |all files|.
+  The CoW writers' pruning step (``upsert._files_holding_keys``) joins
+  batch keys against it.
 - :func:`prunable_files` — the manual file-skipping primitive over
   the manifest, and the measurement hook for layout quality (fewer
   surviving files = better clustering for that column). The Z-order
@@ -26,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 # Measured crossover (PERF.md round 5): pyarrow reads footers at
 # ~9k files/s single-threaded (0.33 s for 3,000 files), while the
@@ -69,31 +72,21 @@ def _footer_stats(files: list[str], cols: list[str]) -> list[tuple]:
 
 
 def table_manifest(
-    spark: SparkSession,
-    path: str,
-    cols: list[str],
-    distributed_threshold: int | None = None,
+    spark: SparkSession, files: list[str], cols: list[str], schema: StructType
 ) -> DataFrame:
-    """File-level statistics manifest: one row per data file with
-    ``file``, ``n_rows`` and ``<col>_min``/``<col>_max`` for each
-    requested column, typed from the table schema.
+    """File-level statistics manifest: one row per data file of
+    ``files`` with ``file``, ``n_rows`` and ``<col>_min``/``<col>_max``
+    for each requested column, typed from ``schema``, the table schema
+    the caller has already read (inferring it again costs a Spark job).
 
     This is the planning input for file-granularity CoW MERGE /
     DELETE and for manual file-skipping: join predicates against it,
     collect the (metadata-sized) survivor list, touch only those
     files. Footer reads go through executors once the file count
-    passes ``distributed_threshold`` (default: the module constant,
-    set at the measured local crossover — serial pyarrow does ~9k
-    files/s, the Spark job costs a flat ~1-4 s, so distribution pays
-    only in the 10^5-10^6-file regime a 100 TB table actually has)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from prisma_migrator_spark.writers.upsert import _part_files
-
-    if distributed_threshold is None:
-        distributed_threshold = DISTRIBUTED_FOOTER_THRESHOLD
-    files = _part_files(path)
-    schema = spark.read.parquet(path).schema
+    passes ``DISTRIBUTED_FOOTER_THRESHOLD``, set at the measured local
+    crossover — serial pyarrow does ~9k files/s, the Spark job costs a
+    flat ~1-4 s, so distribution pays only in the 10^5-10^6-file
+    regime a 100 TB table actually has."""
     fields = [
         StructField("file", StringType(), False),
         StructField("n_rows", LongType(), False),
@@ -109,7 +102,7 @@ def table_manifest(
         ]
     out_schema = StructType(fields)
 
-    if len(files) <= distributed_threshold:
+    if len(files) <= DISTRIBUTED_FOOTER_THRESHOLD:
         return spark.createDataFrame(_footer_stats(files, cols), out_schema)
 
     import pandas as pd
@@ -127,59 +120,8 @@ def table_manifest(
     return file_df.mapInPandas(read_footers, out_schema)
 
 
-def file_key_ranges_df(
-    spark: SparkSession,
-    files: list[str],
-    key: str,
-    key_type,
-    distributed_threshold: int | None = None,
-) -> DataFrame:
-    """Footer (min, max) of ``key`` per file as a DataFrame
-    ``(__file, __lo, __hi)`` — the CoW writers' pruning input.
-    NULL bounds mean 'no usable stats: could contain anything'.
-    Driver-serial below ``distributed_threshold`` files, executor-
-    parallel ``mapInPandas`` above — see the module constant for the
-    measured crossover (serial wins into the tens of thousands of
-    files; the distributed path is for the 100 TB file-count regime)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    if distributed_threshold is None:
-        distributed_threshold = DISTRIBUTED_FOOTER_THRESHOLD
-    schema = StructType(
-        [
-            StructField("__file", StringType(), False),
-            StructField("__lo", key_type, True),
-            StructField("__hi", key_type, True),
-        ]
-    )
-    if len(files) <= distributed_threshold:
-        rows = [(f, lo, hi) for f, _, lo, hi in _footer_stats(files, [key])]
-        return spark.createDataFrame(rows, schema)
-
-    import pandas as pd
-
-    def read_footers(batches):
-        for pdf in batches:
-            rows = [
-                (f, lo, hi)
-                for f, _, lo, hi in _footer_stats(list(pdf["file"]), [key])
-            ]
-            yield pd.DataFrame(rows, columns=["__file", "__lo", "__hi"])
-
-    file_df = spark.createDataFrame(
-        [(f,) for f in files],
-        StructType([StructField("file", StringType(), False)]),
-    ).repartition(min(len(files) // 64 + 1, 512))
-    return file_df.mapInPandas(read_footers, schema)
-
-
 def prunable_files(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    distributed_threshold: int | None = None,
+    spark: SparkSession, path: str, col: str, lo, hi
 ) -> tuple[list[str], int]:
     """Files whose footer range for ``col`` intersects [lo, hi] (files
     with no stats are conservatively included), plus the total file
@@ -187,8 +129,11 @@ def prunable_files(
     hook for layout quality (fewer survivors = better clustering for
     that column)."""
     from prisma_migrator_spark.operators.driver_state import bounded_collect
+    from prisma_migrator_spark.writers.upsert import _part_files
 
-    m = table_manifest(spark, path, [col], distributed_threshold)
+    m = table_manifest(
+        spark, _part_files(path), [col], spark.read.parquet(path).schema
+    )
     survivors = m.where(
         F.col(f"{col}_min").isNull()
         | ((F.col(f"{col}_max") >= F.lit(lo)) & (F.col(f"{col}_min") <= F.lit(hi)))
@@ -200,12 +145,7 @@ def prunable_files(
     return sorted(r["file"] for r in rows), total
 
 
-def footer_stats_summary(
-    spark: SparkSession,
-    path: str,
-    cols: list[str],
-    distributed_threshold: int | None = None,
-) -> dict:
+def footer_stats_summary(spark: SparkSession, path: str, cols: list[str]) -> dict:
     """COUNT(*) / MIN / MAX answered from parquet FOOTERS alone — an
     O(|files|) metadata read instead of a table scan (at 100 TB:
     thousands of footer reads vs the full corpus). COUNT is always
@@ -214,7 +154,11 @@ def footer_stats_summary(
     range-WIDENING stat truncation, so treat them as bounds. Any
     column with a stats-less file yields None (unknown) rather than a
     min/max over the subset of files that do have stats."""
-    m = table_manifest(spark, path, cols, distributed_threshold)
+    from prisma_migrator_spark.writers.upsert import _part_files
+
+    m = table_manifest(
+        spark, _part_files(path), cols, spark.read.parquet(path).schema
+    )
     aggs = [F.sum("n_rows").alias("n_rows")]
     for c in cols:
         aggs += [

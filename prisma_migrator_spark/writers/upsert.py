@@ -12,22 +12,27 @@ The reference's two write primitives, re-expressed distributed:
   degrades to DO NOTHING (lib.ts:91), exactly like the reference's
   insert-only history tables (lib.ts:273).
 
-Parquet backend strategy: read existing → keep rows whose key is NOT
-in the incoming batch (for updates) or drop incoming rows whose key
-exists (for do-nothing) → union → write to a staging dir → atomic
-swap. Like the reference (which is non-atomic per batch,
+Parquet backend strategy: every keyed writer here maps its ON
+CONFLICT update list onto a MERGE clause (:func:`_update_set`) and
+runs ``merge._merged_frame``, the one MERGE row plan: DO UPDATE SET
+<all> keeps the existing rows the batch does not match and unions the
+batch; DO NOTHING unions the existing rows with the batch rows whose
+key is new; a subset update left-joins the existing rows to the batch
+and takes the listed columns from it. The merged rows are written to a staging dir and swapped in
+atomically. Like the reference (which is non-atomic per batch,
 src/migrate.ts:67-69), concurrent writers are not serialized; unlike
 the reference, a failed write never corrupts the target because the
 swap happens only after the staging write succeeds.
 
-Scale: both paths are one join keyed on the conflict target. The
-incoming batch is usually much smaller than the target table →
-broadcast the batch's key set; AQE does this automatically below the
-threshold, and ``broadcast_batch=True`` forces it. The rewrite of the
-full table is the price of upsert-on-immutable-files; on a real
+Scale: each shape joins on the conflict target — one join for SET
+<all> and for DO NOTHING, two for a subset update. The incoming batch
+is usually much smaller than the target table, so AQE broadcasts it
+below its threshold. The rewrite of the full table is the price of
+upsert-on-immutable-files (the CoW and partitioned variants rewrite
+only the files or partitions a batch key can reach); on a real
 deployment the same API runs against a format with MERGE (Delta/
-Iceberg) or a JDBC sink with native ON CONFLICT, and only this
-module changes.
+Iceberg) or a JDBC sink with native ON CONFLICT, and only this module
+changes.
 """
 
 from __future__ import annotations
@@ -37,15 +42,16 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField
+from pyspark.sql.types import StructField, StructType
 
 from prisma_migrator_spark.operators.dedup import latest_per_key
 from prisma_migrator_spark.operators.driver_state import bounded_collect, observe_rows
 from prisma_migrator_spark.operators.joins import anti_join
 from prisma_migrator_spark.writers.jdbc_sink import dedupe_batch
-from prisma_migrator_spark.writers.layout import file_key_ranges_df
+from prisma_migrator_spark.writers.layout import table_manifest
+from prisma_migrator_spark.writers.merge import _merged_frame, merge_into
 
 
 def append_skip_duplicates(
@@ -72,7 +78,10 @@ def _dedupe(
     latest by ``order_col`` when given, else the lexicographically
     smallest over the other columns (``jdbc_sink.dedupe_batch``). A
     bare ``dropDuplicates`` keeps whichever row a partitioning happens
-    to deliver first, which varies across runs and AQE replans."""
+    to deliver first, which varies across runs and AQE replans. A map
+    column cannot be ordered, so rows that tie on every other column
+    come out in no pinned order, and a batch whose non-key columns
+    are all maps falls back to ``dropDuplicates``."""
     if order_col:
         return latest_per_key(batch, keys, order_col)
     return dedupe_batch(batch, keys)
@@ -102,26 +111,23 @@ def _files_holding_keys(
     """The ``files`` whose footer range of ``key`` holds a value of
     ``key_frame``'s ``key`` column: a superset of the files that hold
     one. One Spark job joins the distinct keys against the broadcast
-    per-file ranges (|files| rows, metadata-sized), read driver-serial
-    for small tables and on executors past
-    ``layout.DISTRIBUTED_FOOTER_THRESHOLD``. A file without usable
-    stats (NULL range) may hold any key, so it joins every key; an
-    empty key frame selects nothing."""
-    rng = file_key_ranges_df(spark, files, key.name, key.dataType)
+    :func:`table_manifest` (|files| rows, metadata-sized), typed from
+    the caller's ``key`` field. A file without usable stats (NULL
+    range) may hold any key, so it joins every key; an empty key frame
+    selects nothing."""
+    manifest = table_manifest(spark, files, [key.name], StructType([key]))
+    lo, hi = F.col(f"{key.name}_min"), F.col(f"{key.name}_max")
+    k = F.col("__k")
     hits = bounded_collect(
         key_frame.select(F.col(key.name).alias("__k"))
         .distinct()
-        .join(
-            F.broadcast(rng),
-            F.col("__lo").isNull()
-            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
-        )
-        .select("__file")
+        .join(F.broadcast(manifest), lo.isNull() | ((k >= lo) & (k <= hi)))
+        .select("file")
         .distinct(),
         len(files),
         "one row per data file in the table footprint",
     )
-    return {r["__file"] for r in hits}
+    return {r["file"] for r in hits}
 
 
 def _rewrite_and_swap(
@@ -158,34 +164,14 @@ def _rewrite_and_swap(
     return rows
 
 
-def _merge(
-    existing: DataFrame,
-    batch: DataFrame,
-    keys: list[str],
-    update_cols: Sequence[str] | None,
-) -> DataFrame:
-    """The three ON CONFLICT shapes as one plan: DO UPDATE SET <all>,
-    DO UPDATE SET <subset>, DO NOTHING (``update_cols=[]``)."""
-    do_update = update_cols is None or len(update_cols) > 0
-    if do_update and update_cols is not None:
-        # Partial update: merge batch values into existing rows per key.
-        matched = existing.alias("e").join(
-            batch.alias("b"), keys, "inner"
-        ).select(
-            *[F.col(f"e.{c}").alias(c) for c in existing.columns if c not in update_cols and c not in keys],
-            *[F.col(f"b.{c}").alias(c) for c in update_cols],
-            *[F.col(f"e.{k}").alias(k) for k in keys],
-        ).select(*existing.columns)
-        unmatched_existing = anti_join(existing, batch, keys)
-        new_rows = anti_join(batch, existing, keys).select(*existing.columns)
-        return unmatched_existing.unionByName(matched).unionByName(new_rows)
-    if do_update:
-        # Full-row update: batch wins for matched keys.
-        kept = anti_join(existing, batch, keys)
-        return kept.unionByName(batch.select(*existing.columns))
-    # DO NOTHING: existing wins; only brand-new keys append.
-    new_rows = anti_join(batch, existing, keys).select(*existing.columns)
-    return existing.unionByName(new_rows)
+def _update_set(update_cols: Sequence[str] | None) -> dict[str, Column] | None:
+    """An ON CONFLICT update list as :func:`_merged_frame`'s
+    ``update_set``: ``None`` (DO UPDATE SET every column) stays
+    ``None``, ``[]`` (DO NOTHING) becomes ``{}``, and a subset sets
+    each listed column from the batch."""
+    if update_cols is None:
+        return None
+    return {c: F.col(f"s.{c}") for c in update_cols}
 
 
 def _align_schemas(
@@ -287,7 +273,14 @@ def upsert_parquet(
         # that mode's contract is "matched keys keep the existing row
         # for EVERY column"; the evolved column still lands as NULL
         # for existing keys and with batch values for brand-new keys.
-    result, total = observe_rows(_merge(existing, batch, keys, update_cols))
+    result, total = observe_rows(
+        _merged_frame(
+            existing,
+            batch.select(*existing.columns),
+            keys,
+            update_set=_update_set(update_cols),
+        )
+    )
 
     staged = path + ".staging"
     result.write.mode("overwrite").parquet(staged)
@@ -385,12 +378,15 @@ def upsert_parquet_cow(
     untouched = [f for f in files if f not in rewrite]
     if rewrite:
         existing_sub = spark.read.schema(existing_schema).parquet(*sorted(rewrite))
-        result = _merge(
-            existing_sub, batch.select(*existing_sub.columns), keys, update_cols
-        )
     else:
         # No file can contain any batch key: every batch row is new.
-        result = batch.select(*existing_schema.names)
+        existing_sub = spark.createDataFrame([], existing_schema)
+    result = _merged_frame(
+        existing_sub,
+        batch.select(*existing_schema.names),
+        keys,
+        update_set=_update_set(update_cols),
+    )
     _rewrite_and_swap(result, path, untouched, "m-")
     out = {
         "path": path,
@@ -453,7 +449,12 @@ def upsert_partitioned(
         )
     ]
     existing = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
-    result = _merge(existing, batch.select(*existing.columns), keys, update_cols)
+    result = _merged_frame(
+        existing,
+        batch.select(*existing.columns),
+        keys,
+        update_set=_update_set(update_cols),
+    )
     # Spark refuses to overwrite a path its plan reads from; materialize
     # the merged slice (only the affected partitions) to detach lineage.
     result = result.localCheckpoint(eager=True)
@@ -496,8 +497,6 @@ def delete_keys_cow(
     """
     if not os.path.exists(path):
         return {"path": path, "mode": "noop", "files_rewritten": 0}
-    from prisma_migrator_spark.writers.merge import merge_into
-
     keys = list(key_cols)
     rep = merge_into(
         spark,

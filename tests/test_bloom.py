@@ -89,15 +89,17 @@ def test_bloom_prunes_where_ranges_cannot(spark, tmp_path):
     assert len(surv) < 16
 
 
-def test_bloom_distributed_paths_agree(spark, tmp_path):
+def test_bloom_distributed_paths_agree(spark, tmp_path, monkeypatch):
+    from prisma_migrator_spark.writers import bloom
+
     path = str(tmp_path / "rk.parquet")
     _random_key_table(spark, path, n=400, files=8)
     probe = [_h(7), _h(201)]
 
-    build_bloom_sidecars(spark, path, "k", distributed_threshold=0)
-    dist, total_d = bloom_prunable_files(
-        spark, path, probe, distributed_threshold=0
-    )
+    monkeypatch.setattr(bloom, "DISTRIBUTED_BLOOM_THRESHOLD", 0)
+    build_bloom_sidecars(spark, path, "k")
+    dist, total_d = bloom_prunable_files(spark, path, probe)
+    monkeypatch.undo()
     serial, total_s = bloom_prunable_files(spark, path, probe)
     assert (dist, total_d) == (serial, total_s)
     assert _files_containing(spark, path, set(probe)) <= set(dist)

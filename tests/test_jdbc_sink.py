@@ -151,6 +151,25 @@ def test_staging_upsert_dedupes_batch(spark, con):
     assert dedupe_batch(batch, ["handle"]).count() == 1
 
 
+def test_dedupe_batch_with_map_column(spark):
+    # a map column has no ordering, so it cannot ride in the min-struct
+    # aggregate: the smallest row by the orderable columns wins, its
+    # map carried along
+    batch = spark.createDataFrame(
+        [
+            Row(handle="z", tags={"b": 2}, name="Z2"),
+            Row(handle="z", tags={"a": 1}, name="Z1"),
+            Row(handle="y", tags=None, name="Y"),
+        ]
+    )
+    got = dedupe_batch(batch, ["handle"])
+    assert got.columns == batch.columns
+    assert sorted(map(tuple, got.collect())) == [
+        ("y", None, "Y"),
+        ("z", {"a": 1}, "Z1"),
+    ]
+
+
 def test_values_statement_shape_matches_reference():
     # the exact statement family of buildBulkInsertQuery (lib.ts:90-91)
     sql = build_values_upsert_sql(

@@ -11,6 +11,7 @@ from prisma_migrator_spark.writers.layout import (
     prunable_files,
     table_manifest,
 )
+from prisma_migrator_spark.writers.upsert import _part_files
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -21,10 +22,14 @@ def _orders_frame(spark, sf_dir):
     )
 
 
-def test_table_manifest_driver_and_distributed_agree(spark, sf_dir, tmp_path):
+def test_table_manifest_driver_and_distributed_agree(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The manifest's min/max must equal the true per-file extrema,
     and the distributed (mapInPandas) path must produce exactly the
     driver-serial path's rows."""
+    from prisma_migrator_spark.writers import layout
+
     path = str(tmp_path / "orders_flat.parquet")
     (
         _orders_frame(spark, sf_dir)
@@ -33,10 +38,11 @@ def test_table_manifest_driver_and_distributed_agree(spark, sf_dir, tmp_path):
         .write.parquet(path)
     )
     cols = ["o_orderkey", "o_totalprice"]
-    driver = {
-        r.file: r for r in table_manifest(spark, path, cols, 10_000).collect()
-    }
-    dist = {r.file: r for r in table_manifest(spark, path, cols, 0).collect()}
+    files, schema = _part_files(path), spark.read.parquet(path).schema
+    monkeypatch.setattr(layout, "DISTRIBUTED_FOOTER_THRESHOLD", 10_000)
+    driver = {r.file: r for r in table_manifest(spark, files, cols, schema).collect()}
+    monkeypatch.setattr(layout, "DISTRIBUTED_FOOTER_THRESHOLD", 0)
+    dist = {r.file: r for r in table_manifest(spark, files, cols, schema).collect()}
     assert set(driver) == set(dist) and len(driver) == 8
     for f in driver:
         assert tuple(driver[f]) == tuple(dist[f]), f

@@ -1,5 +1,7 @@
 """Conditional MERGE INTO: SQL clause semantics (delete-first order,
-NULL conditions don't fire), one-join plan, CoW file pruning."""
+NULL conditions don't fire), CoW file pruning. The plan — one left
+join of the target to the source plus the insert anti-join — is
+pinned by ``tests/test_writers.py``'s target-scan counts."""
 
 from __future__ import annotations
 

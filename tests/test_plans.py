@@ -451,3 +451,41 @@ def test_second_headline_run_reuses_generated_code(spark, sf_dir):
         f"the second headline round compiled {added} classes: the "
         "codegen cache no longer holds the headline working set"
     )
+
+
+def test_python_workers_import_the_package_from_any_working_directory(tmp_path):
+    """A script that finds the package through its own ``sys.path``
+    entry and runs in another working directory still runs a Python
+    stage whose function the package defines: the function is pickled
+    by reference, so each worker imports the package, which it finds
+    only through the PYTHONPATH ``get_spark`` gives the workers."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import functions as F
+from prisma_migrator_spark.functions.arrow import _per_row
+from prisma_migrator_spark.llm.multimodal import synthesize_wav
+from prisma_migrator_spark.session import get_spark
+
+spark = get_spark("worker-path-probe", cpus=1, shuffle_partitions=1)
+docs = spark.range(3).select(F.col("id").alias("doc_id"), F.lit("hi").alias("text"))
+wavs = _per_row(docs, synthesize_wav, ["doc_id", "text"], "payload binary", ["doc_id"])
+print("payloads", wavs.where(F.col("payload").isNotNull()).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert "payloads 3" in run.stdout

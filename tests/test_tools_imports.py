@@ -57,3 +57,34 @@ def test_script_package_imports_resolve():
         if not _resolves(module, name)
     ]
     assert not missing, f"scripts import names the package lacks: {missing}"
+
+
+def _literal_sys_path_entries(path: Path) -> list[int]:
+    """Lines where ``path`` puts a string literal on ``sys.path``
+    (``sys.path.insert``/``append`` with a literal or f-string)."""
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("insert", "append")
+            and ast.unparse(node.func.value) == "sys.path"
+            and any(
+                isinstance(a, ast.JoinedStr)
+                or (isinstance(a, ast.Constant) and isinstance(a.value, str))
+                for a in node.args
+            )
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_scripts_find_the_package_from_their_own_folder():
+    """A script that puts a fixed folder on ``sys.path`` imports the
+    package from that folder, not from the checkout it was run from."""
+    fixed = [
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in SCRIPTS
+        for line in _literal_sys_path_entries(path)
+    ]
+    assert not fixed, f"scripts put a literal path on sys.path: {fixed}"

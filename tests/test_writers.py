@@ -222,13 +222,28 @@ def test_migrate_keyless_resume_is_multiset_difference(spark, tmp_path):
     assert Counter(map(tuple, got)) == Counter(rows)
 
 
-def _parquet_scans(description: str) -> int:
-    """Parquet scans in a formatted physical plan, final adaptive plan
-    only (AQE also prints the initial plan, which would count twice)."""
+_SCAN = r"\bScan parquet\b"
+_JOIN = r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)\b"
+
+
+def _plan_nodes(description: str, node: str) -> int:
+    """Nodes matching ``node`` in a formatted physical plan, the
+    adaptive plan that ran only (AQE also prints the initial plan,
+    which would count twice). The status store may still hold the plan
+    AQE labels ``Current`` rather than ``Final`` when the execution
+    ends."""
     tree = description.split("\n\n", 1)[0]
-    if "== Final Plan ==" in tree:
-        tree = tree.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
-    return len(re.findall(r"\bScan parquet\b", tree))
+    tree = re.split(r"== (?:Final|Current) Plan ==", tree)[-1]
+    return len(re.findall(node, tree.split("== Initial Plan ==")[0]))
+
+
+def _executions(spark) -> dict:
+    """The SQL executions the status store holds, by id, once every
+    event is in."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    return {e.executionId(): e for e in as_java(store.executionsList())}
 
 
 def test_migrate_resume_reads_each_table_once(spark, sf_dir, tmp_path):
@@ -240,23 +255,13 @@ def test_migrate_resume_reads_each_table_once(spark, sf_dir, tmp_path):
     src = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
     src.where("n_nationkey % 2 = 0").write.parquet(os.path.join(dst, "nation.parquet"))
 
-    jvm = spark.sparkContext._jvm
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return {
-            e.executionId(): e
-            for e in jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList())
-        }
-
     expected = (src.count(), src.where("n_nationkey % 2 = 1").count())
-    before = set(executions())
+    before = set(_executions(spark))
     res = migrate_table(spark, sf_dir, dst, "nation", {"nation": ["n_nationkey"]})
-    new = [e for i, e in executions().items() if i not in before]
+    new = [e for i, e in _executions(spark).items() if i not in before]
     assert res.status == "copied", res.error
     assert (res.rows_read, res.rows_written) == expected
-    assert sum(_parquet_scans(e.physicalPlanDescription()) for e in new) == 2
+    assert sum(_plan_nodes(e.physicalPlanDescription(), _SCAN) for e in new) == 2
 
 
 def test_migrate_parallel_tables(spark, sf_dir, tmp_path):
@@ -445,17 +450,37 @@ def test_upsert_cow_do_nothing_and_partial_update(spark, tmp_path):
     assert row["v"] == "P" and row["ts"] == 10
 
 
-def test_every_writer_agrees_on_one_batch(spark, tmp_path):
-    """The four keyed writers turn one table and one batch into the
-    same multiset for each ON CONFLICT shape, whatever the batch's row
-    order: updates, inserts, and in-batch duplicate keys whose rows
-    differ (the smallest row wins when no ``order_col`` is given)."""
+def _keyed_writers(spark) -> dict:
+    """The four keyed writers, keyed on ``k`` (``upsert_partitioned``
+    partitions by ``p``), each called as ``write(batch, path,
+    update_cols, merge_into_clauses)``."""
     from prisma_migrator_spark.writers.merge import merge_into
     from prisma_migrator_spark.writers.upsert import (
         upsert_parquet_cow,
         upsert_partitioned,
     )
 
+    return {
+        "upsert_parquet": lambda b, path, cols, _: upsert_parquet(
+            spark, b, path, ["k"], update_cols=cols
+        ),
+        "upsert_parquet_cow": lambda b, path, cols, _: upsert_parquet_cow(
+            spark, b, path, ["k"], update_cols=cols
+        ),
+        "upsert_partitioned": lambda b, path, cols, _: upsert_partitioned(
+            spark, b, path, ["k"], "p", update_cols=cols
+        ),
+        "merge_into": lambda b, path, _, clauses: merge_into(
+            spark, path, b, ["k"], **clauses
+        ),
+    }
+
+
+def test_every_writer_agrees_on_one_batch(spark, tmp_path):
+    """The four keyed writers turn one table and one batch into the
+    same multiset for each ON CONFLICT shape, whatever the batch's row
+    order: updates, inserts, and in-batch duplicate keys whose rows
+    differ (the smallest row wins when no ``order_col`` is given)."""
     base = [{"k": k, "v": f"v{k}", "q": k, "p": k % 3} for k in range(40)]
     rows = [
         {"k": 3, "v": "y", "q": 1, "p": 0},  # update, duplicated
@@ -477,26 +502,15 @@ def test_every_writer_agrees_on_one_batch(spark, tmp_path):
         },
         "nothing": {**{k: winners[k] for k in (100, 101)}, **old},
     }
+    expected["nothing, empty SET"] = expected["nothing"]
     shapes = {
         # shape: (update_cols for the upserts, merge_into clauses)
         "all": (None, {}),
         "subset": (["v"], {"update_set": {"v": F.col("s.v")}}),
         "nothing": ([], {"when_matched_update": F.lit(False)}),
+        "nothing, empty SET": ([], {"update_set": {}}),
     }
-    writers = {
-        "upsert_parquet": lambda b, path, cols, _: upsert_parquet(
-            spark, b, path, ["k"], update_cols=cols
-        ),
-        "upsert_parquet_cow": lambda b, path, cols, _: upsert_parquet_cow(
-            spark, b, path, ["k"], update_cols=cols
-        ),
-        "upsert_partitioned": lambda b, path, cols, _: upsert_partitioned(
-            spark, b, path, ["k"], "p", update_cols=cols
-        ),
-        "merge_into": lambda b, path, _, clauses: merge_into(
-            spark, path, b, ["k"], **clauses
-        ),
-    }
+    writers = _keyed_writers(spark)
     table = _df(spark, base).repartitionByRange(4, "k")
     table.write.parquet(str(tmp_path / "plain"))
     table.write.partitionBy("p").parquet(str(tmp_path / "partitioned"))
@@ -513,6 +527,94 @@ def test_every_writer_agrees_on_one_batch(spark, tmp_path):
                 assert {r["k"]: (r["v"], r["q"], r["p"]) for r in got} == expected[
                     shape
                 ], (name, shape, order)
+
+
+def test_writers_cast_the_batch_to_the_table_types(spark, tmp_path):
+    """A batch column wider than the table's is cast to the table's
+    type by every keyed writer, for the rows it updates and the rows
+    it inserts alike: a timestamp into a date column lands as its
+    date, and the column stays a date in every file."""
+    import datetime as dt
+
+    from pyspark.sql.types import DateType
+
+    day0 = dt.date(2024, 1, 1)
+    base = [(k, day0 + dt.timedelta(days=k), k % 3) for k in range(12)]
+    table = spark.createDataFrame(base, "k long, d date, p long")
+    table.repartitionByRange(2, "k").write.parquet(str(tmp_path / "plain"))
+    table.write.partitionBy("p").parquet(str(tmp_path / "partitioned"))
+    batch = spark.createDataFrame(
+        [(3, dt.datetime(2024, 6, 1, 12), 0), (100, dt.datetime(2024, 7, 1, 12), 1)],
+        "k long, d timestamp, p long",
+    )
+    expected = {
+        **{k: d for k, d, _ in base},
+        3: dt.date(2024, 6, 1),
+        100: dt.date(2024, 7, 1),
+    }
+    shapes = {
+        "all": (None, {}),
+        "subset": (["d"], {"update_set": {"d": F.col("s.d")}}),
+    }
+    for name, write in _keyed_writers(spark).items():
+        for shape, (cols, clauses) in shapes.items():
+            path = str(tmp_path / f"{name}-{shape}.parquet")
+            layout = "partitioned" if name == "upsert_partitioned" else "plain"
+            shutil.copytree(str(tmp_path / layout), path)
+            write(batch, path, cols, clauses)
+            got = spark.read.parquet(path)
+            assert got.schema["d"].dataType == DateType(), (name, shape)
+            assert {r["k"]: r["d"] for r in got.collect()} == expected, (name, shape)
+
+
+def test_merge_shapes_scan_and_join_the_target_once_or_twice(spark, tmp_path):
+    """Target scans and joins in the executed plans of one keyed
+    write, per shape (the batch is a local frame, so every parquet
+    scan is a target scan). SET * is the target rows the batch does
+    not match plus the batch: one scan, one anti-join. DO NOTHING is
+    the target plus the batch rows it does not hold: two scans, one
+    anti-join (Spark drops the general plan's left join, which no
+    output column reads and whose batch side is unique on the key).
+    A subset update and a conditional MERGE left-join the
+    target to the batch once and anti-join it once for the inserts:
+    two scans, two joins. (The CoW pruning step's range join against
+    the footer manifest is a nested-loop join on a local frame, so it
+    counts as neither.)"""
+    from prisma_migrator_spark.writers.merge import merge_into
+
+    table = _df(spark, [{"k": k, "v": f"v{k}", "q": k} for k in range(2_000)])
+    table.repartitionByRange(4, "k").write.parquet(str(tmp_path / "base"))
+    batch = _df(spark, [{"k": k, "v": "b", "q": 0} for k in range(1_980, 2_020)])
+    shapes = {
+        "full update": ((1, 1), lambda p: upsert_parquet(spark, batch, p, ["k"])),
+        "do nothing": (
+            (2, 1),
+            lambda p: upsert_parquet(spark, batch, p, ["k"], update_cols=[]),
+        ),
+        "subset update": (
+            (2, 2),
+            lambda p: upsert_parquet(spark, batch, p, ["k"], update_cols=["v"]),
+        ),
+        "conditional merge_into": (
+            (2, 2),
+            lambda p: merge_into(
+                spark, p, batch, ["k"],
+                when_matched_update=F.col("s.q") < F.col("t.q"),
+            ),
+        ),
+    }
+    for shape, (counts, write) in shapes.items():
+        path = str(tmp_path / shape.replace(" ", "_"))
+        shutil.copytree(str(tmp_path / "base"), path)
+        before = set(_executions(spark))
+        write(path)
+        new = [e for i, e in _executions(spark).items() if i not in before]
+        got = tuple(
+            sum(_plan_nodes(e.physicalPlanDescription(), node) for e in new)
+            for node in (_SCAN, _JOIN)
+        )
+        assert got == counts, (shape, got)
+        assert spark.read.parquet(path).count() == 2_020, shape
 
 
 def test_delete_keys_cow_rewrites_only_holding_files(spark, tmp_path):

@@ -1,10 +1,10 @@
 """Replica of the round driver: plain SparkSession (driver's own config,
 NOT our factory), entry() smoke at sf0.001, queries vs oracle at sf0.01."""
-import sys, time, math, datetime as dt
+import sys, time, math, os, datetime as dt
 from collections import Counter
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
-import duckdb, os
+import duckdb
 
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions", "8")
