@@ -185,7 +185,7 @@ def main() -> None:
             from prisma_migrator_spark.sources.layout import optimize_layout
 
             sf_dir = optimize_layout(sf_dir)
-        except Exception:
+        except OSError:
             pass  # unwritable cache dir etc. -> raw fixtures still work
         # split sizing: Spark's own bytesPerCore heuristic
         # (min(maxPartitionBytes, max(openCost, total/parallelism)))

@@ -204,14 +204,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     hit = _ENSURED.get(memo_key)
     if hit is not None and hit[0] is df:
         return hit[1]
-    try:
-        sc = df.sparkSession.sparkContext
-        target = min_partitions or sc.defaultParallelism
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        # environments without RDD access (e.g. Spark Connect): leave
-        # the plan alone rather than fail the query
-        return df
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    current = df.rdd.getNumPartitions()
     out = df if current >= min(target, 8) else df.repartition(target)
     if len(_ENSURED) > 512:  # bound driver memory on churny sessions
         _ENSURED.clear()

@@ -22,10 +22,10 @@ Design for 100 TB:
 All hashes are md5-derived → deterministic across engines, runs, and
 partitionings (no JVM hash seeding).
 
-The Hamming-space joins (:func:`hamming_band_pairs`,
-:func:`incremental_hamming_pairs`) keep their signature frames in the
-session cache through ``operators/driver_state.pin``; the query
-registry releases them before it builds the next registered query.
+The Hamming-space join (:func:`hamming_band_pairs`, cold or against
+a stored signature index) keeps its signature frames in the session
+cache through ``operators/driver_state.pin``; the query registry
+releases them before it builds the next registered query.
 """
 
 from __future__ import annotations
@@ -150,12 +150,27 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _minhash_band_keys(num_hashes: int, band_size: int) -> Column:
+    """Array of one ``'<band>|h..|h..'`` key per band of ``band_size``
+    consecutive min-hashes — the bucket keys of both MinHash LSH
+    joins."""
+    return F.array(
+        *[
+            F.concat_ws(
+                "|",
+                F.lit(str(b)),
+                *[F.col(f"h{b * band_size + r}") for r in range(band_size)],
+            )
+            for b in range(num_hashes // band_size)
+        ]
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band of the signature become a
     candidate pair (id_a < id_b), with the signature-agreement
@@ -167,14 +182,6 @@ def lsh_candidate_pairs(
     bands with a single member never produce a row at all — the
     size filter drops them before any pair exists. Per-band memory
     is bounded by the bucket size.
-
-    ``max_bucket`` is the skew bound: a band shared by b docs emits
-    C(b,2) pairs, so one boilerplate bucket of 10^6 docs would emit
-    5*10^11 pairs and sink the stage. Buckets larger than the cap
-    are dropped (standard LSH practice — such docs are
-    near-identical boilerplate that exact dedup already collapses,
-    and true near-dups this common almost surely co-occur in a
-    smaller band too). None = no cap (exact oracle parity).
 
     Single-pass shape (r9, guide §2.3/§2.4): the full signature rides
     WITH its id into the band shuffle, and the agreement count is
@@ -188,18 +195,8 @@ def lsh_candidate_pairs(
     (doc, band) row — bounded, and strictly cheaper than re-deriving
     or re-shuffling the signature table twice.
     """
-    n_bands = num_hashes // band_size
     hs = [f"h{i}" for i in range(num_hashes)]
-    bands = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                F.lit(str(b)),
-                *[F.col(f"h{b * band_size + r}") for r in range(band_size)],
-            )
-            for b in range(n_bands)
-        ]
-    )
+    bands = _minhash_band_keys(num_hashes, band_size)
     banded = sigs.select(id_col, *hs, F.explode(bands).alias("band"))
     # per-band member array (sorted by id: struct comparison leads
     # with id_col, so array_sort orders members ascending by id and
@@ -207,9 +204,6 @@ def lsh_candidate_pairs(
     buckets = banded.groupBy("band").agg(
         F.array_sort(F.collect_list(F.struct(id_col, *hs))).alias("__m")
     )
-    size_ok = F.size("__m") >= 2
-    if max_bucket is not None:
-        size_ok = size_ok & (F.size("__m") <= max_bucket)
     m = F.col("__m")
 
     def _agree(x, y):
@@ -235,7 +229,7 @@ def lsh_candidate_pairs(
     # pair co-occurs in sees the same two signatures — so deduping on
     # the ids alone is deterministic.
     return (
-        buckets.where(size_ok)
+        buckets.where(F.size(m) >= 2)
         .select(F.explode(pair_arr).alias("p"))
         .select("p.id_a", "p.id_b", "p.agree")
         .dropDuplicates(["id_a", "id_b"])
@@ -336,17 +330,18 @@ def simhash(
     ±1 sums are INTEGER and fold inside one ``aggregate``
     higher-order function over the token array, so the signature is
     map-side with ZERO shuffle. The historical explode+groupBy plan
-    (kept as :func:`simhash_agg`, the pin's independent reference)
-    exploded every token into its own row, paid a corpus-wide
-    (doc, word-packed-hash) materialization, a per-doc shuffle and
-    two aggregate stages for sums that never needed to leave the row
-    — all its exploded tokens stay in the emitting task anyway.
+    (``simhash_agg`` in ``tests/simhash_ref.py``, the pins'
+    independent reference) exploded every token into its own row,
+    paid a corpus-wide (doc, word-packed-hash) materialization, a
+    per-doc shuffle and two aggregate stages for sums that never
+    needed to leave the row — all its exploded tokens stay in the
+    emitting task anyway.
     Measured at sf0.1 (n_bits=64): warm 1.7–2.3 s → 1.0–1.1 s, cold
     (codegen) 8.8 → 1.5 s. Bit-identity is pinned by
     ``test_simhash_expr_matches_agg_plan`` (integer sums are
     order-independent, same md5 nibbles).
 
-    NULL-text documents get no signature, as in :func:`simhash_agg`
+    NULL-text documents get no signature, as in ``simhash_agg``
     (exploding a NULL token array emits no row) and the DuckDB oracle
     (``UNNEST(NULL)``); ``simhash_expr`` alone would give each of them
     ``''``, making every NULL-text doc a near-dup of every other."""
@@ -357,56 +352,6 @@ def simhash(
         .where(F.col(text_col).isNotNull())
         .select(id_col, simhash_expr(F.col(text_col), n_bits).alias("simhash"))
     )
-
-
-def simhash_agg(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 16,
-) -> DataFrame:
-    """The explode+groupBy SimHash plan — :func:`simhash`'s original
-    form, kept as the independent reference for the bit-identity pin
-    and for pathological inputs where a single document's token
-    stream should not fold in one task."""
-    from prisma_migrator_spark.catalog import ensure_parallelism
-
-    df = ensure_parallelism(df)
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    tok = df.select(id_col, F.explode(words).alias("t")).withColumn(
-        "h", F.md5(F.col("t"))
-    )
-    # Pack the needed md5 hex digits into 32-bit integer words ONCE per
-    # token; each bit expression is then integer shift/mask instead of
-    # its own conv(substring(...)) — same nibbles, ~3x less expression
-    # work per row and far smaller generated code (64 string-parse
-    # trees made the n_bits=64 aggregate compile-heavy).
-    max_digit = max(simhash_bit_source(j, n_bits)[0] for j in range(n_bits))
-    n_words = max_digit // 8 + 1
-    tok = tok.select(
-        id_col,
-        *[
-            F.conv(F.substring("h", 8 * i + 1, 8), 16, 10)
-            .cast("long")
-            .alias(f"__w{i}")
-            for i in range(n_words)
-        ],
-    )
-
-    def bit(j: int):
-        digit, mask = simhash_bit_source(j, n_bits)
-        nib = F.shiftright(F.col(f"__w{digit // 8}"), 4 * (7 - digit % 8)).bitwiseAND(
-            F.lit(15)
-        )
-        return F.when(nib.bitwiseAND(F.lit(mask)) > 0, 1).otherwise(-1)
-
-    sums = tok.groupBy(id_col).agg(
-        *[F.sum(bit(j)).alias(f"s{j}") for j in range(n_bits)]
-    )
-    bits = F.concat(
-        *[F.when(F.col(f"s{j}") > 0, "1").otherwise("0") for j in range(n_bits)]
-    )
-    return sums.select(id_col, bits.alias("simhash"))
 
 
 def simhash16(
@@ -565,6 +510,19 @@ def hamming_bits(a: Column, b: Column, n_bits: int) -> Column:
     return out
 
 
+def _touching_pairs(df: DataFrame, key: str, id_: str, flag: str) -> DataFrame:
+    """``df`` self-joined on ``key``, keeping each unordered pair of
+    distinct rows with at least one ``flag`` row exactly once: side
+    ``a`` is always flagged, and a flagged ``b`` pairs only from its
+    lower ``id_``. With every row flagged this is the plain
+    ``a.id_ < b.id_`` self-join."""
+    return df.where(flag).alias("a").join(
+        df.alias("b"),
+        (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & ((F.col(f"a.{id_}") < F.col(f"b.{id_}")) | ~F.col(f"b.{flag}")),
+    )
+
+
 def hamming_band_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -574,6 +532,7 @@ def hamming_band_pairs(
     max_hamming: int = 3,
     max_bucket: int | None = None,
     band_arity: int = 1,
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """Generic banded Hamming self-join over ANY fixed-width '0'/'1'
     bit-string signature column — the machinery behind
@@ -621,6 +580,34 @@ def hamming_band_pairs(
     cap can only DROP FEWER pairs than before (recall is monotone
     better; uncapped output is set-identical to the direct join).
 
+    STORED INDEX (``index``): the decode-once incremental form for
+    the image/audio/video families, mirroring
+    :func:`incremental_lsh_pairs` for MinHash text dedup. ``index``
+    holds (id, signature) rows from the maintained index table,
+    written once when each document was ingested, so history media
+    has no payload column here and CANNOT be re-decoded; ``sigs`` is
+    the batch's delta, the only media the caller decodes
+    (``image_phash``/``afp64``/``vhash64`` — the cost that dominates
+    the cold job at every measured SF). The two hold disjoint ids: a
+    document already in the index is not new. Re-banding the index is a
+    signature-table scan (one short string per doc, no media bytes;
+    at 100 TB the index table is ~1/1000th of the corpus). Output =
+    the cold job over index ∪ delta restricted to pairs with ≥ 1
+    delta member, exactly: the stop-band cap counts over ALL
+    distinct signatures, as the cold job does.
+
+    The join itself is DELTA-PROPORTIONAL, not just the decode: rows
+    of ``sigs`` are flagged new, each signature group's rep is
+    *touched* when any member is new, and only touched reps band
+    against the full banded rep table (one side of the join is
+    batch-sized, :func:`_touching_pairs`) — Σ over buckets of
+    (delta reps in bucket × bucket size) instead of Σ bucket²,
+    three decimal orders off the join at a 0.1% daily batch on top
+    of the three off the decode. The Hamming-0 leg pairs new members
+    with their group the same way; cross pairs with no new member
+    drop before the output. Without ``index`` every row is new and
+    both joins are the plain ``a < b`` self-joins.
+
     The signature frame and its rep collapse are pinned
     (``operators/driver_state.pin``): they feed the membership map and
     the expansion legs, and are signature-sized (one short string per
@@ -631,12 +618,20 @@ def hamming_band_pairs(
     """
     from itertools import combinations
 
-    sigs = pin(sigs)
     n_bands = n_bits // band_bits
     if not 1 <= band_arity <= n_bands:
         raise ValueError(f"band_arity must be in [1, {n_bands}]")
-
-    reps = pin(sigs.groupBy(sig_col).agg(F.min(id_col).alias("__rid")))
+    flagged = sigs.select(id_col, sig_col, F.lit(True).alias("__new"))
+    if index is not None:
+        flagged = flagged.unionByName(
+            index.select(id_col, sig_col, F.lit(False).alias("__new"))
+        )
+    flagged = pin(flagged)
+    reps = pin(
+        flagged.groupBy(sig_col).agg(
+            F.min(id_col).alias("__rid"), F.max("__new").alias("__touch")
+        )
+    )
 
     def band(b: int):
         return F.substring(sig_col, b * band_bits + 1, band_bits)
@@ -651,16 +646,16 @@ def hamming_band_pairs(
     # here): the SIGNATURE rides the band shuffle alongside the rep id
     # instead of re-joining twice after the pair-distinct. The dedup
     # key is unchanged — sh_a/sh_b are functionally determined by
-    # ra/rb, so every candidate row for a (ra, rb) pair carries
-    # identical signatures and dropDuplicates([ra, rb]) yields the
-    # same pair set with the same attached strings — and the Hamming
-    # distance computes ONCE per distinct pair, after the dedup, from
-    # the carried columns. Cost trade, same as minhash: each banded
-    # row widens by one n_bits-char string (bounded), while BOTH
-    # rep-frame re-joins and their exchanges/broadcast builds
-    # disappear from the plan.
+    # ra/rb (each rep pair has one orientation, see _touching_pairs),
+    # so every candidate row for a (ra, rb) pair carries identical
+    # signatures and dropDuplicates([ra, rb]) yields the same pair set
+    # with the same attached strings — and the Hamming distance
+    # computes ONCE per distinct pair, after the dedup, from the
+    # carried columns. Cost trade, same as minhash: each banded row
+    # widens by one n_bits-char string (bounded), while BOTH rep-frame
+    # re-joins and their exchanges/broadcast builds disappear.
     banded = reps.select(
-        F.col("__rid"), F.col(sig_col), F.explode(F.array(*keys)).alias("band")
+        "__rid", "__touch", sig_col, F.explode(F.array(*keys)).alias("band")
     )
     if max_bucket is not None:
         ok = (
@@ -671,12 +666,7 @@ def hamming_band_pairs(
         )
         banded = banded.join(ok, "band")
     rep_pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.__rid") < F.col("b.__rid")),
-        )
+        _touching_pairs(banded, "band", "__rid", "__touch")
         .select(
             F.col("a.__rid").alias("ra"),
             F.col("b.__rid").alias("rb"),
@@ -689,182 +679,19 @@ def hamming_band_pairs(
     near_reps = rep_pairs.select(
         "ra", "rb", hamming.cast("int").alias("hamming")
     ).where(F.col("hamming") <= max_hamming)
-    # membership map: every doc -> its signature's representative id
-    mem = sigs.join(reps, sig_col).select(
-        F.col(id_col).alias("__mid"), "__rid"
-    )
-    cross = (
-        near_reps.join(
-            mem.select(F.col("__rid").alias("ra"),
-                       F.col("__mid").alias("__ia")), "ra")
-        .join(
-            mem.select(F.col("__rid").alias("rb"),
-                       F.col("__mid").alias("__ib")), "rb")
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            "hamming",
-        )
-    )
-    intra = (
-        mem.alias("a")
-        .join(
-            mem.alias("b"),
-            (F.col("a.__rid") == F.col("b.__rid"))
-            & (F.col("a.__mid") < F.col("b.__mid")),
-        )
-        .select(
-            F.col("a.__mid").alias("id_a"),
-            F.col("b.__mid").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
-
-
-def incremental_hamming_pairs(
-    existing_sigs: DataFrame,
-    delta_sigs: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "phash",
-    n_bits: int = 64,
-    band_bits: int = 8,
-    max_hamming: int = 7,
-    band_arity: int = 1,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """DELTA-touching Hamming near-dup pairs against a STORED
-    signature index — the decode-once incremental form of
-    :func:`hamming_band_pairs` for the image/audio/video families
-    (VERDICT r7 item 7), mirroring :func:`incremental_lsh_pairs` for
-    MinHash text dedup.
-
-    The decode-once property is STRUCTURAL: this function's contract
-    takes ``existing_sigs`` — (id, signature) rows from the
-    maintained index table, written once when each document was
-    ingested — so history media has no payload column here and
-    CANNOT be re-decoded. Per batch the work is: decode |delta| docs
-    (the caller's ``image_phash``/``afp64``/``vhash64`` pass — the
-    cost that dominates the cold job at every measured SF), then one
-    banded pair join over index ∪ delta signatures. Re-banding the
-    index is a signature-table scan (one short string per doc, no
-    media bytes); at 100 TB the index table is ~1/1000th of the
-    corpus and the scan is noise next to the avoided decode.
-
-    Output = the full recompute restricted to pairs with ≥ 1 delta
-    member, exactly (same signatures, same bucket-cap statistics —
-    the pytest pin compares against the full job row-for-row).
-
-    The banded join itself is DELTA-PROPORTIONAL, not just the
-    decode: only signature groups containing a delta member band
-    against the full banded rep table (one side of the join is
-    batch-sized), so the pair-generation work is Σ over buckets of
-    (delta reps in bucket × bucket size) instead of the cold job's
-    Σ bucket² — at a 0.1% daily batch over a 100 TB corpus that is
-    three decimal orders off the join, on top of the three orders
-    off the decode. Bucket-cap counts are computed over ALL distinct
-    signatures (identical statistics to the cold job, so capped
-    output parity holds); that pass is a scan of the signature
-    table, never the media. The index ∪ delta signature frame and its
-    rep collapse are pinned, as in :func:`hamming_band_pairs`."""
-    from itertools import combinations
-
-    all_sigs = pin(
-        existing_sigs.select(id_col, sig_col)
-        .withColumn("__new", F.lit(False))
-        .unionByName(
-            delta_sigs.select(id_col, sig_col).withColumn(
-                "__new", F.lit(True)
-            )
-        )
-    )
-    n_bands = n_bits // band_bits
-    if not 1 <= band_arity <= n_bands:
-        raise ValueError(f"band_arity must be in [1, {n_bands}]")
-
-    # collapse-exact-first across index ∪ delta, tracking whether any
-    # member of each signature group is new
-    reps = pin(
-        all_sigs.groupBy(sig_col).agg(
-            F.min(id_col).alias("__rid"),
-            F.max(F.col("__new").cast("int")).alias("__touch"),
-        )
-    )
-
-    def band(b: int):
-        return F.substring(sig_col, b * band_bits + 1, band_bits)
-
-    keys = [
-        F.concat_ws(
-            "|", F.lit("-".join(map(str, combo))), *[band(b) for b in combo]
-        )
-        for combo in combinations(range(n_bands), band_arity)
-    ]
-    banded = reps.select(
-        "__rid", "__touch", F.col(sig_col),
-        F.explode(F.array(*keys)).alias("band"),
-    )
-    if max_bucket is not None:
-        # cap statistics over ALL reps — byte-identical to the cold
-        # job's, so the capped pair set restricts exactly
-        ok = (
-            banded.groupBy("band")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") <= max_bucket)
-            .select("band")
-        )
-        banded = banded.join(ok, "band")
-    delta_banded = banded.where(F.col("__touch") == 1)
-    # r10 (same shape change as hamming_band_pairs): the signatures
-    # ride the pair join instead of re-joining the rep frame twice.
-    # least/greatest over (rid, sig) STRUCTS orders lexicographically
-    # by the unique rid, so each side's signature stays attached to
-    # the correct endpoint; sh_a/sh_b are functionally determined by
-    # (ra, rb), so the pair-distinct is unchanged.
-    pa = F.least(
-        F.struct(F.col("a.__rid"), F.col(f"a.{sig_col}")),
-        F.struct(F.col("b.__rid"), F.col(f"b.{sig_col}")),
-    )
-    pb = F.greatest(
-        F.struct(F.col("a.__rid"), F.col(f"a.{sig_col}")),
-        F.struct(F.col("b.__rid"), F.col(f"b.{sig_col}")),
-    )
-    rep_pairs = (
-        delta_banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.__rid") != F.col("b.__rid")),
-        )
-        .select(
-            pa["__rid"].alias("ra"),
-            pb["__rid"].alias("rb"),
-            pa[sig_col].alias("sh_a"),
-            pb[sig_col].alias("sh_b"),
-        )
-        .dropDuplicates(["ra", "rb"])
-    )
-    hamming = hamming_bits(F.col("sh_a"), F.col("sh_b"), n_bits)
-    near_reps = (
-        rep_pairs
-        .select("ra", "rb", hamming.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
-    # membership expansion carries the per-member delta flag so the
-    # ≥1-delta-member restriction lands BEFORE the output (a history×
-    # history pair inside a delta-touching group is not delta work)
-    mem = all_sigs.join(reps, sig_col).select(
+    # membership map: every doc -> its signature's representative id,
+    # with its new flag (a pair of two index docs is old work)
+    mem = flagged.join(reps, sig_col).select(
         F.col(id_col).alias("__mid"), "__rid", "__new"
     )
+
+    def side(r: str, i: str, n: str) -> DataFrame:
+        return mem.select(F.col("__rid").alias(r), F.col("__mid").alias(i),
+                          F.col("__new").alias(n))
+
     cross = (
-        near_reps.join(
-            mem.select(F.col("__rid").alias("ra"),
-                       F.col("__mid").alias("__ia"),
-                       F.col("__new").alias("__na")), "ra")
-        .join(
-            mem.select(F.col("__rid").alias("rb"),
-                       F.col("__mid").alias("__ib"),
-                       F.col("__new").alias("__nb")), "rb")
+        near_reps.join(side("ra", "__ia", "__na"), "ra")
+        .join(side("rb", "__ib", "__nb"), "rb")
         .where(F.col("__na") | F.col("__nb"))
         .select(
             F.least("__ia", "__ib").alias("id_a"),
@@ -872,19 +699,10 @@ def incremental_hamming_pairs(
             "hamming",
         )
     )
-    # hamming-0 leg delta-proportionally too: delta members × their
-    # signature group (a history×history same-signature pair is old
-    # work the cold job already emitted)
-    intra = (
-        mem.where("__new").alias("a")
-        .join(mem.alias("b"), "__rid")
-        .where(F.col("a.__mid") != F.col("b.__mid"))
-        .select(
-            F.least("a.__mid", "b.__mid").alias("id_a"),
-            F.greatest("a.__mid", "b.__mid").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    intra = _touching_pairs(mem, "__rid", "__mid", "__new").select(
+        F.least("a.__mid", "b.__mid").alias("id_a"),
+        F.greatest("a.__mid", "b.__mid").alias("id_b"),
+        F.lit(0).cast("int").alias("hamming"),
     )
     return cross.unionByName(intra)
 
@@ -1436,7 +1254,6 @@ def incremental_lsh_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates for a DELTA of new documents against an
     existing corpus's stored MinHash signature index, plus within-
@@ -1454,24 +1271,14 @@ def incremental_lsh_pairs(
     signatures never recomputed. Output matches the full recompute restricted to
     pairs with at least one delta member — which is what the
     registered query's oracle checks."""
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                F.lit(str(b)),
-                *[F.col(f"h{b * band_size + r}") for r in range(band_size)],
-            )
-            for b in range(n_bands)
-        ]
-    )
-    # localCheckpoint (not persist): both frames feed multiple branches
-    # (band joins + the agreement re-join), and a persist() here would
-    # pin executor storage for the session lifetime since a lazily
-    # returned DataFrame gives no unpersist point. Checkpointing
-    # materializes once, truncates lineage, and its blocks are GC'd
-    # with the DataFrame — the same discipline as the iterative plans.
-    existing_sigs = existing_sigs.localCheckpoint()
+    bands = _minhash_band_keys(num_hashes, band_size)
+    # localCheckpoint (not persist): the delta feeds two branches (the
+    # band join against the index and the in-batch banding), and a
+    # persist() here would pin executor storage for the session
+    # lifetime since a lazily returned DataFrame gives no unpersist
+    # point. Checkpointing materializes once, truncates lineage, and
+    # its blocks are GC'd with the DataFrame — the same discipline as
+    # the iterative plans. The index feeds the band join only.
     delta_sigs = delta_sigs.localCheckpoint()
     # r10 (the r9 lsh_candidate_pairs shape, ported): both sides carry
     # their full signature STRUCT through the band join, so the
@@ -1491,11 +1298,6 @@ def incremental_lsh_pairs(
         F.struct(*hs).alias("__sn"),
         F.explode(bands).alias("band"),
     )
-    if max_bucket is not None:
-        ok = eb.groupBy("band").agg(F.count(F.lit(1)).alias("__n")).where(
-            F.col("__n") <= max_bucket
-        ).select("band")
-        eb = eb.join(ok, "band")
     agree = sum(
         F.when(F.col("__sn")[h] == F.col("__so")[h], 1).otherwise(0)
         for h in hs
@@ -1510,15 +1312,13 @@ def incremental_lsh_pairs(
             ),
         )
     )
-    in_batch = lsh_candidate_pairs(
-        delta_sigs, id_col, num_hashes, band_size, max_bucket
-    )
+    in_batch = lsh_candidate_pairs(delta_sigs, id_col, num_hashes, band_size)
     return cross.unionByName(in_batch).dropDuplicates(["id_a", "id_b"])
 
 
 def simhash_expr(text_col: Column, n_bits: int = 16) -> Column:
     """SimHash as a pure JVM COLUMN EXPRESSION — bit-identical to
-    :func:`simhash`'s explode+groupBy plan (pytest-pinned), but with
+    the explode+groupBy plan (``simhash_agg``, pytest-pinned), but with
     ZERO shuffle: the per-token ±1 projections fold inside one
     ``aggregate`` higher-order function over the token array (one
     md5 per token, nibble arithmetic per bit), so the signature is
@@ -1529,12 +1329,7 @@ def simhash_expr(text_col: Column, n_bits: int = 16) -> Column:
       ``withColumn("simhash", simhash_expr(col("text")))`` composes
       directly with ``streaming_near_dup_verdicts``.
     - map-side batch stages where the doc row must stay intact
-      (no explode/regroup round trip).
-
-    The explode+groupBy form remains the right plan when one
-    document's token stream outgrows a task (its partial aggregation
-    splits across partitions); for ordinary web-document lengths the
-    row-local form is strictly cheaper."""
+      (no explode/regroup round trip)."""
     from prisma_migrator_spark.llm.text import normalized_text
 
     toks = F.split(normalized_text(text_col), " ")

@@ -505,7 +505,7 @@ def save_ivf_index(
 ) -> list[list[float]]:
     """Persist an IVF index at ingest so probe batches never retrain
     or reassign — the ANN analog of the stored-signature dedup
-    indexes (`incremental_lsh_pairs` / `incremental_hamming_pairs`):
+    indexes (`incremental_lsh_pairs` / `hamming_band_pairs(index=)`):
     the expensive parts of `topk_ivf` are the k-means iterations and
     the corpus assignment scan, both one-time ingest work, while a
     probe batch's own cost is |probes|·nprobe·(n/C).

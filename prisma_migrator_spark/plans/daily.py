@@ -32,8 +32,8 @@ step. The pipeline:
 6. **Modality dedup vs the stored pHash index** — history image
    signatures persisted at "ingest time" and read back (history
    media is NEVER re-decoded — only the |delta| survivors are
-   decoded); `incremental_hamming_pairs` supplies the pairs, same
-   history-wins/min-id drop rule.
+   decoded); `hamming_band_pairs` against the stored index supplies
+   the pairs, same history-wins/min-id drop rule.
 7. **Pack** — survivors stream-packed into 512-token contexts
    (`pack_stream`, the two-level distributed prefix sum).
 
@@ -193,7 +193,7 @@ def _write_phash_index(
 def daily_batch_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See module docstring — the end-to-end composed daily batch."""
     from prisma_migrator_spark.llm.dedup import (
-        incremental_hamming_pairs,
+        hamming_band_pairs,
         incremental_lsh_pairs,
         minhash_signatures,
         shingles,
@@ -317,8 +317,7 @@ def daily_batch_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor_phash = image_phash(
         attach_image_variant_payload(after_minhash)
     )
-    ham_pairs = incremental_hamming_pairs(
-        phash_index,
+    ham_pairs = hamming_band_pairs(
         survivor_phash,
         id_col="doc_id",
         sig_col="phash",
@@ -327,6 +326,7 @@ def daily_batch_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hamming=maxham,
         band_arity=arity,
         max_bucket=cap,
+        index=phash_index,
     )
     ham_drops = pair_drops(ham_pairs, after_minhash.select("doc_id"))
     survivors = after_minhash.join(

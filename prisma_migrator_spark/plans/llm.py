@@ -4205,8 +4205,8 @@ def incremental_image_near_dup_q(
     `incremental_lsh_dedup`): the corpus half contributes only its
     64-bit signatures (one short string per image — what a real
     pipeline persists at ingest), the delta is decoded and hashed
-    once, and `llm/dedup.incremental_hamming_pairs` bands index ∪
-    delta and keeps pairs touching the delta.
+    once, and `llm/dedup.hamming_band_pairs` (with ``index=``) bands
+    index ∪ delta and keeps pairs touching the delta.
 
     Decode cost per batch is |delta| — the term that dominates every
     measured cold run (sf10 image pairs: 132 s, decode-bound) —
@@ -4215,7 +4215,7 @@ def incremental_image_near_dup_q(
     `image_near_dup_pairs` restricted to pairs with ≥ 1 delta
     member (pinned row-for-row in pytest)."""
     from prisma_migrator_spark.catalog import ensure_parallelism
-    from prisma_migrator_spark.llm.dedup import incremental_hamming_pairs
+    from prisma_migrator_spark.llm.dedup import hamming_band_pairs
     from prisma_migrator_spark.llm.multimodal import (
         attach_image_variant_payload,
         image_phash,
@@ -4235,8 +4235,7 @@ def incremental_image_near_dup_q(
     delta = with_cut.where(F.col("doc_id") > F.col("__cut")).drop("__cut")
     existing_sigs = image_phash(attach_image_variant_payload(existing))
     delta_sigs = image_phash(attach_image_variant_payload(delta))
-    return incremental_hamming_pairs(
-        existing_sigs,
+    return hamming_band_pairs(
         delta_sigs,
         id_col="doc_id",
         sig_col="phash",
@@ -4245,6 +4244,7 @@ def incremental_image_near_dup_q(
         max_hamming=maxham,
         band_arity=arity,
         max_bucket=cap,
+        index=existing_sigs,
     )
 
 

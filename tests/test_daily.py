@@ -45,7 +45,7 @@ def _row(rows, stage):
 @pytest.mark.slow  # multi-minute: default-deselected tier (pytest.ini)
 def test_daily_batch_pipeline_matches_stage_recompute(spark, sf_dir):
     from prisma_migrator_spark.llm.dedup import (
-        incremental_hamming_pairs,
+        hamming_band_pairs,
         incremental_lsh_pairs,
         minhash_signatures,
         shingles,
@@ -141,8 +141,7 @@ def test_daily_batch_pipeline_matches_stage_recompute(spark, sf_dir):
     arity, maxham, cap = _sig_band_arity(docs)
     hist_ph = image_phash(attach_image_variant_payload(history))
     surv_ph = image_phash(attach_image_variant_payload(after_mh))
-    ham_pairs = incremental_hamming_pairs(
-        hist_ph,
+    ham_pairs = hamming_band_pairs(
         surv_ph,
         id_col="doc_id",
         sig_col="phash",
@@ -151,6 +150,7 @@ def test_daily_batch_pipeline_matches_stage_recompute(spark, sf_dir):
         max_hamming=maxham,
         band_arity=arity,
         max_bucket=cap,
+        index=hist_ph,
     )
     ham_drops = pair_drops(ham_pairs, after_mh.select("doc_id"))
     survivors = after_mh.join(

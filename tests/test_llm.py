@@ -2928,7 +2928,7 @@ def test_incremental_image_near_dup_delta_only_decode_and_parity(spark, sf_dir):
     would vanish."""
     from pyspark.sql import Row
 
-    from prisma_migrator_spark.llm.dedup import incremental_hamming_pairs
+    from prisma_migrator_spark.llm.dedup import hamming_band_pairs
     from prisma_migrator_spark.llm.multimodal import (
         image_phash,
         pattern_rows,
@@ -2977,8 +2977,8 @@ def test_incremental_image_near_dup_delta_only_decode_and_parity(spark, sf_dir):
     )
     pairs = {
         (r.id_a, r.id_b)
-        for r in incremental_hamming_pairs(
-            hist, image_phash(delta_media), sig_col="phash"
+        for r in hamming_band_pairs(
+            image_phash(delta_media), sig_col="phash", index=hist
         ).collect()
     }
     assert pairs == {(0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}, pairs
@@ -3055,10 +3055,7 @@ def test_incremental_hamming_pairs_edges_and_cap_parity(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from prisma_migrator_spark.llm.dedup import (
-        hamming_band_pairs,
-        incremental_hamming_pairs,
-    )
+    from prisma_migrator_spark.llm.dedup import hamming_band_pairs
 
     def sig(bits_on):
         s = ["0"] * 64
@@ -3077,7 +3074,7 @@ def test_incremental_hamming_pairs_edges_and_cap_parity(spark):
 
     empty = sigs.where(F.lit(False))
     # (a) empty delta
-    assert incremental_hamming_pairs(sigs, empty, **kw).count() == 0
+    assert hamming_band_pairs(empty, index=sigs, **kw).count() == 0
     # (b) empty index == full job on the delta
     full_delta = {
         (r.id_a, r.id_b, r.hamming)
@@ -3085,7 +3082,7 @@ def test_incremental_hamming_pairs_edges_and_cap_parity(spark):
     }
     got = {
         (r.id_a, r.id_b, r.hamming)
-        for r in incremental_hamming_pairs(empty, sigs, **kw).collect()
+        for r in hamming_band_pairs(sigs, index=empty, **kw).collect()
     }
     assert got == full_delta and len(full_delta) > 0
     # (c) capped parity: cap=3 drops the shared band-0 bucket (9
@@ -3102,7 +3099,7 @@ def test_incremental_hamming_pairs_edges_and_cap_parity(spark):
     }
     got_cap = {
         (r.id_a, r.id_b)
-        for r in incremental_hamming_pairs(hist, delta, **capped).collect()
+        for r in hamming_band_pairs(delta, index=hist, **capped).collect()
     }
     assert got_cap == expected
     # and the cap actually bit (fewer pairs than uncapped)
@@ -3116,7 +3113,7 @@ def test_incremental_hamming_pairs_edges_and_cap_parity(spark):
     }
     got_a2 = {
         (r.id_a, r.id_b)
-        for r in incremental_hamming_pairs(hist, delta, **a2).collect()
+        for r in hamming_band_pairs(delta, index=hist, **a2).collect()
     }
     assert got_a2 == {(a, b) for (a, b) in full_a2 if a > 3 or b > 3}
     assert len(got_a2) > 0
@@ -3129,10 +3126,7 @@ def test_incremental_hamming_pairs_audio_parity(spark):
     same machinery image/video ride, no modality-specific code."""
     from pyspark.sql import functions as F
 
-    from prisma_migrator_spark.llm.dedup import (
-        hamming_band_pairs,
-        incremental_hamming_pairs,
-    )
+    from prisma_migrator_spark.llm.dedup import hamming_band_pairs
     from prisma_migrator_spark.llm.multimodal import (
         attach_audio_variant_payload,
         audio_fingerprint,
@@ -3152,13 +3146,56 @@ def test_incremental_hamming_pairs_audio_parity(spark):
     expected = {(a, b) for (a, b) in full if a >= cut or b >= cut}
     got = {
         (r.id_a, r.id_b)
-        for r in incremental_hamming_pairs(
-            sigs.where(F.col("doc_id") < cut),
+        for r in hamming_band_pairs(
             sigs.where(F.col("doc_id") >= cut),
+            index=sigs.where(F.col("doc_id") < cut),
             **kw,
         ).collect()
     }
     assert got == expected and len(expected) > 0
+
+
+def test_hamming_band_pairs_index_emits_each_pair_once(spark):
+    """Against a stored index every output pair is one row, not one
+    per band or per leg: a signature group with two history and two
+    delta members, plus near groups on both sides of the cut, gives
+    the cold job's delta-touching pairs with no duplicate row (the
+    set-based parity pins cannot see one)."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from prisma_migrator_spark.llm.dedup import hamming_band_pairs
+
+    def sig(bits_on):
+        return "".join("1" if b in bits_on else "0" for b in range(64))
+
+    groups = {  # signature -> member ids; ids >= 20 are the delta
+        sig([0, 1]): [0, 1, 20, 21],
+        sig([0, 1, 9]): [2, 22],
+        sig([0, 1, 9, 17]): [3],
+        sig([0, 1, 9, 17, 25]): [23],
+        sig(range(32, 40)): [4, 24],
+    }
+    sigs = spark.createDataFrame(
+        [Row(doc_id=i, phash=s) for s, ids in groups.items() for i in ids]
+    ).localCheckpoint()
+    hist = sigs.where(F.col("doc_id") < 20)
+    delta = sigs.where(F.col("doc_id") >= 20)
+    for arity, maxham in ((1, 7), (2, 6)):
+        kw = dict(id_col="doc_id", sig_col="phash", n_bits=64, band_bits=8,
+                  max_hamming=maxham, band_arity=arity)
+        full = hamming_band_pairs(sigs, **kw)
+        expected = {
+            tuple(r) for r in full.collect() if r.id_a >= 20 or r.id_b >= 20
+        }
+        got = hamming_band_pairs(delta, index=hist, **kw)
+        assert got.count() == got.distinct().count() == len(expected)
+        assert {tuple(r) for r in got.collect()} == expected
+        assert full.count() == full.distinct().count()
+        # same-group pairs across the cut and cross-group pairs both occur
+        assert {(0, 20), (20, 21), (2, 20), (22, 23)} <= {
+            (a, b) for a, b, _ in expected
+        }
 
 
 def test_image_phash_drops_undecodable_payloads(spark):
@@ -3932,8 +3969,10 @@ def test_simhash_expr_matches_agg_plan(spark, sf_dir):
     """The row-local simhash (r10 default, HOF form) is BIT-IDENTICAL
     to the explode+groupBy reference plan (simhash_agg) at both
     widths — same md5 nibbles, same ±1 integer sums. simhash_agg is
-    kept precisely so this pin has an independent reference."""
-    from prisma_migrator_spark.llm.dedup import simhash_agg, simhash_expr
+    kept in ``tests/simhash_ref.py`` precisely so this pin has an
+    independent reference."""
+    from prisma_migrator_spark.llm.dedup import simhash_expr
+    from tests.simhash_ref import simhash_agg
 
     docs = load_table(spark, sf_dir, "documents")
     for nb in (16, 64):
@@ -3955,8 +3994,9 @@ def test_simhash_null_and_blank_text_match_agg_plan_and_oracle(spark):
     hash alike."""
     import duckdb
 
-    from prisma_migrator_spark.llm.dedup import simhash, simhash_agg
+    from prisma_migrator_spark.llm.dedup import simhash
     from prisma_migrator_spark.plans.llm import _SIMHASH_ORACLE
+    from tests.simhash_ref import simhash_agg
 
     rows = [(1, "the quick fox"), (2, None), (3, ""), (4, "   "), (5, "\t\n")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")

@@ -67,7 +67,7 @@ def test_next_registered_query_releases_every_pin(spark, sf_dir):
     for name in (
         "copurchase_triangles",  # graph._snapshot_edges
         "simhash_near_dup",  # dedup.hamming_band_pairs
-        "incremental_image_near_dup",  # dedup.incremental_hamming_pairs
+        "incremental_image_near_dup",  # dedup.hamming_band_pairs(index=)
         "funnel_view_click_purchase",
         "corpus_recipe",
     ):

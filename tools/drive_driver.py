@@ -1,6 +1,6 @@
 """Replica of the round driver: plain SparkSession (driver's own config,
 NOT our factory), entry() smoke at sf0.001, queries vs oracle at sf0.01."""
-import sys, time, math, os, datetime as dt
+import sys, time, math, os, datetime as dt, decimal
 from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
@@ -37,10 +37,7 @@ def norm(v):
         return tuple(sorted((k, norm(x)) for k, x in v.items()))
     if isinstance(v, bytearray):
         return bytes(v)
-    try:
-        import decimal
-        if isinstance(v, decimal.Decimal): return round(float(v), 9)
-    except Exception: pass
+    if isinstance(v, decimal.Decimal): return round(float(v), 9)
     return v
 
 qs, oracles = e.queries(), e.oracle_sql()
