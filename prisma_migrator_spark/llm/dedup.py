@@ -14,8 +14,12 @@ Design for 100 TB:
   near-dup = signatures within Hamming distance d. Bits derive from
   md5 hex (engine-portable) rather than a JVM-private hash so the
   DuckDB oracle can reproduce them bit-for-bit.
-- **n-gram Jaccard**: exact set overlap via a shingle-keyed join —
-  |A∩B| from co-occurring shingles, |A∪B| = |A|+|B|−|A∩B|.
+- **n-gram Jaccard**: exact set overlap via :func:`posting_pairs`,
+  the posting-list self-join that plans/llm.py's containment and
+  TF-IDF cosine share — |A∩B| from co-occurring shingles,
+  |A∪B| = |A|+|B|−|A∩B|. One guard caps all three joins: its
+  candidate pairs, counted by :func:`posting_pair_count`, against
+  ``MAX_CANDIDATE_PAIRS``.
 - **embedding cosine**: near-dup pairs above a cosine threshold; the
   scale path buckets candidates first (see similarity.lsh_buckets).
 
@@ -243,60 +247,101 @@ def lsh_candidate_pairs(
     )
 
 
+#: The one cap on a posting-list self-join, in the unit
+#: :func:`posting_pair_count` counts: unordered candidate pairs, one
+#: per shared key. Measured at 50k docs (sf1), containment's shingles
+#: give about 23 M and TF-IDF's kept terms about 21 M, so both joins
+#: run; at 500k docs (sf10) they give about 1.1 B and 1.9 B and raise.
+MAX_CANDIDATE_PAIRS = 50_000_000
+
+
+def posting_pair_count(postings: DataFrame, key: str) -> int:
+    """Σ df(df−1)/2 over the keys of ``postings``: the exact row count
+    of their ``a.id < b.id`` self-join on ``key``, before any per-pair
+    aggregate. Runs one aggregate over the key histogram."""
+    hist = postings.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
+    twice = hist.agg(F.sum(F.col("df") * (F.col("df") - 1))).first()[0]
+    return (twice or 0) // 2
+
+
+def posting_pairs(
+    postings: DataFrame,
+    key: str,
+    id_col: str,
+    weight: str | None = None,
+    df_cap: int | None = None,
+    max_candidate_pairs: int | None = MAX_CANDIDATE_PAIRS,
+    fallback: str = "a capped variant",
+) -> DataFrame:
+    """Every pair of ids sharing a posting ``key``, from one
+    ``a.id < b.id`` self-join of the posting list (cost Σ df², not
+    n²): ``(id_a, id_b, overlap, mass_a, mass_b)``.
+
+    ``overlap`` counts the shared keys, or sums ``wa·wb`` over them
+    when ``weight`` names a column; ``mass`` is each id's posting count,
+    or its Σ w². Keys with df > ``df_cap`` generate no pairs but still
+    count in the masses.
+
+    Guard: the candidate mass grows with the square of the common keys'
+    df (boilerplate shingles, mid-frequency terms), so before the join
+    is built this counts its rows with :func:`posting_pair_count` and
+    raises past ``max_candidate_pairs``, naming ``fallback``, the
+    caller's scale path. ``None`` skips the count."""
+    src = postings
+    if df_cap is not None:
+        low = postings.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
+        src = postings.join(low.where(F.col("df") <= df_cap).select(key), key)
+    if max_candidate_pairs is not None:
+        est = posting_pair_count(src, key)
+        if est > max_candidate_pairs:
+            raise ValueError(
+                f"{est:,} candidate pairs over {key} exceed max_candidate_pairs="
+                f"{max_candidate_pairs:,}; use {fallback} or raise the cap."
+            )
+    ws = [] if weight is None else [weight]
+    a = src.select(id_col, key, *ws).toDF("id_a", key, *("wa" for _ in ws))
+    b = src.select(id_col, key, *ws).toDF("id_b", key, *("wb" for _ in ws))
+    count = F.count(F.lit(1))
+    overlap = count if weight is None else F.sum(F.col("wa") * F.col("wb"))
+    mass = count if weight is None else F.sum(F.col(weight) * F.col(weight))
+    masses = postings.groupBy(id_col).agg(mass)
+    return (
+        a.join(b, key)
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(overlap.alias("overlap"))
+        .join(masses.toDF("id_a", "mass_a"), "id_a")
+        .join(masses.toDF("id_b", "mass_b"), "id_b")
+    )
+
+
 def ngram_jaccard_pairs(
     sh: DataFrame,
     id_col: str = "doc_id",
     min_jaccard: float = 0.0,
-    max_candidate_pairs: int | None = 50_000_000,
+    max_candidate_pairs: int | None = MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
     """Exact Jaccard over shingle sets for every pair sharing ≥1
-    shingle. Join is shingle-keyed (cost Σ df(shingle)², not n²).
+    shingle, from :func:`posting_pairs`: |A∩B| is the overlap,
+    |A∪B| = |A| + |B| − |A∩B| from the masses.
 
-    Guard: Σ df² explodes on boilerplate-heavy corpora (measured 830 s
-    naive vs 5.3 s prefix-filtered at 20k docs — PERF.md #23), so
-    before building the join this estimates the candidate-pair count
-    from the shingle-df histogram (ONE cheap count-aggregate over the
-    shingle frame) and raises past ``max_candidate_pairs``, pointing
-    at :func:`ngram_jaccard_pairs_prefix` — the PPJoin-style scale
-    path. Pass ``None`` to skip the estimate (e.g. when the caller
-    already knows the corpus is near-dup-sparse)."""
-    if max_candidate_pairs is not None:
-        est = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("cand"))
-            .first()["cand"]
-        ) or 0
-        if est > max_candidate_pairs:
-            raise ValueError(
-                f"ngram_jaccard_pairs: ~{int(est):,} candidate pairs from the "
-                f"shingle-df histogram exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,} — this corpus is boilerplate-heavy; "
-                "use ngram_jaccard_pairs_prefix (prefix-filtered, same "
-                "result above its threshold) or raise the cap explicitly."
-            )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("n_inter"))
+    The join's guard raises past ``max_candidate_pairs`` candidate
+    pairs (Σ df(df−1)/2 over the shingles) and points at
+    :func:`ngram_jaccard_pairs_prefix`, the PPJoin-style scale path:
+    boilerplate-heavy corpora explode the full join (measured 830 s
+    naive vs 5.3 s prefix-filtered at 20k docs, PERF.md #23). Pass
+    ``None`` to skip the count (e.g. when the caller already knows the
+    corpus is near-dup-sparse)."""
+    pp = posting_pairs(
+        sh,
+        "shingle",
+        id_col,
+        max_candidate_pairs=max_candidate_pairs,
+        fallback="ngram_jaccard_pairs_prefix",
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= min_jaccard)
+    jac = F.col("overlap") / (F.col("mass_a") + F.col("mass_b") - F.col("overlap"))
+    return pp.select("id_a", "id_b", F.round(jac, 6).alias("jaccard")).where(
+        F.col("jaccard") >= min_jaccard
     )
 
 

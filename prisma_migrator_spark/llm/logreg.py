@@ -36,8 +36,6 @@ the feature space outgrows unrolled expressions.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -200,32 +198,3 @@ def score_logreg(
     return feats.withColumn(
         "p_keep", F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     )
-
-
-def train_logreg_py(
-    rows: list[tuple[list[float], float]],
-    dim: int,
-    lr: float = 2.0,
-    n_iters: int = 20,
-    l2: float = 0.0,
-) -> tuple[list[float], list[float]]:
-    """Pure-Python reference of the EXACT same GD (same init, lr,
-    clamp, update) — the parity oracle for pytest: Spark and this
-    must agree on the trajectory up to float-summation order."""
-    w = [0.0] * dim
-    losses: list[float] = []
-    for _ in range(n_iters):
-        g = [0.0] * dim
-        total = 0.0
-        for x, y in rows:
-            z = sum(wj * xj for wj, xj in zip(w, x))
-            p = 1.0 / (1.0 + math.exp(-z))
-            p = min(max(p, _EPS), 1.0 - _EPS)
-            total += -(y * math.log(p) + (1.0 - y) * math.log(1.0 - p))
-            r = p - y
-            for j in range(dim):
-                g[j] += r * x[j]
-        n = max(len(rows), 1)
-        losses.append(total / n)
-        w = [wj - lr * ((g[j] / n) + l2 * wj) for j, wj in enumerate(w)]
-    return w, losses

@@ -15,18 +15,20 @@ from pyspark.sql import functions as F
 
 from prisma_migrator_spark.catalog import load_table
 from prisma_migrator_spark.llm.dedup import (
+    MAX_CANDIDATE_PAIRS,
     dedupe_exact,
     embedding_near_dup_pairs,
     exact_dedup_groups,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    posting_pairs,
     shingles,
     simhash16,
     simhash_near_dup_pairs,
 )
 from prisma_migrator_spark.llm.similarity import topk_bruteforce, topk_lsh
-from prisma_migrator_spark.llm.text import rolling_fingerprint, text_stats
+from prisma_migrator_spark.llm.text import rolling_fingerprint, text_stats, tokens
 from prisma_migrator_spark.plans.registry import QUERIES, query
 
 # --- text analysis -----------------------------------------------------
@@ -2830,18 +2832,17 @@ def doc_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles are >= 80% contained in the other — catches quotes,
     excerpts, and doc-embedded-in-doc cases that symmetric Jaccard
     misses (a short doc inside a long one has low Jaccard but high
-    containment). Same shingle-keyed Σ df² join machinery as
-    ngram_jaccard_pairs — and the same Σ df² guard: common shingles'
-    df grows with the corpus, so the raw self-join's candidate mass
-    is quadratic (measured 1.2M → 46.6M → 2.23B from 5k → 50k → 500k
-    docs; the unguarded form DNF'd the sf10 curve run). Past the
-    guard, use :func:`doc_containment_pairs_capped_q` — candidate
-    generation from low-df shingles with exact verification."""
-    return _doc_containment(
-        load_table(spark, sf_dir, "documents"),
-        df_cap=None,
-        max_candidate_pairs=500_000_000,
-    )
+    containment). Same shingle-keyed pair join as ngram_jaccard_pairs
+    (``llm.dedup.posting_pairs``) and the same guard: it counts the
+    join's candidate pairs, Σ df(df−1)/2 over the shingles, and raises
+    past ``MAX_CANDIDATE_PAIRS`` (50 M). Common shingles' df grows with
+    the corpus, so that count is quadratic: Σ df² measured 1.2M →
+    46.6M → 2.23B from 5k → 50k → 500k docs, about 0.6M → 23M → 1.1B
+    pairs, so sf1 runs and sf10 (whose unguarded run DNF'd the curve)
+    raises. Past the guard, use :func:`doc_containment_pairs_capped_q`
+    — candidate generation from low-df shingles with exact
+    verification."""
+    return _doc_containment(load_table(spark, sf_dir, "documents"), df_cap=None)
 
 
 #: Stop-shingle df cap for the capped containment variant's CANDIDATE
@@ -2861,143 +2862,66 @@ _CONTAINMENT_THRESHOLD = 0.8
 def _doc_containment(
     docs: DataFrame,
     df_cap: int | None,
-    max_candidate_pairs: int | None,
+    max_candidate_pairs: int | None = MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
-    from prisma_migrator_spark.llm.dedup import shingles
-
+    """Containment |A∩B| / min(|A|, |B|) over 3-shingle sets, from
+    :func:`posting_pairs` (the sizes are its masses). ``df_cap=None``
+    counts every shared shingle in the guarded join; a ``df_cap``
+    selects the capped mode described inline."""
     sh = shingles(docs, k=3)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    if df_cap is None:
-        if max_candidate_pairs is not None:
-            est = (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .agg(F.sum(F.col("df") * F.col("df")).alias("cand"))
-                .first()["cand"]
-            ) or 0
-            if est > max_candidate_pairs:
-                raise ValueError(
-                    f"doc_containment_pairs: Σ df² ≈ {int(est):,} candidate "
-                    f"rows from the shingle-df histogram exceeds "
-                    f"max_candidate_pairs={max_candidate_pairs:,}; use "
-                    "doc_containment_pairs_capped (low-df candidate "
-                    "generation + exact verification) or raise the cap."
-                )
-        pair_src = sh
-    else:
-        stats = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        pair_src = sh.join(
-            stats.where(F.col("df") <= df_cap).select("shingle"), "shingle"
-        )
-    a, b = pair_src.alias("a"), pair_src.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.shingle") == F.col("b.shingle"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    if df_cap is None:
-        # every shared shingle generated the pair, so candidate
-        # multiplicity IS the intersection size — no second pass
-        inter = cand.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("n_inter")
-        )
-    else:
-        # Candidates came from LOW-df shingles only, but the
+    pp = posting_pairs(
+        sh,
+        "shingle",
+        "doc_id",
+        df_cap=df_cap,
+        max_candidate_pairs=max_candidate_pairs,
+        fallback="doc_containment_pairs_capped",
+    )
+    if df_cap is not None:
+        # Capped mode: candidates came from LOW-df shingles only, so
+        # the overlap counts the shared low shingles, but the
         # intersection must count ALL shared shingles. The r5 scale
         # batch killed the obvious form (fan each distinct pair out by
         # its FULL shingle sets and re-join): at 500k docs that is
         # 26.9M candidate pairs × ~53 shingles ≈ 1.4B intermediate
         # rows — a 60 GB shuffle spill that filled the disk. Exact
         # replacement with no fan-out:
-        #   inter = low_inter + high_inter, where
-        #   low_inter  = candidate multiplicity (shared LOW shingles —
-        #                the pair-generating join already emits one row
-        #                per shared low shingle);
-        #   high_inter = |H_a ∩ H_b| over per-doc HIGH-shingle sets,
-        #                which are tiny: df > cap shingles are a
-        #                boilerplate-sized global vocabulary (7.9k of
-        #                20.7M distinct shingles at 500k docs).
-        # Between the two, a LOSSLESS bound prunes the candidate mass:
-        # n_inter ≤ low_inter + min(|H_a|, |H_b|), and measured
+        #   n_inter = overlap + |H_a ∩ H_b| over per-doc HIGH-shingle
+        #   sets, which are tiny: df > cap shingles are a
+        #   boilerplate-sized global vocabulary (7.9k of 20.7M distinct
+        #   shingles at 500k docs).
+        # Before the array join, a LOSSLESS bound prunes the candidate
+        # mass: n_inter ≤ overlap + min(|H_a|, |H_b|), and measured
         # candidate multiplicity is ≈1.007 (random single-shingle
         # collisions), so pairs that cannot reach the threshold drop
-        # before any array join — survivors ≈ true near-dups.
-        low_inter = cand.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("low_inter")
-        )
+        # before any array join — survivors ≈ true near-dups. Its 1e-6
+        # relative slack: the final filter compares ROUND(c, 6) ≥ 0.8,
+        # which admits true ratios down to 0.7999995 — the bound must
+        # not cut a pair the rounded filter would keep.
+        high = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         hset = (
-            sh.join(
-                stats.where(F.col("df") > df_cap).select("shingle"),
-                "shingle",
-            )
+            sh.join(high.where(F.col("df") > df_cap).select("shingle"), "shingle")
             .groupBy("doc_id")
             .agg(F.sort_array(F.collect_set("shingle")).alias("hs"))
         )
-        docstats = (
-            sizes.join(
-                hset.select("doc_id", F.size("hs").alias("hsz")),
-                "doc_id",
-                "left",
-            )
-            .na.fill({"hsz": 0})
-        )
-        # 1e-6 relative slack: the final filter compares ROUND(c, 6)
-        # ≥ 0.8, which admits true ratios down to 0.7999995 — the
-        # bound must not cut a pair the rounded filter would keep
-        bound = (F.col("low_inter") + F.least("hsz_a", "hsz_b")) / F.least(
-            "sz_a", "sz_b"
-        ) >= _CONTAINMENT_THRESHOLD - 1e-6
+        hsz = hset.select("doc_id", F.size("hs"))
+        high_bound = F.least("hsz_a", "hsz_b")
+        bound = (F.col("overlap") + high_bound) / F.least("mass_a", "mass_b")
         empty = F.array().cast("array<string>")
-        inter = (
-            low_inter.join(
-                docstats.select(
-                    F.col("doc_id").alias("id_a"),
-                    F.col("sz").alias("sz_a"),
-                    F.col("hsz").alias("hsz_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                docstats.select(
-                    F.col("doc_id").alias("id_b"),
-                    F.col("sz").alias("sz_b"),
-                    F.col("hsz").alias("hsz_b"),
-                ),
-                "id_b",
-            )
-            .where(bound)
-            .join(
-                hset.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a")),
-                "id_a",
-                "left",
-            )
-            .join(
-                hset.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b")),
-                "id_b",
-                "left",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("low_inter")
-                    + F.size(
-                        F.array_intersect(
-                            F.coalesce("hs_a", empty),
-                            F.coalesce("hs_b", empty),
-                        )
-                    )
-                ).alias("n_inter"),
-            )
+        hs_a, hs_b = F.coalesce("hs_a", empty), F.coalesce("hs_b", empty)
+        high_inter = F.size(F.array_intersect(hs_a, hs_b))
+        pp = (
+            pp.join(hsz.toDF("id_a", "hsz_a"), "id_a", "left")
+            .join(hsz.toDF("id_b", "hsz_b"), "id_b", "left")
+            .na.fill(0, ["hsz_a", "hsz_b"])
+            .where(bound >= _CONTAINMENT_THRESHOLD - 1e-6)
+            .join(hset.toDF("id_a", "hs_a"), "id_a", "left")
+            .join(hset.toDF("id_b", "hs_b"), "id_b", "left")
+            .withColumn("overlap", F.col("overlap") + high_inter)
         )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    cont = F.col("n_inter") / F.least("sz_a", "sz_b")
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
-        .where(F.col("containment") >= _CONTAINMENT_THRESHOLD)
+    cont = F.col("overlap") / F.least("mass_a", "mass_b")
+    return pp.select("id_a", "id_b", F.round(cont, 6).alias("containment")).where(
+        F.col("containment") >= _CONTAINMENT_THRESHOLD
     )
 
 
@@ -3646,100 +3570,74 @@ def tfidf_cosine_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection) — no embeddings, no dense vectors, no all-pairs.
 
     The scale levers: (a) the pair-generating join keys on the term,
-    so candidate cost is Σ df² over KEPT terms only; (b) stopword-like
-    terms (df > 25% of docs) are dropped before the join — they
-    contribute near-zero IDF weight but would dominate Σ df² (the
-    same economics as the PPJoin prefix filter, ngram_jaccard_prefix);
-    (c) dot products aggregate with map-side combine on the pair key.
-    Norms are over the pruned vectors, so dropped terms don't deflate
-    the cosine — both engines compute the identical pruned geometry."""
-    return _tfidf_cosine(
-        load_table(spark, sf_dir, "documents"),
-        df_cap=None,
-        max_candidate_pairs=500_000_000,
-    )
+    so its candidate pairs are Σ df(df−1)/2 over KEPT terms only, the
+    count ``llm.dedup.posting_pairs`` guards against
+    ``MAX_CANDIDATE_PAIRS``; (b) stopword-like terms (df > 25% of
+    docs) are dropped before the join — they contribute near-zero IDF
+    weight but would dominate that count (the same economics as the
+    PPJoin prefix filter, ngram_jaccard_prefix); (c) dot products
+    aggregate with map-side combine on the pair key. Norms are over
+    the pruned vectors, so dropped terms don't deflate the cosine —
+    both engines compute the identical pruned geometry."""
+    return _tfidf_cosine(load_table(spark, sf_dir, "documents"), df_cap=None)
 
 
 #: Absolute document-frequency cap for the SCALE variant. The relative
 #: df <= 25%·n stopband does NOT bound pair cost: kept terms' df grows
-#: with the corpus, so Σ df² grows QUADRATICALLY (measured: 41.8M
-#: candidates at 50k... 3.76B at 500k docs — the sf1 run DNFs, with
-#: max df 12,461 riding just under the 12,500 relative cap). A fixed
-#: absolute cap bounds Σ df² ≤ cap · |postings| — LINEAR in corpus
-#: size — at the cost of dropping mid-frequency (low-IDF) terms from
-#: the vocabulary: 256 keeps 5,213 of 6,337 kept terms at 500k docs
-#: while cutting candidates 60× (3.76B → 62.6M), and provably cannot
-#: bind at the sf0.01 oracle gate (max df there is 25).
+#: with the corpus, so the join's candidate pairs, Σ df(df−1)/2, grow
+#: QUADRATICALLY (measured as Σ df²: 41.8M at 50k docs, 3.76B at 500k,
+#: about 21M and 1.9B pairs; the guard's ``MAX_CANDIDATE_PAIRS`` lets
+#: the first through and stops the second; the unguarded sf1 run
+#: DNF'd, with max df 12,461 riding just under the 12,500 relative
+#: cap). A fixed absolute cap bounds the pairs by cap · |postings| / 2
+#: — LINEAR in corpus size — at the cost of dropping mid-frequency
+#: (low-IDF) terms from the vocabulary: 256 keeps 5,213 of 6,337 kept
+#: terms at 500k docs while cutting Σ df² 60× (3.76B → 62.6M), and
+#: provably cannot bind at the sf0.01 oracle gate (max df there is 25).
 TFIDF_DF_CAP = 256
 
 
 def _tfidf_cosine(
     docs: DataFrame,
     df_cap: int | None,
-    max_candidate_pairs: int | None,
+    max_candidate_pairs: int | None = MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
-    """Shared TF-IDF cosine pipeline; ``df_cap`` adds the absolute
-    stopband (scale path), ``max_candidate_pairs`` guards the
-    unbounded form with a Σ df² estimate over kept terms (one cheap
-    aggregate over the term stats — the ngram_jaccard_pairs guard
-    pattern) so a quadratic corpus fails fast and loudly instead of
-    grinding a multi-billion-row join."""
-    toks = docs.where(F.length(F.trim("text")) > 0).select(
-        "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
-    ).where(F.length("term") > 0)
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
+    """Shared TF-IDF cosine pipeline: the pruned weight vectors go
+    through :func:`posting_pairs`, whose weighted overlap is the dot
+    product and whose masses are the squared norms. df is a window
+    over the term, so one shuffle on the term serves df, the guard's
+    histogram and the pair self-join. ``df_cap`` adds the
+    absolute stopband (scale path); ``max_candidate_pairs`` caps the
+    join's candidate pairs, Σ df(df−1)/2 over the kept terms, so a
+    quadratic corpus fails fast and loudly instead of grinding a
+    multi-billion-row join."""
+    tf = (
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+        .where(F.length("term") > 0)
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
-    stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = tf.agg(F.countDistinct("doc_id").cast("double").alias("__n"))
     keep = F.col("df") <= 0.25 * F.col("__n")
     if df_cap is not None:
         keep = keep & (F.col("df") <= df_cap)
-    if max_candidate_pairs is not None:
-        est = (
-            stats.crossJoin(F.broadcast(n))
-            .where(keep)
-            .agg(F.sum(F.col("df") * F.col("df")).alias("cand"))
-            .first()["cand"]
-        ) or 0
-        if est > max_candidate_pairs:
-            raise ValueError(
-                f"tfidf_cosine_pairs: Σ df² ≈ {int(est):,} candidate rows "
-                f"over kept terms exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,} — the relative 25% stopband does "
-                "not bound pair cost as the corpus grows; use "
-                "tfidf_cosine_pairs_capped (absolute df cap: linear "
-                "candidate mass, documented vocabulary drop) or raise the "
-                "cap explicitly."
-            )
     w = (
-        tf.join(stats, "term")
+        tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
         .crossJoin(F.broadcast(n))
         .where(keep)
-        .select(
-            "doc_id",
-            "term",
-            (F.col("tf") * F.log(F.col("__n") / F.col("df"))).alias("w"),
-        )
+        .withColumn("w", F.col("tf") * F.log(F.col("__n") / F.col("df")))
     )
-    norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    a = w.select(F.col("doc_id").alias("id_a"), "term", F.col("w").alias("wa"))
-    b = w.select(F.col("doc_id").alias("id_b"), "term", F.col("w").alias("wb"))
-    dots = (
-        a.join(b, "term")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
+    pp = posting_pairs(
+        w,
+        "term",
+        "doc_id",
+        weight="w",
+        max_candidate_pairs=max_candidate_pairs,
+        fallback="tfidf_cosine_pairs_capped",
     )
-    return (
-        dots.join(norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("na")), "id_a")
-        .join(norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("nb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= 0.3)
+    cos = F.col("overlap") / (F.sqrt("mass_a") * F.sqrt("mass_b"))
+    return pp.select("id_a", "id_b", F.round(cos, 6).alias("cosine")).where(
+        F.col("cosine") >= 0.3
     )
 
 

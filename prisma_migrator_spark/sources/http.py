@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import time
 import urllib.parse
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -204,21 +204,3 @@ def fetched_ok(fetched: DataFrame) -> DataFrame:
     return fetched.where(
         (F.col("status") >= 200) & (F.col("status") < 300) & F.col("body").isNotNull()
     )
-
-
-def scripted_transport(
-    responses: dict[str, Sequence[tuple[int, str]]]
-) -> Transport:
-    """Deterministic test transport: per URL, a sequence of
-    (status, body) served per attempt (last one repeats). Stateful
-    within one python worker — use driver-side or with stateless
-    single-entry scripts when distributed."""
-    counts: dict[str, int] = {}
-
-    def fetch(url: str) -> tuple[int, str]:
-        seq = responses[url]
-        i = min(counts.get(url, 0), len(seq) - 1)
-        counts[url] = i + 1
-        return seq[i]
-
-    return fetch

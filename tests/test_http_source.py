@@ -12,8 +12,8 @@ from prisma_migrator_spark.sources.http import (
     fetch_urls,
     fetched_ok,
     proxy_url,
-    scripted_transport,
 )
+from tests.http_ref import scripted_transport
 
 
 def test_retry_on_429_then_success():

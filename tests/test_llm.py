@@ -4,6 +4,8 @@ Pandas-UDF batch shapes, streaming-vs-batch equivalence."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -1923,24 +1925,68 @@ def test_wav_chunk_walk_extra_chunks_and_bad_payloads(spark):
         assert got[bad].sample_rate is None and got[bad].rms is None
 
 
-def test_ngram_jaccard_guard_trips_on_boilerplate(spark):
-    """The Σ df² candidate estimate must reject a boilerplate-heavy
-    corpus (every doc sharing the same shingles) and point at the
-    prefix-filtered path; with the cap lifted the same frame runs."""
-    import pytest
-    from pyspark.sql import Row
+def _pair_count(dfs) -> int:
+    """Σ C(df, 2) over document frequencies, in Python."""
+    return sum(df * (df - 1) // 2 for df in dfs)
 
+
+def _ngram_guard_case(spark):
     from prisma_migrator_spark.llm.dedup import ngram_jaccard_pairs, shingles
 
     docs = spark.createDataFrame(
-        [Row(doc_id=i, text="the same boilerplate header appears everywhere")
-         for i in range(80)]
+        [(i, "the same boilerplate header appears everywhere") for i in range(80)],
+        "doc_id long, text string",
     )
     sh = shingles(docs, k=3)
-    with pytest.raises(ValueError, match="prefix"):
-        ngram_jaccard_pairs(sh, max_candidate_pairs=1000)
-    n = ngram_jaccard_pairs(sh, max_candidate_pairs=None).count()
-    assert n == 80 * 79 // 2  # all-pairs: they really are duplicates
+    pairs = _pair_count(Counter(r.shingle for r in sh.collect()).values())
+    return pairs, "prefix", lambda cap: ngram_jaccard_pairs(sh, max_candidate_pairs=cap)
+
+
+def _containment_guard_case(spark):
+    from prisma_migrator_spark.llm.dedup import shingles
+    from prisma_migrator_spark.plans.llm import _doc_containment
+
+    docs = spark.createDataFrame(
+        [(i, "same same same words here") for i in range(20)],
+        "doc_id long, text string",
+    )
+    sh = shingles(docs, k=3)
+    pairs = _pair_count(Counter(r.shingle for r in sh.collect()).values())
+    return pairs, "doc_containment_pairs_capped", lambda cap: _doc_containment(
+        docs, df_cap=None, max_candidate_pairs=cap
+    )
+
+
+def _tfidf_guard_case(spark):
+    from prisma_migrator_spark.plans.llm import _tfidf_cosine
+
+    rows = [(i, f"shared{i % 4} word{i} filler{i % 7}") for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    # kept terms: the relative stopband keeps df <= 25% of the docs
+    df = Counter(t for _, text in rows for t in set(text.split()))
+    kept = [n for n in df.values() if n <= 0.25 * len(rows)]
+    return _pair_count(kept), "tfidf_cosine_pairs_capped", lambda cap: _tfidf_cosine(
+        docs, df_cap=None, max_candidate_pairs=cap
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_ngram_guard_case, _containment_guard_case, _tfidf_guard_case],
+    ids=["ngram_jaccard_pairs", "doc_containment_pairs", "tfidf_cosine_pairs"],
+)
+def test_candidate_guard_trips_at_posting_pair_count(spark, case):
+    """One guard for the three posting-list self-joins: each caller
+    raises one pair below Σ C(df, 2) over its own postings (shingles,
+    or TF-IDF's kept terms), naming its own scale path, and builds at
+    exactly that count — the rows the join emits."""
+    pairs, scale_path, build = case(spark)
+    assert pairs > 0
+    with pytest.raises(ValueError, match=scale_path):
+        build(pairs - 1)
+    build(pairs)
+    if case is _ngram_guard_case:
+        # the boilerplate docs really are duplicates: all pairs come out
+        assert build(None).count() == 80 * 79 // 2
 
 
 def test_embedding_lsh_near_dup_recall_floor(spark):
@@ -2286,8 +2332,8 @@ def test_jpeg_codec_roundtrip_pins_reference_pipeline():
         decode_jpeg,
         encode_jpeg,
         parse_jpeg_dims,
-        reference_roundtrip,
     )
+    from tests.jpeg_ref import reference_roundtrip
 
     def recipe(doc_id, seed_text, w, h):
         hh = int(hashlib.md5(seed_text.encode()).hexdigest()[:8], 16)
@@ -2548,9 +2594,9 @@ def test_html_extract_entities_pipeline(spark, tmp_path):
         RetryPolicy,
         fetch_urls,
         fetched_ok,
-        scripted_transport,
     )
     from prisma_migrator_spark.writers.upsert import write_entity
+    from tests.http_ref import scripted_transport
 
     page = """
     <html><body><div class="listing">
@@ -2594,25 +2640,6 @@ def test_html_extract_entities_pipeline(spark, tmp_path):
     saved = spark.read.parquet(str(tmp_path / "App.parquet"))
     assert saved.count() == 2
     assert {r.handle for r in saved.collect()} == {"/apps/alpha", "/apps/beta"}
-
-
-def test_tfidf_guard_trips_on_quadratic_candidate_mass(spark):
-    """The Σ df² guard: a corpus whose kept-term candidate mass
-    exceeds the cap must fail fast with a pointer to the capped
-    variant, not grind a multi-billion-row term join (the sf1 rehearsal
-    measured 3.76B candidates under the relative-only stopband)."""
-    import pytest
-
-    from prisma_migrator_spark.plans.llm import _tfidf_cosine
-
-    docs = spark.createDataFrame(
-        [(i, f"shared{i % 4} word{i} filler{i % 7}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="tfidf_cosine_pairs_capped"):
-        _tfidf_cosine(docs, df_cap=None, max_candidate_pairs=10)
-    # generous cap: builds fine
-    _tfidf_cosine(docs, df_cap=None, max_candidate_pairs=10_000)
 
 
 def test_tfidf_capped_equals_uncapped_until_cap_binds(spark):
@@ -2685,19 +2712,6 @@ def test_containment_capped_verifies_exactly_over_full_sets(spark):
     # boilerplate-only pairs (among docs 0..9) are the recall loss
     assert any(a < 10 and b < 10 for a, b in exact)
     assert not any(a < 10 and b < 10 for a, b in capped)
-
-
-def test_containment_guard_trips(spark):
-    import pytest
-
-    from prisma_migrator_spark.plans.llm import _doc_containment
-
-    docs = spark.createDataFrame(
-        [(i, "same same same words here") for i in range(20)],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="doc_containment_pairs_capped"):
-        _doc_containment(docs, df_cap=None, max_candidate_pairs=5)
 
 
 @pytest.mark.slow  # multi-minute: default-deselected tier (pytest.ini)
@@ -3251,9 +3265,9 @@ def test_logreg_loss_decreases_and_matches_python_reference(spark):
     from prisma_migrator_spark.llm.logreg import (
         featurize_terms,
         train_logreg,
-        train_logreg_py,
         weak_quality_label,
     )
+    from tests.logreg_ref import train_logreg_py
 
     docs = _toy_quality_corpus(spark)
     terms = ["the", "and", "error", "fast", "slow", "results"]
@@ -3384,8 +3398,8 @@ def test_main_content_composes_with_fetch(spark):
         RetryPolicy,
         fetch_urls,
         fetched_ok,
-        scripted_transport,
     )
+    from tests.http_ref import scripted_transport
 
     body = ("<body><nav><a href='/'>navigation link row</a></nav>"
             "<article>fetched article body text</article>"

@@ -106,6 +106,17 @@ PINS = {
     # in PERF.md #23 — the shuffle count is the price of pruning
     "ngram_jaccard_prefix": (12, [2, 2, 2, 2, 2, 2], False),
     "doc_containment_pairs": (7, [2, 2, 2, 2], False),
+    # the posting-list pair join (llm/dedup.posting_pairs): one
+    # shingle/term self-join plus the two per-id mass joins
+    "ngram_jaccard_pairs": (7, [2, 2, 2, 2], False),
+    # the low-df pair join, whose masses are the sizes, then the
+    # per-doc high-shingle counts and arrays joined on each side
+    "doc_containment_pairs_capped": (27, [2] * 14, False),
+    # df is a term window, whose partitioning the pair self-join and
+    # the guard's histogram reuse. NLJ allowed: the 1-row doc-count
+    # broadcast
+    "tfidf_cosine_pairs": (15, [2] * 8, True),
+    "tfidf_cosine_pairs_capped": (15, [2] * 8, True),
     # --- round-4 additions ---
     # temporal family: one key-partitioned shuffle each, 5-6 pruned
     # columns of lineitem's 11

@@ -3,7 +3,9 @@ Python reference implementations on adversarial random inputs."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from collections import Counter
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -216,6 +218,80 @@ def test_prefix_jaccard_equals_naive(spark, docs, t):
         for r in ngram_jaccard_pairs_prefix(sh, min_jaccard=t).collect()
     }
     assert pref == naive
+
+
+# hostile corpora: NULL, empty and whitespace-only text, single-token
+# docs, runs of mixed whitespace, and (via ``dups``) duplicate docs
+HOSTILE_TEXT = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "\t \n", "a", "B"]),
+    st.tuples(
+        st.lists(st.sampled_from(["a", "b", "c", "A"]), min_size=1, max_size=6),
+        st.sampled_from([" ", "  ", "\t", " \n "]),
+    ).map(lambda t: t[1] + t[1].join(t[0])),
+)
+
+
+@given(
+    texts=st.lists(HOSTILE_TEXT, min_size=1, max_size=8),
+    dups=st.integers(min_value=0, max_value=3),
+    df_cap=st.sampled_from([None, 2, 3]),
+)
+# every hostile kind at once, and a doc whose over-cap key ("b", df 4)
+# must still count in its mass while "a" (df 3) pairs it
+@example(texts=["a b", None, "", "\t \n", "b", " a\tb c"], dups=1, df_cap=3)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_posting_pairs_match_dict_of_sets_reference(spark, texts, dups, df_cap):
+    """The one posting-list pair join, unweighted and weighted, vs a
+    Python dict-of-sets reference on hostile corpora: overlap, both
+    masses, and the guard's Σ C(df, 2), which must be the exact row
+    count of the join (it raises one pair below it and builds at it)."""
+    import pytest
+
+    from prisma_migrator_spark.llm.dedup import posting_pairs
+    from prisma_migrator_spark.llm.text import tokens
+
+    texts = texts + texts[:dups]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    tf = (
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+        .where(F.length("term") > 0)
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+    )
+
+    # reference: per doc, its term counts (Python's split drops the
+    # empty tokens that whitespace runs leave)
+    tfs = {i: Counter(t.lower().split()) for i, t in enumerate(texts) if t}
+    tfs = {i: c for i, c in tfs.items() if c}
+    df = Counter(t for c in tfs.values() for t in c)
+    kept = {t for t, n in df.items() if df_cap is None or n <= df_cap}
+    cand = sum(df[t] * (df[t] - 1) // 2 for t in kept)
+    exp_u, exp_w = {}, {}
+    for i in tfs:
+        for j in tfs:
+            shared = tfs[i].keys() & tfs[j].keys() & kept
+            if i < j and shared:
+                exp_u[(i, j)] = (len(shared), len(tfs[i]), len(tfs[j]))
+                exp_w[(i, j)] = (
+                    sum(tfs[i][t] * tfs[j][t] for t in shared),
+                    sum(v * v for v in tfs[i].values()),
+                    sum(v * v for v in tfs[j].values()),
+                )
+
+    def run(**kw):
+        return {
+            (r.id_a, r.id_b): (r.overlap, r.mass_a, r.mass_b)
+            for r in posting_pairs(tf, "term", "doc_id", df_cap=df_cap, **kw).collect()
+        }
+
+    got_u = run(max_candidate_pairs=None)
+    assert got_u == exp_u
+    assert sum(o for o, _, _ in got_u.values()) == cand  # the join's rows
+    with pytest.raises(ValueError, match="candidate pairs"):
+        run(weight="tf", max_candidate_pairs=cand - 1)
+    assert run(weight="tf", max_candidate_pairs=cand) == exp_w
 
 
 @given(
