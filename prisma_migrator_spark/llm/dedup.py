@@ -10,6 +10,14 @@ Design for 100 TB:
   band value. The self-join is keyed on band buckets, so its cost is
   Σ bucket², not n² — the whole point of LSH. Verification (exact
   Jaccard) runs only on candidates.
+- **one banded candidate join**: MinHash bands, Hamming band keys
+  (SimHash, image/audio/video fingerprints) and sign-LSH tables all
+  pair through :func:`_band_pairs`. It has one emission rule — a
+  pair is emitted once, at its first shared live key, tested against
+  the key arrays both sides carry, so no dedup shuffle follows the
+  join — and one stop-band rule: ``max_bucket`` counts every row of
+  a bucket, stored-index rows included. With ``index=`` only pairs
+  with a new member are built.
 - **SimHash**: per-token hash bits summed per doc (explode + groupBy);
   near-dup = signatures within Hamming distance d. Bits derive from
   md5 hex (engine-portable) rather than a JVM-private hash so the
@@ -33,6 +41,8 @@ releases them before it builds the next registered query.
 """
 
 from __future__ import annotations
+
+from itertools import combinations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -154,19 +164,91 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def _minhash_band_keys(num_hashes: int, band_size: int) -> Column:
-    """Array of one ``'<band>|h..|h..'`` key per band of ``band_size``
-    consecutive min-hashes — the bucket keys of both MinHash LSH
-    joins."""
-    return F.array(
-        *[
-            F.concat_ws(
-                "|",
-                F.lit(str(b)),
-                *[F.col(f"h{b * band_size + r}") for r in range(band_size)],
-            )
-            for b in range(num_hashes // band_size)
-        ]
+def _band_pairs(
+    rows: DataFrame,
+    keys: list[Column],
+    id_col: str,
+    payload: list[str],
+    index: DataFrame | None = None,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """The one banded candidate join (MinHash, Hamming, sign-LSH):
+    every unordered pair of rows that share a band bucket, with at
+    least one member from ``rows``, exactly once, as ``(id_a, id_b,
+    <p>_a…, <p>_b…)`` — ``id_a < id_b``, with each ``payload`` column
+    ``p`` of both ids, from which each caller computes its own measure
+    and filter.
+
+    ``keys`` are a row's string band keys, built from its columns; a
+    key's position is its band or table index, and two rows share a
+    bucket when they hold the same key at the same position. ``index``
+    holds old rows, with ids disjoint from ``rows``. Pairs of two old
+    rows are never built: side ``a`` of the self-join is new, and a
+    new ``b`` pairs only from the lower id, so the join costs Σ over
+    buckets of (new rows × bucket size), not Σ bucket²; with no index
+    it is the plain ``a.id < b.id`` self-join.
+
+    Emission is FIRST-MATCH: a pair is emitted at its lowest shared
+    live position only. Each side carries its key array into the join,
+    and the test of the earlier positions is unrolled over the static
+    key list, so it compiles with the join filter and compares the
+    carried strings without rebuilding them; no ``dropDuplicates``
+    follows the join (the sf10 rehearsal's sign-LSH join spilled on
+    that dedup at 400k vectors).
+
+    Stop-band rule (``max_bucket``): a bucket counted over EVERY row,
+    new and old alike, that holds more than ``max_bucket`` rows is
+    dead — its rows never pair through it, and first-match never takes
+    it as an earlier agreement, so a pair whose first shared bucket is
+    dead is still emitted at its first live one. The dead set is one
+    driver-side row (at most keys · rows / max_bucket entries), read
+    before the join is built, so the join plan carries it as a literal
+    set."""
+
+    def mark(df: DataFrame, new: bool) -> DataFrame:
+        return df.select(id_col, *payload, F.array(*keys).alias("__k"),
+                         F.lit(new).alias("__new"))
+
+    marked = mark(rows, True)
+    if index is not None:
+        marked = marked.unionByName(mark(index, False))
+    dead: list[str] = []
+    if max_bucket is not None:
+        dead = (
+            marked.select(F.posexplode("__k"))
+            .groupBy("pos", "col")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .where(F.col("n") > max_bucket)
+            .agg(F.collect_list(F.concat_ws("|", "pos", "col")))
+            .first()[0]
+        )
+
+    def live(k: Column, t: Column) -> Column:
+        ok = k.isNotNull()
+        return ok & ~F.concat_ws("|", t, k).isin(dead) if dead else ok
+
+    banded = marked.select("*", F.posexplode("__k").alias("__t", "__key")).where(
+        live(F.col("__key"), F.col("__t"))
+    )
+    # first match: no live key shared at a lower position
+    first = F.lit(True)
+    for j in range(len(keys)):
+        x, y = F.col("a.__k")[j], F.col("b.__k")[j]
+        first = first & ~((F.col("a.__t") > j) & x.eqNullSafe(y) & live(x, F.lit(j)))
+    lo = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    # side a is new; a new b pairs only from the lower id
+    a, b = banded.where("__new").alias("a"), banded.alias("b")
+    on = (F.col("a.__t") == F.col("b.__t")) & (F.col("a.__key") == F.col("b.__key"))
+    touching = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) | ~F.col("b.__new")
+    return (
+        a.join(b, on & touching)
+        .where(first)
+        .select(
+            F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
+            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
+            *[F.when(lo, F.col(f"{x}.{p}")).otherwise(F.col(f"{y}.{p}")).alias(f"{p}_{x}")
+              for x, y in (("a", "b"), ("b", "a")) for p in payload],
+        )
     )
 
 
@@ -175,75 +257,39 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band of the signature become a
     candidate pair (id_a < id_b), with the signature-agreement
-    fraction as the Jaccard estimate.
+    fraction as the Jaccard estimate. Pairs come from
+    :func:`_band_pairs`, one key per band of ``band_size`` consecutive
+    min-hashes.
 
-    Pair generation is a per-band ``collect_list`` + in-array pair
-    explode, not a band self-join: ONE shuffle of (band, id) rows
-    instead of two join sides, and the (at 100 TB, vast) majority of
-    bands with a single member never produce a row at all — the
-    size filter drops them before any pair exists. Per-band memory
-    is bounded by the bucket size.
+    ``index`` is a stored signature index of documents already seen
+    (ids disjoint from ``sigs``, never re-shingled): the output is then
+    the cold job over index ∪ ``sigs`` restricted to pairs with at
+    least one ``sigs`` member, and only those pairs are generated.
 
     Single-pass shape (r9, guide §2.3/§2.4): the full signature rides
-    WITH its id into the band shuffle, and the agreement count is
-    computed inside the per-bucket pair explode — so the
-    shingle→minhash pipeline runs exactly once and there is no
-    signature re-join (the r8 form joined ``sigs`` back twice to
-    attach h0..h7, which re-derived the whole minhash pipeline per
-    join side; the persist() meant to prevent that lost the race when
-    AQE ran the branches concurrently — measured duplicate ~8 CPU-s
-    stages at sf0.1). The banded shuffle carries num_hashes longs per
-    (doc, band) row — bounded, and strictly cheaper than re-deriving
-    or re-shuffling the signature table twice.
+    WITH its id into the band shuffle and the agreement count is
+    computed at the pair, so there is no signature re-join. The r8
+    form joined ``sigs`` back twice to attach h0..h7, which re-derived
+    the whole minhash pipeline once per join side; the persist() meant
+    to prevent that lost the race when AQE ran the branches
+    concurrently (measured duplicate ~8 CPU-s stages at sf0.1). Both
+    sides of the band self-join now read one signature aggregate: AQE
+    reuses its exchange, so the shingle→minhash stage runs once.
     """
     hs = [f"h{i}" for i in range(num_hashes)]
-    bands = _minhash_band_keys(num_hashes, band_size)
-    banded = sigs.select(id_col, *hs, F.explode(bands).alias("band"))
-    # per-band member array (sorted by id: struct comparison leads
-    # with id_col, so array_sort orders members ascending by id and
-    # the slice-pairing below yields id_a < id_b)
-    buckets = banded.groupBy("band").agg(
-        F.array_sort(F.collect_list(F.struct(id_col, *hs))).alias("__m")
-    )
-    m = F.col("__m")
 
-    def _agree(x, y):
-        out = F.lit(0)
-        for h in hs:
-            out = out + F.when(x[h] == y[h], 1).otherwise(0)
-        return out
-
-    pair_arr = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m)),
-                lambda y: F.struct(
-                    x[id_col].alias("id_a"),
-                    y[id_col].alias("id_b"),
-                    _agree(x, y).alias("agree"),
-                ),
-            ),
-        )
-    )
-    # agree is functionally determined by (id_a, id_b) — every band a
-    # pair co-occurs in sees the same two signatures — so deduping on
-    # the ids alone is deterministic.
-    return (
-        buckets.where(F.size(m) >= 2)
-        .select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.agree")
-        .dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("agree") / F.lit(float(num_hashes)), 6).alias(
-                "jaccard_est"
-            ),
-        )
+    keys = [
+        F.concat_ws("|", *hs[b : b + band_size])
+        for b in range(0, num_hashes - band_size + 1, band_size)
+    ]
+    pairs = _band_pairs(sigs, keys, id_col, hs, index=index)
+    agree = sum(F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in hs)
+    return pairs.select(
+        "id_a", "id_b", F.round(agree / F.lit(float(num_hashes)), 6).alias("jaccard_est")
     )
 
 
@@ -502,12 +548,13 @@ def simhash_near_dup_pairs(
     Pigeonhole guarantee: with ``n_bits/band_bits`` bands, any pair
     differing in ≤ (n_bands - 1) bits shares at least one intact band
     — 4-bit bands over 16 bits, or 16-bit bands over 64 bits, find
-    ALL pairs with hamming ≤ 3. The self-join is keyed on (band
-    index, band value); cost is Σ bucket², not n². 16-bit signatures
-    saturate beyond a few hundred docs (every band bucket fills up) —
-    use ``n_bits=64`` for real corpora; the join carries the
-    signature with the rep id, exactly like
-    :func:`lsh_candidate_pairs` (r10 — no post-distinct re-joins).
+    ALL pairs with hamming ≤ 3. The pairs come from
+    :func:`hamming_band_pairs`, i.e. the one banded candidate join
+    :func:`_band_pairs` keyed on (band index, band value): each pair
+    once, at its first shared live band, the signature carried with
+    the rep id (no re-joins); cost is Σ bucket², not n². 16-bit
+    signatures saturate beyond a few hundred docs (every band bucket
+    fills up) — use ``n_bits=64`` for real corpora.
 
     ``max_bucket`` is the stop-band frequency cap — the scale knob.
     SimHash signs concentrate (common tokens dominate every doc's bit
@@ -516,7 +563,9 @@ def simhash_near_dup_pairs(
     on the scale-rehearsal corpus, the top 16-bit band bucket grew
     104 → 456 → 3446 from 500 → 5k → 50k docs (21.2M candidate pairs
     at 50k). Capping drops band buckets larger than ``max_bucket``
-    from candidate generation — a pair is lost only if EVERY intact
+    (counted over every signature, index rows included — the one
+    stop-band rule of :func:`_band_pairs`) from candidate
+    generation — a pair is lost only if EVERY intact
     band it shares is a stop-band, and those bands carry near-zero
     information (they are the signature-space analog of stopword
     shingles). Cost becomes Σ min(bucket, cap)² — linear in corpus
@@ -555,17 +604,22 @@ def hamming_bits(a: Column, b: Column, n_bits: int) -> Column:
     return out
 
 
-def _touching_pairs(df: DataFrame, key: str, id_: str, flag: str) -> DataFrame:
-    """``df`` self-joined on ``key``, keeping each unordered pair of
-    distinct rows with at least one ``flag`` row exactly once: side
-    ``a`` is always flagged, and a flagged ``b`` pairs only from its
-    lower ``id_``. With every row flagged this is the plain
-    ``a.id_ < b.id_`` self-join."""
-    return df.where(flag).alias("a").join(
-        df.alias("b"),
-        (F.col(f"a.{key}") == F.col(f"b.{key}"))
-        & ((F.col(f"a.{id_}") < F.col(f"b.{id_}")) | ~F.col(f"b.{flag}")),
-    )
+def hamming_band_keys(
+    sig: Column, n_bits: int, band_bits: int, band_arity: int = 1
+) -> list[Column]:
+    """The band keys of a '0'/'1' signature, one ``'<combo>|<bands>'``
+    string per combination of ``band_arity`` of its
+    ``n_bits/band_bits`` bands (``'<b>|<band>'`` at arity 1): the
+    buckets of the batch join (:func:`hamming_band_pairs`) and of the
+    streaming one (``streaming/stateful.streaming_near_dup_verdicts``)."""
+
+    def band(b: int) -> Column:
+        return F.substring(sig, b * band_bits + 1, band_bits)
+
+    return [
+        F.concat_ws("|", F.lit("-".join(map(str, combo))), *map(band, combo))
+        for combo in combinations(range(n_bits // band_bits), band_arity)
+    ]
 
 
 def hamming_band_pairs(
@@ -590,12 +644,13 @@ def hamming_band_pairs(
     join keys of ``band_arity`` bands each, a pair within Hamming
     distance ``B - band_arity`` has at least ``band_arity`` intact
     bands and therefore shares at least one intact key — recall is
-    EXACT for ``max_hamming <= B - band_arity``. The self-join is
-    keyed on the band combination and carries (rep id, signature) —
-    the signature rides the shuffle so the Hamming distance computes
-    once per deduplicated pair with NO rep-frame re-joins (r10, the
-    r9 lsh_candidate_pairs shape); cost is Σ bucket², bounded to
-    Σ min(bucket, cap)² by ``max_bucket`` (see
+    EXACT for ``max_hamming <= B - band_arity``. Rep pairs come from
+    :func:`_band_pairs`, keyed on :func:`hamming_band_keys`, with the
+    signature as payload: each pair is emitted once, at its first
+    shared live key, and its Hamming distance computes from the
+    carried signatures with NO rep-frame re-joins. Cost is Σ bucket²,
+    bounded to Σ min(bucket, cap)² by ``max_bucket``, the one
+    stop-band rule of :func:`_band_pairs` (see
     :func:`simhash_near_dup_pairs` for the stop-band argument).
 
     ``band_arity`` is the SATURATION dial (multi-index hashing on
@@ -620,14 +675,14 @@ def hamming_band_pairs(
     representative), and member pairs expand afterwards: identical-
     signature groups emit their pairs directly at Hamming 0, and
     cross-signature rep pairs fan out through the membership map —
-    both output-proportional. With ``max_bucket`` set, bucket counts
-    now count distinct SIGNATURES, not documents, so the stop-band
+    both output-proportional. With ``max_bucket`` set, buckets
+    count distinct SIGNATURES, not documents, so the stop-band
     cap can only DROP FEWER pairs than before (recall is monotone
     better; uncapped output is set-identical to the direct join).
 
     STORED INDEX (``index``): the decode-once incremental form for
-    the image/audio/video families, mirroring
-    :func:`incremental_lsh_pairs` for MinHash text dedup. ``index``
+    the image/audio/video families, as
+    ``lsh_candidate_pairs(index=)`` is for MinHash text dedup. ``index``
     holds (id, signature) rows from the maintained index table,
     written once when each document was ingested, so history media
     has no payload column here and CANNOT be re-decoded; ``sigs`` is
@@ -643,15 +698,15 @@ def hamming_band_pairs(
 
     The join itself is DELTA-PROPORTIONAL, not just the decode: rows
     of ``sigs`` are flagged new, each signature group's rep is
-    *touched* when any member is new, and only touched reps band
-    against the full banded rep table (one side of the join is
-    batch-sized, :func:`_touching_pairs`) — Σ over buckets of
-    (delta reps in bucket × bucket size) instead of Σ bucket²,
-    three decimal orders off the join at a 0.1% daily batch on top
-    of the three off the decode. The Hamming-0 leg pairs new members
-    with their group the same way; cross pairs with no new member
-    drop before the output. Without ``index`` every row is new and
-    both joins are the plain ``a < b`` self-joins.
+    *touched* when any member is new, and the touched reps go to
+    :func:`_band_pairs` as its new rows, the untouched ones as its
+    index — Σ over buckets of (delta reps in bucket × bucket size)
+    instead of Σ bucket², three decimal orders off the join at a
+    0.1% daily batch on top of the three off the decode. The
+    Hamming-0 leg is the same core keyed on the rep id (new members
+    against their group); cross pairs with no new member drop before
+    the output. Without ``index`` every row is new and both joins are
+    the plain ``a < b`` self-joins.
 
     The signature frame and its rep collapse are pinned
     (``operators/driver_state.pin``): they feed the membership map and
@@ -661,8 +716,6 @@ def hamming_band_pairs(
     it builds the next registered query (a released frame
     recomputes, never fails).
     """
-    from itertools import combinations
-
     n_bands = n_bits // band_bits
     if not 1 <= band_arity <= n_bands:
         raise ValueError(f"band_arity must be in [1, {n_bands}]")
@@ -677,52 +730,18 @@ def hamming_band_pairs(
             F.min(id_col).alias("__rid"), F.max("__new").alias("__touch")
         )
     )
-
-    def band(b: int):
-        return F.substring(sig_col, b * band_bits + 1, band_bits)
-
-    keys = [
-        F.concat_ws(
-            "|", F.lit("-".join(map(str, combo))), *[band(b) for b in combo]
-        )
-        for combo in combinations(range(n_bands), band_arity)
-    ]
-    # r10 (guide §2.3/§2.4 — the r9 lsh_candidate_pairs pattern ported
-    # here): the SIGNATURE rides the band shuffle alongside the rep id
-    # instead of re-joining twice after the pair-distinct. The dedup
-    # key is unchanged — sh_a/sh_b are functionally determined by
-    # ra/rb (each rep pair has one orientation, see _touching_pairs),
-    # so every candidate row for a (ra, rb) pair carries identical
-    # signatures and dropDuplicates([ra, rb]) yields the same pair set
-    # with the same attached strings — and the Hamming distance
-    # computes ONCE per distinct pair, after the dedup, from the
-    # carried columns. Cost trade, same as minhash: each banded row
-    # widens by one n_bits-char string (bounded), while BOTH rep-frame
-    # re-joins and their exchanges/broadcast builds disappear.
-    banded = reps.select(
-        "__rid", "__touch", sig_col, F.explode(F.array(*keys)).alias("band")
+    rep_pairs = _band_pairs(
+        reps if index is None else reps.where("__touch"),
+        hamming_band_keys(F.col(sig_col), n_bits, band_bits, band_arity),
+        "__rid",
+        [sig_col],
+        index=None if index is None else reps.where(~F.col("__touch")),
+        max_bucket=max_bucket,
     )
-    if max_bucket is not None:
-        ok = (
-            banded.groupBy("band")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") <= max_bucket)
-            .select("band")
-        )
-        banded = banded.join(ok, "band")
-    rep_pairs = (
-        _touching_pairs(banded, "band", "__rid", "__touch")
-        .select(
-            F.col("a.__rid").alias("ra"),
-            F.col("b.__rid").alias("rb"),
-            F.col(f"a.{sig_col}").alias("sh_a"),
-            F.col(f"b.{sig_col}").alias("sh_b"),
-        )
-        .dropDuplicates(["ra", "rb"])
-    )
-    hamming = hamming_bits(F.col("sh_a"), F.col("sh_b"), n_bits)
+    hamming = hamming_bits(F.col(f"{sig_col}_a"), F.col(f"{sig_col}_b"), n_bits)
     near_reps = rep_pairs.select(
-        "ra", "rb", hamming.cast("int").alias("hamming")
+        F.col("id_a").alias("ra"), F.col("id_b").alias("rb"),
+        hamming.cast("int").alias("hamming"),
     ).where(F.col("hamming") <= max_hamming)
     # membership map: every doc -> its signature's representative id,
     # with its new flag (a pair of two index docs is old work)
@@ -730,13 +749,9 @@ def hamming_band_pairs(
         F.col(id_col).alias("__mid"), "__rid", "__new"
     )
 
-    def side(r: str, i: str, n: str) -> DataFrame:
-        return mem.select(F.col("__rid").alias(r), F.col("__mid").alias(i),
-                          F.col("__new").alias(n))
-
     cross = (
-        near_reps.join(side("ra", "__ia", "__na"), "ra")
-        .join(side("rb", "__ib", "__nb"), "rb")
+        near_reps.join(mem.toDF("__ia", "ra", "__na"), "ra")
+        .join(mem.toDF("__ib", "rb", "__nb"), "rb")
         .where(F.col("__na") | F.col("__nb"))
         .select(
             F.least("__ia", "__ib").alias("id_a"),
@@ -744,11 +759,14 @@ def hamming_band_pairs(
             "hamming",
         )
     )
-    intra = _touching_pairs(mem, "__rid", "__mid", "__new").select(
-        F.least("a.__mid", "b.__mid").alias("id_a"),
-        F.greatest("a.__mid", "b.__mid").alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
+    # identical signatures: the rep id is the one band key
+    intra = _band_pairs(
+        mem.where("__new"),
+        [F.col("__rid").cast("string")],
+        "__mid",
+        ["__rid"],
+        index=None if index is None else mem.where(~F.col("__new")),
+    ).select("id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
     return cross.unionByName(intra)
 
 
@@ -854,7 +872,6 @@ def embedding_lsh_near_dup_pairs(
     min_cosine: float = 0.8,
     n_tables: int = 8,
     bits_per_table: int | None = None,
-    n_blocks: int = 1,
     max_bucket: int | None = None,
     seed: int = 7,
 ) -> DataFrame:
@@ -894,25 +911,21 @@ def embedding_lsh_near_dup_pairs(
       twice against the vector table (40 GB of spill at 400k vectors
       / 640M candidates, job death); this form's big shuffle is
       n_tables·n rows of (vector, bucket) ≈ 3 GB at the same scale;
-    - a pair is emitted by its FIRST matching table only: each side
-      carries its full bucket array and the join filters out pairs
-      whose earlier tables already matched — exactly-once generation
-      with NO dropDuplicates shuffle over the candidate stream (the
-      8-way redundancy was the other half of the spill);
-    - ``max_bucket`` drops degenerate buckets (the stop-band cap).
-      Dropped buckets are masked to NULL **inside the carried bucket
-      arrays** (not just filtered from the banded rows), so the
-      first-match test never counts a stop-band table as a prior
-      match — otherwise a pair whose earliest agreeing table was
-      capped would be suppressed at every surviving later table and
-      silently lost (dense regions are exactly where table 0 agrees
-      AND gets capped). The masking costs ONE narrow O(n·n_tables)
-      count shuffle (buckets only); the over-cap set is bounded by
-      n_tables·n/max_bucket entries, reduces to a single broadcast
-      row, and the mask itself is a projection — the vector-carrying
-      base never shuffles for it. Paid only when the cap is enabled;
-    - ``n_blocks`` adds triangle-blocking for within-bucket
-      parallelism, as in :func:`embedding_near_dup_pairs`.
+    - pairs come from :func:`_band_pairs`, the one banded candidate
+      join, with the table buckets as its keys: a pair is
+      emitted by its FIRST matching table only — exactly-once
+      generation with NO dropDuplicates shuffle over the candidate
+      stream (the 8-way redundancy was the other half of the spill);
+    - ``max_bucket`` is the core's one stop-band rule: a bucket with
+      more than ``max_bucket`` vectors is dead, and first-match never
+      counts a dead table as a prior match — otherwise a pair whose
+      earliest agreeing table was capped would be suppressed at every
+      surviving later table and silently lost (dense regions are
+      exactly where table 0 agrees AND gets capped). The dead set
+      costs one narrow O(n·n_tables) count over the snapshot (buckets
+      only, at most n_tables·n/max_bucket entries), read on the
+      driver before the join is built; the vector-carrying base never
+      shuffles for it. Paid only when the cap is enabled.
     """
     if bits_per_table is None:
         import math
@@ -954,106 +967,24 @@ def embedding_lsh_near_dup_pairs(
         _norm(v).alias("__n"),
         buckets_arr.alias("__bk"),
     )
-    if max_bucket is not None:
-        # Stop-band masking: NULL-out over-cap buckets inside each
-        # row's bucket ARRAY so (a) banded rows in capped buckets are
-        # dropped and (b) first_match never sees a capped table as an
-        # earlier agreement. The over-cap SET is tiny by construction
-        # (≤ n_tables·n/max_bucket entries), so it reduces to one
-        # broadcast row and the mask is a pure projection — the
-        # vector-carrying base never shuffles for it.
-        overcap = (
-            base.select(F.posexplode("__bk").alias("__t", "__b"))
-            .groupBy("__t", "__b")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > max_bucket)
-            .agg(
-                F.collect_set(
-                    F.concat_ws("|", F.col("__t"), F.col("__b"))
-                ).alias("__over")
-            )
-        )
-        base = base.crossJoin(F.broadcast(overcap)).select(
-            "__id",
-            "__v",
-            "__n",
-            F.transform(
-                "__bk",
-                lambda bkt, t: F.when(
-                    F.array_contains(
-                        F.col("__over"), F.concat_ws("|", t, bkt)
-                    ),
-                    F.lit(None),
-                ).otherwise(bkt),
-            ).alias("__bk"),
-        )
-    # Snapshot the signed/masked frame ONCE: both sides of the band
-    # self-join read it, and without the snapshot each side recomputes
-    # the n_tables·r plane dots per row (the dominant CPU) plus, when
-    # capped, its own copy of the stop-band count shuffle. Eager
-    # localCheckpoint is this repo's convention for shared iterative /
-    # self-joined state (see PERF.md: persist+probe recomputes through
-    # partially-materialized caches).
+    # Snapshot the signed frame ONCE: both sides of the band self-join
+    # (and the stop-band count) read it, and without the snapshot each
+    # recomputes the n_tables·r plane dots per row (the dominant CPU).
+    # Eager localCheckpoint is this repo's convention for shared
+    # iterative / self-joined state (see PERF.md: persist+probe
+    # recomputes through partially-materialized caches).
     base = base.localCheckpoint()
-    banded = base.select(
-        "__id", "__v", "__n", "__bk",
-        F.posexplode("__bk").alias("__t", "__bucket"),
-    ).where(F.col("__bucket").isNotNull()).withColumn(
-        "__key", F.concat_ws("|", F.col("__t"), F.col("__bucket"))
-    ).drop("__bucket")
-    if n_blocks > 1:
-        g = F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks))
-        a = banded.withColumn("__i", g).withColumn(
-            "__j", F.explode(F.sequence(F.col("__i"), F.lit(n_blocks - 1)))
-        ).alias("a")
-        b = banded.withColumn("__j", g).withColumn(
-            "__i", F.explode(F.sequence(F.lit(0), F.col("__j")))
-        ).alias("b")
-        cond = (
-            (F.col("a.__key") == F.col("b.__key"))
-            & (F.col("a.__i") == F.col("b.__i"))
-            & (F.col("a.__j") == F.col("b.__j"))
-            & (
-                (F.col("a.__i") != F.col("a.__j"))
-                | (F.col("a.__id") < F.col("b.__id"))
-            )
-        )
-    else:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cond = (F.col("a.__key") == F.col("b.__key")) & (
-            F.col("a.__id") < F.col("b.__id")
-        )
-    # exactly-once emission: this table must be the FIRST whose
-    # buckets agree — no earlier-table agreement, no dedup shuffle
-    first_match = (
-        F.size(
-            F.filter(
-                F.zip_with(
-                    F.slice(F.col("a.__bk"), 1, F.col("a.__t")),
-                    F.slice(F.col("b.__bk"), 1, F.col("b.__t")),
-                    lambda x, y: x == y,
-                ),
-                lambda m: m,
-            )
-        )
-        == 0
+    pairs = _band_pairs(
+        base,
+        [F.col("__bk")[t] for t in range(n_tables)],
+        "__id",
+        ["__v", "__n"],
+        max_bucket=max_bucket,
     )
-    sim = _dot(F.col("a.__v"), F.col("b.__v")) / (
-        F.col("a.__n") * F.col("b.__n")
-    )
-    return (
-        a.join(b, cond)
-        .where(first_match)
-        .select(
-            F.least(F.col("a.__id"), F.col("b.__id")).alias("id_a"),
-            F.greatest(F.col("a.__id"), F.col("b.__id")).alias("id_b"),
-            F.round(sim, 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= min_cosine)
-    )
-
-
+    sim = _dot(F.col("__v_a"), F.col("__v_b")) / (F.col("__n_a") * F.col("__n_b"))
+    return pairs.select(
+        "id_a", "id_b", F.round(sim, 6).alias("cosine")
+    ).where(F.col("cosine") >= min_cosine)
 
 
 def dedupe_against(
@@ -1291,74 +1222,6 @@ def ngram_jaccard_pairs_prefix(
         .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
         .where(F.col("jaccard") >= t)
     )
-
-
-def incremental_lsh_pairs(
-    existing_sigs: DataFrame,
-    delta_sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
-    """Near-dup candidates for a DELTA of new documents against an
-    existing corpus's stored MinHash signature index, plus within-
-    delta pairs — the incremental form of :func:`lsh_candidate_pairs`
-    (which is the full-corpus batch job this avoids re-running).
-
-    At 100 TB the signature/band index is a maintained TABLE (8 longs
-    + band keys per doc, written once at ingest like
-    ``cross_corpus_dedup``'s fingerprint index); per batch the work
-    is: signatures for |delta| docs, one band-keyed join of delta
-    bands against the index (hash join — the delta side is small,
-    and both sides carry their signature struct so the agreement
-    computes at the collision row — no re-join), and one in-batch
-    banding of the delta. History text is never re-shingled, history
-    signatures never recomputed. Output matches the full recompute restricted to
-    pairs with at least one delta member — which is what the
-    registered query's oracle checks."""
-    bands = _minhash_band_keys(num_hashes, band_size)
-    # localCheckpoint (not persist): the delta feeds two branches (the
-    # band join against the index and the in-batch banding), and a
-    # persist() here would pin executor storage for the session
-    # lifetime since a lazily returned DataFrame gives no unpersist
-    # point. Checkpointing materializes once, truncates lineage, and
-    # its blocks are GC'd with the DataFrame — the same discipline as
-    # the iterative plans. The index feeds the band join only.
-    delta_sigs = delta_sigs.localCheckpoint()
-    # r10 (the r9 lsh_candidate_pairs shape, ported): both sides carry
-    # their full signature STRUCT through the band join, so the
-    # agreement count computes at the collision row and the
-    # re-derivation join of index ∪ delta signatures disappears.
-    # Agreement is symmetric, so the structs need no endpoint
-    # ordering; jaccard_est is functionally determined by the pair,
-    # so deduping on the ids alone stays deterministic.
-    hs = [f"h{i}" for i in range(num_hashes)]
-    eb = existing_sigs.select(
-        F.col(id_col).alias("__old"),
-        F.struct(*hs).alias("__so"),
-        F.explode(bands).alias("band"),
-    )
-    db = delta_sigs.select(
-        F.col(id_col).alias("__new"),
-        F.struct(*hs).alias("__sn"),
-        F.explode(bands).alias("band"),
-    )
-    agree = sum(
-        F.when(F.col("__sn")[h] == F.col("__so")[h], 1).otherwise(0)
-        for h in hs
-    )
-    cross = (
-        db.join(eb, "band")
-        .select(
-            F.least("__new", "__old").alias("id_a"),
-            F.greatest("__new", "__old").alias("id_b"),
-            F.round(agree / F.lit(float(num_hashes)), 6).alias(
-                "jaccard_est"
-            ),
-        )
-    )
-    in_batch = lsh_candidate_pairs(delta_sigs, id_col, num_hashes, band_size)
-    return cross.unionByName(in_batch).dropDuplicates(["id_a", "id_b"])
 
 
 def simhash_expr(text_col: Column, n_bits: int = 16) -> Column:

@@ -505,7 +505,8 @@ def save_ivf_index(
 ) -> list[list[float]]:
     """Persist an IVF index at ingest so probe batches never retrain
     or reassign — the ANN analog of the stored-signature dedup
-    indexes (`incremental_lsh_pairs` / `hamming_band_pairs(index=)`):
+    indexes (`lsh_candidate_pairs(index=)` /
+    `hamming_band_pairs(index=)`, both the `dedup._band_pairs` join):
     the expensive parts of `topk_ivf` are the k-means iterations and
     the corpus assignment scan, both one-time ingest work, while a
     probe batch's own cost is |probes|·nprobe·(n/C).

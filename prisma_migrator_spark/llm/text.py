@@ -449,6 +449,45 @@ def zlib_ratio_df(df: DataFrame, text_col: str = "text",
     )
 
 
+def hashed_term_sums(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    dim: int = 64,
+) -> DataFrame:
+    """The hashed bag of words under both forms of the feature-hashed
+    doc vectors: ``(id_col, dim, v)``, one row per document and
+    touched dimension, ``v`` the sum over the doc's terms of tf × an
+    md5 ±1 sign, each term mapped to ``dim`` = md5 mod ``dim`` (see
+    ``plans/llm.hashed_doc_vectors_q``). Terms are :func:`tokens`;
+    ``v`` may be 0 when signs cancel."""
+    toks = (
+        df.where(F.length(F.trim(text_col)) > 0)
+        .select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
+        .where(F.col("term") != "")
+    )
+    tf = toks.groupBy(id_col, "term").agg(
+        F.count(F.lit(1)).cast("double").alias("tf")
+    )
+
+    def md5_long(prefix: str) -> Column:
+        return F.conv(
+            F.substring(F.md5(F.concat(F.lit(prefix), F.col("term"))), 1, 15),
+            16, 10,
+        ).cast("long")
+
+    sgn = F.when(md5_long("fhs:") % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
+    return (
+        tf.select(
+            id_col,
+            (md5_long("fh:") % dim).cast("int").alias("dim"),
+            (sgn * F.col("tf")).alias("sv"),
+        )
+        .groupBy(id_col, "dim")
+        .agg(F.sum("sv").alias("v"))
+    )
+
+
 def hashed_doc_vector_arrays(
     df: DataFrame,
     text_col: str = "text",
@@ -459,33 +498,10 @@ def hashed_doc_vector_arrays(
     ``plans/llm.hashed_doc_vectors_q`` for the hashing-trick design
     and the oracle-gated sparse form): returns ``(id_col, embedding:
     array<double>)``, L2-normalized, ready for the ANN / near-dup /
-    k-means stack. Assembly is one (id, dim) aggregate followed by a
-    map-side map_from_entries + transform — no per-dim join."""
-    toks = (
-        df.where(F.length(F.trim(text_col)) > 0)
-        .select(
-            id_col,
-            F.explode(F.split(F.lower(F.trim(text_col)), r"\s+")).alias("term"),
-        )
-        .where(F.col("term") != "")
-    )
-    tf = toks.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    dim_col = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fh:"), F.col("term"))), 1, 15),
-               16, 10).cast("long") % dim
-    ).cast("int")
-    sgn = F.when(
-        F.conv(F.substring(F.md5(F.concat(F.lit("fhs:"), F.col("term"))), 1, 15),
-               16, 10).cast("long") % 2 == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-    summed = (
-        tf.select(id_col, dim_col.alias("dim"), (sgn * F.col("tf")).alias("sv"))
-        .groupBy(id_col, "dim")
-        .agg(F.sum("sv").alias("v"))
-    )
+    k-means stack. Assembly is one (id, dim) aggregate
+    (:func:`hashed_term_sums`) followed by a map-side
+    map_from_entries + transform — no per-dim join."""
+    summed = hashed_term_sums(df, text_col, id_col, dim)
     assembled = summed.groupBy(id_col).agg(
         F.map_from_entries(
             F.collect_list(F.struct("dim", "v"))

@@ -26,9 +26,10 @@ step. The pipeline:
    collapsed to the min-id copy per in-batch fp group.
 5. **MinHash dedup vs the stored signature index** — history MinHash
    signatures (8 hashes) persisted and read back;
-   `incremental_lsh_pairs` bands index ∪ delta; a delta doc drops if
-   it agrees on >= 4/8 hashes with any history doc or with a
-   lower-id delta doc.
+   `lsh_candidate_pairs(delta, index=)` bands index ∪ delta through
+   the one banded candidate join (`llm/dedup._band_pairs`), building
+   only pairs with a delta member; a delta doc drops if it agrees on
+   >= 4/8 hashes with any history doc or with a lower-id delta doc.
 6. **Modality dedup vs the stored pHash index** — history image
    signatures persisted at "ingest time" and read back (history
    media is NEVER re-decoded — only the |delta| survivors are
@@ -194,7 +195,7 @@ def daily_batch_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See module docstring — the end-to-end composed daily batch."""
     from prisma_migrator_spark.llm.dedup import (
         hamming_band_pairs,
-        incremental_lsh_pairs,
+        lsh_candidate_pairs,
         minhash_signatures,
         shingles,
     )
@@ -300,7 +301,7 @@ def daily_batch_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_sigs = minhash_signatures(
             shingles(after_exact, k=3, distinct=False), num_hashes=8
         )
-        mh_pairs = incremental_lsh_pairs(sig_index, delta_sigs).where(
+        mh_pairs = lsh_candidate_pairs(delta_sigs, index=sig_index).where(
             F.col("jaccard_est") >= MINHASH_DROP_AT
         )
         mh_drops = pair_drops(mh_pairs, after_exact.select("doc_id"))

@@ -3512,11 +3512,7 @@ def incremental_lsh_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself. The oracle is the FULL-recompute LSH pair query filtered
     to pairs touching the delta — a hash match proves the incremental
     path finds exactly the pairs full recompute would."""
-    from prisma_migrator_spark.llm.dedup import (
-        incremental_lsh_pairs,
-        minhash_signatures,
-        shingles,
-    )
+    from prisma_migrator_spark.llm.dedup import minhash_signatures, shingles
 
     docs = load_table(spark, sf_dir, "documents")
     cut = docs.agg(
@@ -3527,7 +3523,7 @@ def incremental_lsh_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = with_cut.where(F.col("doc_id") > F.col("__cut")).drop("__cut")
     existing_sigs = minhash_signatures(shingles(existing, k=3, distinct=False))
     delta_sigs = minhash_signatures(shingles(delta, k=3, distinct=False))
-    return incremental_lsh_pairs(existing_sigs, delta_sigs)
+    return lsh_candidate_pairs(delta_sigs, index=existing_sigs)
 
 
 # --- sparse TF-IDF cosine similarity join -----------------------------
@@ -5521,35 +5517,10 @@ def hashed_doc_vectors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. All keys are doc-prefixed, so every shuffle is
     co-partitioned on doc_id after the tf aggregate; at 100 TB the
     output is ≤ D rows per document regardless of vocabulary."""
+    from prisma_migrator_spark.llm.text import hashed_term_sums
+
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.where(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim("text")), r"\s+")
-            ).alias("term"),
-        )
-        .where(F.col("term") != "")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    dim = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fh:"), F.col("term"))), 1, 15),
-               16, 10).cast("long") % _HASHED_BOW_DIM
-    ).cast("int")
-    sgn = F.when(
-        F.conv(F.substring(F.md5(F.concat(F.lit("fhs:"), F.col("term"))), 1, 15),
-               16, 10).cast("long") % 2 == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-    summed = (
-        tf.select("doc_id", dim.alias("dim"), (sgn * F.col("tf")).alias("sv"))
-        .groupBy("doc_id", "dim")
-        .agg(F.sum("sv").alias("v"))
-        .where(F.col("v") != 0)
-    )
+    summed = hashed_term_sums(docs, dim=_HASHED_BOW_DIM).where(F.col("v") != 0)
     norms = summed.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
     )

@@ -20,6 +20,8 @@ from typing import TYPE_CHECKING, Any, Iterable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prisma_migrator_spark.llm.dedup import hamming_band_keys
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -576,15 +578,8 @@ def streaming_near_dup_verdicts(
     TTL dedup here."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    n_bands = n_bits // band_bits
     ttl_ms = _interval_us(ttl) // 1000 if ttl is not None else None
-
-    def band(b: int):
-        return F.substring(sig_col, b * band_bits + 1, band_bits)
-
-    keys = [
-        F.concat_ws("|", F.lit(str(b)), band(b)) for b in range(n_bands)
-    ]
+    keys = hamming_band_keys(F.col(sig_col), n_bits, band_bits)
     cols = [F.col(id_col), F.col(sig_col).alias("__sig"),
             F.explode(F.array(*keys)).alias("band")]
     if ttl is not None:

@@ -46,7 +46,7 @@ def _row(rows, stage):
 def test_daily_batch_pipeline_matches_stage_recompute(spark, sf_dir):
     from prisma_migrator_spark.llm.dedup import (
         hamming_band_pairs,
-        incremental_lsh_pairs,
+        lsh_candidate_pairs,
         minhash_signatures,
         shingles,
     )
@@ -126,7 +126,7 @@ def test_daily_batch_pipeline_matches_stage_recompute(spark, sf_dir):
     delta_sigs = minhash_signatures(
         shingles(after_exact, k=3, distinct=False), num_hashes=8
     )
-    mh_pairs = incremental_lsh_pairs(hist_sigs, delta_sigs).where(
+    mh_pairs = lsh_candidate_pairs(delta_sigs, index=hist_sigs).where(
         F.col("jaccard_est") >= MINHASH_DROP_AT
     )
     mh_drops = pair_drops(mh_pairs, after_exact.select("doc_id"))

@@ -3169,47 +3169,149 @@ def test_incremental_hamming_pairs_audio_parity(spark):
     assert got == expected and len(expected) > 0
 
 
-def test_hamming_band_pairs_index_emits_each_pair_once(spark):
+@pytest.mark.parametrize("family", ["hamming", "minhash"])
+def test_band_pairs_index_emits_each_pair_once(spark, family):
     """Against a stored index every output pair is one row, not one
-    per band or per leg: a signature group with two history and two
-    delta members, plus near groups on both sides of the cut, gives
-    the cold job's delta-touching pairs with no duplicate row (the
-    set-based parity pins cannot see one)."""
+    per band or per leg, and the output is the cold job over
+    index ∪ delta restricted to pairs with a delta member: a signature
+    group with two history and two delta members (identical
+    signatures share every band), plus near groups on both sides of
+    the cut, for both families that take ``index=`` (the set-based
+    parity pins cannot see a duplicate row)."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from prisma_migrator_spark.llm.dedup import (
+        hamming_band_pairs,
+        lsh_candidate_pairs,
+    )
+
+    if family == "hamming":
+        def sig(bits_on):
+            return "".join("1" if b in bits_on else "0" for b in range(64))
+
+        groups = {  # signature -> member ids; ids >= 20 are the delta
+            sig([0, 1]): [0, 1, 20, 21],
+            sig([0, 1, 9]): [2, 22],
+            sig([0, 1, 9, 17]): [3],
+            sig([0, 1, 9, 17, 25]): [23],
+            sig(range(32, 40)): [4, 24],
+        }
+        rows = [Row(doc_id=i, phash=s) for s, ids in groups.items() for i in ids]
+        runs = [
+            lambda d, index=None, a=arity, m=maxham: hamming_band_pairs(
+                d, id_col="doc_id", sig_col="phash", n_bits=64, band_bits=8,
+                max_hamming=m, band_arity=a, index=index,
+            )
+            for arity, maxham in ((1, 7), (2, 6))
+        ]
+        must = {(0, 20), (20, 21), (2, 20), (22, 23)}
+    else:
+        groups = {  # 4 bands of 2 min-hashes; ids >= 20 are the delta
+            (1, 2, 3, 4, 5, 6, 7, 8): [0, 1, 20, 21],
+            (1, 2, 3, 4, 50, 60, 70, 80): [2, 22],  # bands 0-1 of the first
+            (100, 200, 3, 4, 500, 600, 700, 800): [3],  # band 1 only
+            (1000, 2000, 3000, 4000, 5000, 6000, 7, 8): [23],  # band 3 only
+            (9,) * 8: [4, 24],
+        }
+        rows = [
+            Row(doc_id=i, **{f"h{j}": h for j, h in enumerate(hs)})
+            for hs, ids in groups.items()
+            for i in ids
+        ]
+        runs = [lambda d, index=None: lsh_candidate_pairs(d, index=index)]
+        must = {(0, 20), (20, 21), (2, 20), (3, 22), (20, 23)}
+    sigs = spark.createDataFrame(rows).localCheckpoint()
+    hist = sigs.where(F.col("doc_id") < 20)
+    delta = sigs.where(F.col("doc_id") >= 20)
+    for run in runs:
+        full = run(sigs)
+        expected = {
+            tuple(r) for r in full.collect() if r.id_a >= 20 or r.id_b >= 20
+        }
+        got = run(delta, index=hist)
+        assert got.count() == got.distinct().count() == len(expected)
+        assert {tuple(r) for r in got.collect()} == expected
+        assert full.count() == full.distinct().count()
+        # same-group pairs across the cut and cross-group pairs both occur
+        assert must <= {(a, b) for a, b, _ in expected}
+
+
+@pytest.mark.parametrize("cap, kept", [(4, False), (5, True)])
+def test_band_pairs_stop_band_counts_index_rows(spark, cap, kept):
+    """One stop-band rule, cold and against an index alike: a bucket
+    counts every row in it, index rows included. One band-0 bucket
+    holds 3 index and 2 delta signatures that share no other band;
+    under ``max_bucket=4`` it is dead in both jobs (no pair), under
+    ``max_bucket=5`` both emit its delta-touching pairs. A cap counted
+    over the delta alone (2 rows) would keep it at 4."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
     from prisma_migrator_spark.llm.dedup import hamming_band_pairs
 
-    def sig(bits_on):
-        return "".join("1" if b in bits_on else "0" for b in range(64))
-
-    groups = {  # signature -> member ids; ids >= 20 are the delta
-        sig([0, 1]): [0, 1, 20, 21],
-        sig([0, 1, 9]): [2, 22],
-        sig([0, 1, 9, 17]): [3],
-        sig([0, 1, 9, 17, 25]): [23],
-        sig(range(32, 40)): [4, 24],
-    }
+    # band 0 all zeros; bands 1-7 repeat one byte per member, so any
+    # two members differ in every band but the first
+    ids = [0, 1, 2, 20, 21]
     sigs = spark.createDataFrame(
-        [Row(doc_id=i, phash=s) for s, ids in groups.items() for i in ids]
+        [Row(doc_id=i, phash="0" * 8 + f"{1 << k:08b}" * 7)
+         for k, i in enumerate(ids)]
     ).localCheckpoint()
-    hist = sigs.where(F.col("doc_id") < 20)
-    delta = sigs.where(F.col("doc_id") >= 20)
-    for arity, maxham in ((1, 7), (2, 6)):
-        kw = dict(id_col="doc_id", sig_col="phash", n_bits=64, band_bits=8,
-                  max_hamming=maxham, band_arity=arity)
-        full = hamming_band_pairs(sigs, **kw)
-        expected = {
-            tuple(r) for r in full.collect() if r.id_a >= 20 or r.id_b >= 20
-        }
-        got = hamming_band_pairs(delta, index=hist, **kw)
-        assert got.count() == got.distinct().count() == len(expected)
-        assert {tuple(r) for r in got.collect()} == expected
-        assert full.count() == full.distinct().count()
-        # same-group pairs across the cut and cross-group pairs both occur
-        assert {(0, 20), (20, 21), (2, 20), (22, 23)} <= {
-            (a, b) for a, b, _ in expected
-        }
+    kw = dict(id_col="doc_id", sig_col="phash", n_bits=64, band_bits=8,
+              max_hamming=64, max_bucket=cap)
+    cold = {
+        (r.id_a, r.id_b) for r in hamming_band_pairs(sigs, **kw).collect()
+        if r.id_b >= 20
+    }
+    got = hamming_band_pairs(
+        sigs.where(F.col("doc_id") >= 20),
+        index=sigs.where(F.col("doc_id") < 20),
+        **kw,
+    ).collect()
+    touching = {(a, b) for a in ids for b in ids if a < b and b >= 20}
+    assert len(got) == len({(r.id_a, r.id_b) for r in got})
+    assert {(r.id_a, r.id_b) for r in got} == cold == (touching if kept else set())
+
+
+@pytest.mark.parametrize("n_bits, band_bits", [(16, 4), (64, 8)])
+def test_streaming_and_batch_hamming_band_keys_agree(
+    spark, monkeypatch, n_bits, band_bits
+):
+    """The streaming near-dup job buckets on the batch join's keys: the
+    key array it explodes, evaluated on the same signatures, equals
+    ``hamming_band_keys`` at arity 1 (what ``hamming_band_pairs``
+    joins on) and the ``'<b>|<band>'`` form, band by band."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from prisma_migrator_spark.llm.dedup import hamming_band_keys
+    from prisma_migrator_spark.streaming import stateful
+
+    built = []
+
+    def spy(*args, **kw):
+        built.append(hamming_band_keys(*args, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(stateful, "hamming_band_keys", spy)
+    rng = random.Random(3)
+    sigs = ["".join(rng.choice("01") for _ in range(n_bits)) for _ in range(20)]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(sigs)],
+                               "doc_id long, simhash string")
+    stateful.streaming_near_dup_verdicts(df, n_bits=n_bits, band_bits=band_bits)
+    assert len(built) == 1, "the streaming job must build its keys with hamming_band_keys"
+    got = df.select(
+        "simhash",
+        F.array(*built[0]).alias("stream"),
+        F.array(*hamming_band_keys(F.col("simhash"), n_bits, band_bits, 1)).alias("batch"),
+    ).collect()
+    for r in got:
+        ref = [
+            f"{b}|{r.simhash[b * band_bits:(b + 1) * band_bits]}"
+            for b in range(n_bits // band_bits)
+        ]
+        assert list(r.stream) == list(r.batch) == ref
 
 
 def test_image_phash_drops_undecodable_payloads(spark):

@@ -45,16 +45,14 @@ PINS = {
     # r9: single-aggregation form — the canonical-row semi-join (and
     # its second documents scan) folded into the fingerprint groupBy
     "clean_corpus": (1, [2], False),
-    # collect_list banding form: one fewer parquet scan than the old
-    # band self-join (signatures computed once, bands exploded from it);
-    # +1 r4: the bounded offset window's constant partition key now
-    # counts as a hash exchange (was Exchange SinglePartition — same
-    # 1-partition movement over n_buckets rows, now warning-free)
-    # r9 single-pass form: signatures ride the band shuffle and the
-    # agreement count is computed inside the bucket pair-explode, so
-    # the two signature re-joins (and their extra documents scans +
-    # exchanges) are gone — 1 scan, banded shuffle + dedup exchange
-    "minhash_lsh_pairs": (3, [2], False),
+    # first-match band self-join (llm/dedup._band_pairs): signatures
+    # ride the join with their ids, so there is no signature re-join
+    # and no dedup exchange; at this scale the band join broadcasts, so
+    # the 2 exchanges are the signature aggregate's, printed once per
+    # join side — as are its two 2-col documents scans. Executed, the
+    # second side is a ReusedExchange of the first: one scan, one
+    # aggregate.
+    "minhash_lsh_pairs": (2, [2, 2], False),
     "topk_cosine_bruteforce": (1, [2, 2], True),
     # r9 one-pass form: the zero-fill left join (and its 1-col train
     # doc_id scan) folds into the gram aggregation via keep_empty
@@ -168,14 +166,14 @@ PINS = {
     # 9-col snapshot scan feeds the dedup, part keys broadcast
     "apps_by_category": (1, [1, 3, 3, 9], False),
     "apps_by_category_open": (1, [1, 1, 2, 9], False),
-    # sign-LSH near-dup: the signed/masked vector frame is
-    # checkpointed ONCE (r5 — halves the n_tables·r plane-dot compute
-    # the self-join sides used to duplicate, and keeps the stop-band
-    # count shuffle out of the join plan: it reduces to a 1-row
-    # broadcast mask applied before the snapshot), so like
-    # copurchase_triangles the final plan has 0 parquet scans; the 2
-    # exchanges are the band self-join's two __key sides
-    "embedding_near_dup_lsh": (2, [], False),
+    # sign-LSH near-dup: the signed vector frame is checkpointed ONCE
+    # (r5 — halves the n_tables·r plane-dot compute the self-join sides
+    # used to duplicate), so like copurchase_triangles the final plan
+    # has 0 parquet scans. The stop-band count is a driver-side job
+    # before the join (llm/dedup._band_pairs), and the band self-join
+    # broadcasts at this scale: 0 hash exchanges (was the two __key
+    # sides)
+    "embedding_near_dup_lsh": (0, [], False),
     # real BMP decode: one scan, zero shuffles (map-only Arrow stage)
     "image_metadata": (0, [2], False),
     # --- round-5c additions ---
