@@ -9,9 +9,11 @@ lives in :mod:`prisma_migrator_spark.sources.jdbc`.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 #: The driver-generated fixture tables (TESTDATA.md).
 TABLES = [
@@ -128,8 +130,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
       on converted columns no longer push to the parquet scan (none of
       the registered plans filter on raw event time).
     """
-    from pyspark.sql import functions as F
-
     sig = _path_signature(path)
     key = None
     if sig is not None:
@@ -150,18 +150,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ns_cols = _nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    ntz_cols = [name for name, dtype in df.dtypes if dtype == "timestamp_ntz"]
-    for c in ntz_cols:
-        df = df.withColumn(
-            c,
-            F.expr(
-                f"cast(convert_timezone('UTC', current_timezone(), `{c}`) as timestamp)"
-            ),
-        )
+    df = _normalize_timestamps(spark.read.parquet(path), ns_cols)
     if key is not None:
         # eviction (ADVICE r9): entries keyed to another applicationId
         # belong to a stopped/replaced session and can never hit again
@@ -175,6 +164,65 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             _DF_CACHE.clear()
         _DF_CACHE[key] = df
     return df
+
+
+def _normalize_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """:func:`read_parquet`'s timestamp normalization of a raw parquet
+    read: ``ns_cols`` read as raw nanos (``bigint``) become microsecond
+    instants, and every ``timestamp_ntz`` column becomes the instant
+    its wall-clock value names in UTC."""
+    from pyspark.sql import functions as F
+
+    for c in ns_cols:
+        if dict(df.dtypes).get(c) == "bigint":
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+    ntz_cols = [name for name, dtype in df.dtypes if dtype == "timestamp_ntz"]
+    for c in ntz_cols:
+        df = df.withColumn(
+            c,
+            F.expr(
+                f"cast(convert_timezone('UTC', current_timezone(), `{c}`) as timestamp)"
+            ),
+        )
+    return df
+
+
+def read_parquet_as(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The parquet files directly under ``path``, read as ``schema`` —
+    a schema in :func:`read_parquet`'s output types that the caller
+    already holds, e.g. the columns it will join on. Spark infers no
+    schema from the footers (that costs a job), and a directory that
+    holds no part file reads as empty instead of failing with
+    ``UNABLE_TO_INFER_SCHEMA``.
+
+    The footers are still read here, on the driver: a read with a
+    given schema returns NULL for a column a file lacks, so a part
+    file missing a column of ``schema`` raises ``ValueError`` instead;
+    and TIMESTAMP(NANOS) columns are read as raw nanos and get
+    :func:`read_parquet`'s conversion. A naive timestamp column needs
+    none: Spark reads it as ``TIMESTAMP`` at the instant its
+    wall-clock value names in UTC, under any session time zone, which
+    is what :func:`read_parquet` makes of it."""
+    import pyarrow.parquet as pq
+
+    ns_cols = set()
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        footer = pq.read_metadata(os.path.join(path, name)).schema
+        missing = set(schema.names) - set(footer.to_arrow_schema().names)
+        if missing:
+            raise ValueError(f"{path}/{name} lacks column(s) {sorted(missing)}")
+        for col in (footer.column(i) for i in range(len(footer))):
+            unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+            if col.path in schema.names and unit == "nanoseconds":
+                ns_cols.add(col.path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    as_stored = StructType(
+        [StructField(f.name, LongType(), f.nullable) if f.name in ns_cols else f for f in schema]
+    )
+    return _normalize_timestamps(spark.read.schema(as_stored).parquet(path), list(ns_cols))
 
 
 #: Memo for :func:`ensure_parallelism`, keyed by the input DataFrame's

@@ -464,59 +464,52 @@ def connected_components(
     Iterative min-label propagation: each round every node adopts
     ``min(own label, neighbors' labels)``; converges in O(graph
     diameter) rounds — duplicate clusters are near-cliques, so 2-4
-    rounds in practice. Each round is one join + one agg (both keyed
-    on node id) over the edge list. This is the standard scale
-    pattern (HashToMin) — no driver-side graph, no GraphFrames
-    dependency.
+    rounds in practice — and stops at the first round that changes no
+    label. This is the standard scale pattern (HashToMin) — no
+    driver-side graph, no GraphFrames dependency.
 
-    Rounds are snapshotted with eager ``localCheckpoint`` rather than
-    ``persist``: a cached round's plan still references the whole
-    chain of prior rounds, and any partition a probing action didn't
-    materialize recomputes through that chain once the previous round
-    is unpersisted — measured round times GREW 1.7s -> 8.2s over 5
-    rounds with persist and stay flat at ~0.5s with checkpoints
-    (PERF.md #29). The trade: checkpoint blocks are executor-local
-    and unreplicated, so a lost executor fails the job
-    (restart-and-rerun); a 100 TB production run points
-    ``sparkContext.setCheckpointDir`` at durable storage and swaps in
-    ``checkpoint()`` — same plan shape, fault-tolerant snapshots.
+    It runs on the graph family's edge frame and round loop
+    (``plans/graph._lpa_edges`` and ``_rounds``): the symmetric edges
+    are partitioned by receiver and persisted once, every round is
+    snapshotted with an eager ``localCheckpoint``, and the changed
+    flag is counted while the snapshot is written. Round 1 from
+    identity labels is one per-receiver MIN with no label state. The
+    label join is left to AQE (broadcast when the checkpointed labels
+    are small, shuffled when they are not): the vertex set is
+    documents, which can outgrow a broadcast.
     """
-    edges = pairs.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    # imported here: the plans package imports this module
+    from prisma_migrator_spark.plans.graph import _lpa_edges, _rounds
+
+    edges = _lpa_edges(
+        pairs.select(F.col(src_col).alias("pa"), F.col(dst_col).alias("pb"))
     )
-    und = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = (
-        und.select(F.col("src").alias("node")).distinct()
-        .withColumn("component", F.col("node"))
-    )
-    for _ in range(max_iters):
-        neighbor_min = (
-            und.join(labels, und.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # changed-flag computed in the same pass as the new label —
-        # no extra old-vs-new join per round
-        flagged = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
+
+    def step(labels: DataFrame | None) -> DataFrame:
+        if labels is None:  # round 1: identity labels, a message is its sender's id
+            nbr = edges.groupBy("dst").agg(F.min("src").alias("__m")).select(
+                F.col("dst").alias("node"), "__m", F.col("dst").alias("component")
+            )
+        else:
+            nbr = (
+                edges.join(
+                    labels.select(
+                        F.col("node").alias("src"), F.col("component").alias("__l")
+                    ),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.min("__l").alias("__m"))
+                .withColumnRenamed("dst", "node")
+                .join(labels, "node")
+            )
+        return nbr.select(
             "node",
-            F.least(
-                F.col("component"), F.coalesce("nbr_min", F.col("component"))
-            ).alias("component"),
-            (F.coalesce("nbr_min", F.col("component")) < F.col("component")).alias(
-                "__changed"
-            ),
-        ).localCheckpoint()
-        changed = flagged.agg(
-            F.coalesce(F.sum(F.col("__changed").cast("int")), F.lit(0)).alias("n")
-        ).first()["n"]
-        labels = flagged.drop("__changed")
-        if changed == 0:
-            break
-    return labels
+            F.least("__m", "component").alias("component"),
+            (F.col("__m") < F.col("component")).alias("__changed"),
+        )
+
+    return _rounds(edges, None, step, max_iters, stop=True)[0]
 
 
 def near_dup_clusters(

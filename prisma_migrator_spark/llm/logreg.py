@@ -18,8 +18,10 @@ Execution shape per gradient-descent iteration:
   scalar literals — those force a fresh janino compile of the
   dim-wide aggregate every iteration; see train_logreg's docstring);
 - z = w·x is a zip_with fold on the feature array, projected once
-  before the aggregate — pure whole-stage-codegen expressions, zero
-  Python;
+  before the aggregate — JVM expressions, zero Python, but not
+  compiled: ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
+  in Spark 4.1, so the generated stage evaluates them per element
+  through interpreted lambdas;
 - the gradient Σ (σ(z) − y)·x, the log-loss Σ, and the row count
   come back as ONE HashAggregate row (dim + 2 partially-aggregated
   sums — map-side combine does the heavy lifting, the shuffle is

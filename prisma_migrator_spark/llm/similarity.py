@@ -1,8 +1,12 @@
 """Similarity search over embedding columns.
 
 - ``cosine``: pure-Column cosine similarity over ``array<float>`` —
-  ``zip_with`` product + ``aggregate`` sums, all JVM-side codegen
-  (no UDF, no Python, no data movement).
+  ``zip_with`` product + ``aggregate`` sums, JVM-side (no UDF, no
+  Python, no data movement) but not compiled: in Spark 4.1
+  ``ZipWith`` and ``ArrayAggregate`` implement ``CodegenFallback``,
+  so the generated stage calls out to them and they run per element
+  through interpreted lambdas (JFR samples of the measured
+  ``report_suite`` pass show ``ZipWith.eval`` in executor threads).
 - ``topk_bruteforce``: exact top-k per probe — broadcast the (small)
   probe set against the full corpus, window row_number per probe.
   O(|probes|·n); the right baseline and the correctness oracle for

@@ -16,6 +16,10 @@ Re-expresses ``src/migrate.ts``'s main loop Spark-first:
 One write per table, counts observed: each table copy is a single
 Spark write action that reads the source once (and, on a resume, the
 destination once), like the reference's one ``findMany`` per model.
+The destination is read with the source's schema, only the key
+columns for a keyed table (``catalog.read_parquet_as``): no schema
+inference job, and a destination directory that holds no part file
+yet resumes as empty.
 ``rows_read`` and ``rows_written`` are not counted by jobs of their
 own; they are ``Observation`` metrics attached to the source and to
 the frame being written, read after the write returns. Caveat:
@@ -36,8 +40,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
-from prisma_migrator_spark.catalog import list_tables, read_parquet
+from prisma_migrator_spark.catalog import list_tables, read_parquet, read_parquet_as
 from prisma_migrator_spark.operators.driver_state import observe_rows
 from prisma_migrator_spark.writers.upsert import append_skip_duplicates
 
@@ -90,7 +95,8 @@ def migrate_table(
         df, n_read = observe_rows(read_parquet(spark, src_path))
         keys = (key_cols or {}).get(table)
         if os.path.exists(dst_path):
-            existing = read_parquet(spark, dst_path)
+            schema = StructType([df.schema[k] for k in keys]) if keys else df.schema
+            existing = read_parquet_as(spark, dst_path, schema)
             fresh, n_new = observe_rows(
                 append_skip_duplicates(df, existing, keys)
                 if keys

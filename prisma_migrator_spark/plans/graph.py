@@ -15,22 +15,26 @@ plan every step.
 Scale notes:
 - Edge generation is a self-join on the order key: candidate cost is
   Σ per-order-size² (orders hold ≤7 items), never n².
-- Each PageRank iteration is ONE shuffle: edges ⋈ ranks on src
-  (both pre-partitioned on the join key — AQE reuses the layout),
-  then a groupBy(dst) sum. Rank state is checkpointed every
-  ``checkpoint_every`` iterations (see :func:`pagerank`).
+- PageRank, label propagation and ``llm/dedup.connected_components``
+  share one edge frame (:func:`_lpa_edges`: partitioned by the message
+  receiver, deduplicated partition-locally, persisted) and one round
+  loop (:func:`_rounds`: state snapshots on a cadence, optional stop at
+  a fixed point). With the |V|-row state broadcast, a round's
+  per-receiver aggregate needs no exchange.
 - Edge frames with several consumers are snapshotted
   (:func:`_snapshot_edges`) through ``operators/driver_state.pin``;
   the query registry releases them before it builds the next
-  registered query. Label propagation persists its edge frame and
-  unpersists it itself, before it returns.
+  registered query. The round loop unpersists its edge frame itself,
+  before it returns.
 - Determinism: contributions are rounded per iteration on BOTH
   engines, so cross-engine float summation drift cannot compound.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from prisma_migrator_spark.catalog import load_table
@@ -60,10 +64,7 @@ def _graph_width(spark: SparkSession, fact: DataFrame) -> int | None:
     metadata, noise next to a single wedge-join task."""
     if fact.count() < _GRAPH_WIDTH_MIN_ROWS:
         return None
-    try:
-        return 4 * spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no SparkContext access
-        return 256
+    return 4 * spark.sparkContext.defaultParallelism
 
 
 #: Damping factor (standard) and fixed iteration count — fixed so the
@@ -152,6 +153,99 @@ def copurchase_edges(
     ).select("e.src", "e.dst")
 
 
+def _lpa_edges(frame: DataFrame, n_edge_partitions: int | None = None) -> DataFrame:
+    """The graph code's one edge materialization: ``(src, dst)`` rows,
+    symmetric when ``frame`` holds one-direction pairs ``(pa, pb)``
+    and directed when it holds edges ``(src, dst)``. Repartitioned by
+    ``dst`` (the message RECEIVER), deduplicated partition-locally
+    (dst-partitioning satisfies the (src, dst) clustering, so the
+    distinct costs no exchange, and callers may pass non-deduplicated
+    pairs, e.g. ``copurchase_pairs(..., distinct=False)``), and
+    persisted; :func:`_rounds` unpersists it.
+
+    ``persist`` (not ``localCheckpoint``) is deliberate twice over: a
+    checkpointed RDD scan forgets its ``outputPartitioning`` (bringing
+    the per-round exchange back), and an evicted checkpoint block is
+    fatal while an evicted cache block just recomputes. Both
+    directions of a pair come from ONE pass over the pair stream (a
+    two-branch union would execute the upstream pair generation
+    twice).
+
+    The materialization is memory-bound (dedup hash table + the
+    persist itself): the session's CPU-sized shuffle width starves it
+    at scale — measured at sf10 (180M edges): 182 s wall at 32
+    partitions vs 86 s at 128. ``n_edge_partitions`` (None = the
+    session width) comes from :func:`_graph_width`.
+    """
+    if "pa" in frame.columns:
+        frame = frame.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
+                    F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
+                )
+            ).alias("e")
+        ).select("e.*")
+    frame = frame.select("src", "dst")
+    frame = (
+        frame.repartition(n_edge_partitions, "dst")
+        if n_edge_partitions
+        else frame.repartition("dst")
+    )
+    return frame.dropDuplicates(["src", "dst"]).persist()  # partition-local
+
+
+def _rounds(
+    edges: DataFrame,
+    state: DataFrame | None,
+    step: Callable[[DataFrame | None], DataFrame],
+    n_iter: int,
+    checkpoint_every: int = 1,
+    stop: bool = False,
+) -> tuple[DataFrame, int]:
+    """Up to ``n_iter`` synchronous rounds ``state = step(state)`` over
+    the persisted ``edges``; returns ``(state, rounds_run)`` and
+    unpersists ``edges``.
+
+    The loop owns the |V|-row state snapshot: an eager
+    ``localCheckpoint`` every ``checkpoint_every`` rounds and after the
+    last one, which must be materialized before the edges it reads are
+    released. Rounds are snapshotted rather than persisted: a cached
+    round's plan still references the whole chain of prior rounds,
+    and any partition an action didn't materialize recomputes through
+    it — measured round times GREW 1.7 s → 8.2 s over 5 rounds with
+    persist and stay flat with checkpoints (PERF.md #29). Checkpoint
+    blocks are executor-local and unreplicated; a 100 TB run points
+    ``setCheckpointDir`` at durable storage and swaps in
+    ``checkpoint()``.
+
+    With ``stop``, every round is snapshotted, ``step`` flags each
+    node's ``__changed`` in the same pass as its new state, and an
+    ``Observation`` counts the flags while the snapshot is written —
+    no job of its own. A synchronous round that changed nothing is a
+    fixed point, so the loop ends there; ``rounds_run == n_iter``
+    tells the caller the bound was hit. A ``state`` of None means the
+    first ``step`` builds it, so at least one round must run."""
+    if state is None and n_iter < 1:
+        edges.unpersist()
+        raise ValueError(f"n_iter must be >= 1 to build the first state, got {n_iter}")
+    done = 0
+    while done < n_iter:
+        done += 1
+        state = step(state)
+        if stop:
+            changed = Observation()
+            state = state.observe(
+                changed, F.count_if("__changed").alias("n")
+            ).drop("__changed")
+        if stop or done % checkpoint_every == 0 or done == n_iter:
+            state = state.localCheckpoint()
+        if stop and not changed.get["n"]:
+            break
+    edges.unpersist()
+    return state, done
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = _N_ITER,
@@ -159,73 +253,62 @@ def pagerank(
     checkpoint_every: int = 4,
     broadcast_ranks: bool = True,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list.
+    """Fixed-iteration PageRank over directed ``(src, dst)`` edges, or
+    over the undirected graph of one-direction ``(pa, pb)`` pairs
+    (both directions, see :func:`_lpa_edges`).
 
     ``rank_{k+1}(v) = (1-d)/N + d * Σ_{u→v} rank_k(u)/outdeg(u)``.
 
-    The symmetric co-purchase graph has no dangling nodes (every node
-    with an edge has out-degree ≥ 1), so no dangling-mass term is
-    needed. N is computed as a 1-row aggregate broadcast back — no
-    driver collect.
+    The vertex set is the nodes with an out-edge, as in the oracles;
+    the symmetric co-purchase graph has no dangling nodes, so no
+    dangling-mass term is needed. N is a 1-row aggregate broadcast
+    back — no driver collect.
 
-    Scale shape (re-measured and reworked twice after the r4 rehearsal
-    recorded 13.9×/decade at sf10; phase profile: edge materialization
-    137 s, iterations 36 s each):
+    Scale shape (reworked after the r4 rehearsal recorded 13.9×/decade
+    at sf10; phase profile: edge materialization 137 s, iterations
+    36 s each):
 
-    - the edge list is the ONLY big eager materialization: bare
-      (src, dst) pairs, no weight column, one ``localCheckpoint``.
-      The old form paid the Σ per-order² self-join twice (once for
-      ``weighted``, once for ``nodes``) plus an outdeg join AND a
-      repartition over the full edge mass before checkpointing;
+    - the edge list is the ONLY big materialization: bare (src, dst)
+      pairs, no weight column, the shared receiver-partitioned frame;
     - ``1/outdeg`` is folded into the |V|-row rank frame, not the
       |E|-row edge frame: ``rank_w(u) = rank(u)/outdeg(u)`` is a
-      2-column |V| join per iteration, and the per-iteration
-      contribution join BROADCASTS it (|V| ≪ |E| here — parts vs
-      co-purchase pairs; ``broadcast_ranks=False`` falls back to a
-      shuffle join for graphs whose vertex set outgrows executor
-      memory). The checkpointed edges therefore NEVER shuffle again —
-      each iteration is one map-side join over the checkpoint plus
-      the groupBy(dst) partial-agg shuffle (|partitions|·|V| partial
-      rows), which IS the irreducible PageRank shuffle;
-    - ``outdeg``/``nodes`` are |V|-row frames checkpointed once
-      (cheap) so no iteration re-aggregates the edge mass;
-    - rank state is NOT checkpointed per round: a round's frame is
-      |V| rows, and the default 3-iteration lineage is a shallow
-      join chain Catalyst handles. ``checkpoint_every`` bounds
-      lineage for long runs without the per-round local-disk writes
-      that dominated the r4 sf10 number.
+      2-column |V| join per iteration, and the contribution join
+      BROADCASTS it (|V| ≪ |E| here; ``broadcast_ranks=False`` falls
+      back to a shuffle join for vertex sets that outgrow executor
+      memory). The broadcast join keeps the edges' dst-partitioning,
+      so the per-``dst`` sum runs partition-local: the edges never
+      shuffle again;
+    - ``outdeg`` is a |V|-row frame checkpointed once, so no
+      iteration re-aggregates the edge mass;
+    - rank state is snapshotted every ``checkpoint_every`` rounds and
+      after the last (:func:`_rounds`): a round's frame is |V| rows,
+      and the default 3-iteration lineage is a shallow join chain.
     """
-    edges_p = edges.localCheckpoint()
-    out = (
-        edges_p.groupBy("src")
+    e = _lpa_edges(edges)
+    deg = (
+        e.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint()
     )
-    nodes = out.select(F.col("src").alias("node"))
+    nodes = deg.select("node")
     n_df = nodes.agg(F.count(F.lit(1)).alias("__n"))
 
-    ranks = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", F.round(1.0 / F.col("__n"), _ITER_SCALE).alias("rank")
-    )
-    for i in range(n_iter):
-        rank_w = ranks.join(
-            out.select(F.col("src").alias("node"), "outdeg"), "node"
-        ).select(
+    def step(ranks: DataFrame) -> DataFrame:
+        rank_w = ranks.join(deg, "node").select(
             F.col("node").alias("src"),
             # rank * (1/outdeg), NOT rank/outdeg: mirrors the oracle's
             # two-rounding float sequence so the per-iteration ROUND
             # sees identical inputs on both engines
             (F.col("rank") * (F.lit(1.0) / F.col("outdeg"))).alias("__rw"),
         )
-        if broadcast_ranks:
-            rank_w = F.broadcast(rank_w)
         contrib = (
-            edges_p.join(rank_w, "src")
+            e.join(F.broadcast(rank_w) if broadcast_ranks else rank_w, "src")
             .groupBy("dst")
             .agg(F.sum("__rw").alias("__in"))
+            .withColumnRenamed("dst", "node")
         )
-        ranks = (
-            nodes.join(contrib.select(F.col("dst").alias("node"), "__in"), "node", "left")
+        return (
+            nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(n_df))
             .select(
                 "node",
@@ -236,79 +319,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
-
-
-def pagerank_symmetric(
-    pairs: DataFrame,
-    n_iter: int = _N_ITER,
-    damping: float = _DAMPING,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """PageRank specialized to an UNDIRECTED graph given as
-    one-direction (pa < pb) distinct pairs — identical math and
-    output as :func:`pagerank` over the symmetrized edge list, at
-    half the materialization cost: only the |E|/2 pair rows are
-    checkpointed, and each iteration probes the broadcast rank_w
-    table twice (pa-side and pb-side contributions, both map-side)
-    instead of scanning a doubled edge list. Degree is the per-key
-    count over both columns (an undirected vertex's out-degree equals
-    its degree). The per-iteration shuffle remains the groupBy(dst)
-    partial agg — the irreducible one."""
-    pairs_p = pairs.select("pa", "pb").localCheckpoint()
-    deg = (
-        pairs_p.select(F.col("pa").alias("src"))
-        .unionByName(pairs_p.select(F.col("pb").alias("src")))
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint()
-    )
-    nodes = deg.select(F.col("src").alias("node"))
-    n_df = nodes.agg(F.count(F.lit(1)).alias("__n"))
 
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", F.round(1.0 / F.col("__n"), _ITER_SCALE).alias("rank")
     )
-    for i in range(n_iter):
-        rank_w = F.broadcast(
-            ranks.join(
-                deg.select(F.col("src").alias("node"), "outdeg"), "node"
-            ).select(
-                F.col("node").alias("__u"),
-                # rank * (1/outdeg): mirror the oracle's float sequence
-                (F.col("rank") * (F.lit(1.0) / F.col("outdeg"))).alias("__rw"),
-            )
-        )
-        fwd = pairs_p.join(
-            rank_w, pairs_p.pa == F.col("__u")
-        ).select(F.col("pb").alias("dst"), "__rw")
-        bwd = pairs_p.join(
-            rank_w, pairs_p.pb == F.col("__u")
-        ).select(F.col("pa").alias("dst"), "__rw")
-        contrib = (
-            fwd.unionByName(bwd)
-            .groupBy("dst")
-            .agg(F.sum("__rw").alias("__in"))
-        )
-        ranks = (
-            nodes.join(
-                contrib.select(F.col("dst").alias("node"), "__in"), "node", "left"
-            )
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                "node",
-                F.round(
-                    (1.0 - damping) / F.col("__n")
-                    + damping * F.coalesce(F.col("__in"), F.lit(0.0)),
-                    _ITER_SCALE,
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
+    return _rounds(e, ranks, step, n_iter, checkpoint_every)[0]
 
 
 _PAGERANK_ORACLE = f"""
@@ -372,12 +387,12 @@ def part_copurchase_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     each part in the purchase network, the graph upgrade of the
     reference's one-hop weighted in-degree
     (src/utils/lib.ts:355-362). The oracle unrolls the identical
-    three iterations as chained CTEs. Uses the symmetric fast path —
-    the graph is undirected, so only the |E|/2 pair rows ever
-    materialize (:func:`pagerank_symmetric`)."""
+    three iterations as chained CTEs. The pairs go in one-direction
+    and non-deduplicated: :func:`pagerank` symmetrizes them and dedups
+    partition-locally in its edge frame."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    ranks = pagerank_symmetric(
-        copurchase_pairs(li, n_partitions=_graph_width(spark, li))
+    ranks = pagerank(
+        copurchase_pairs(li, distinct=False, n_partitions=_graph_width(spark, li))
     )
     return ranks.select(
         F.col("node").alias("l_partkey"),
@@ -853,9 +868,10 @@ def label_propagation(
     pairs: DataFrame,
     n_iter: int = _LPA_ITER,
     n_edge_partitions: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Synchronous label propagation (Raghavan et al. 2007) over an
-    undirected graph given as one-direction (pa < pb) distinct pairs.
+    undirected graph given as one-direction (pa < pb) pairs, for at
+    most ``n_iter`` ≥ 1 rounds. Returns ``(labels, rounds_run)``.
 
     Every node starts labeled with its own id; each round, every node
     adopts the most frequent label among its NEIGHBORS (self label
@@ -864,31 +880,29 @@ def label_propagation(
     result engine-reproducible — the asynchronous variant's
     order-dependence is exactly what an oracle can't check.
 
+    Rounds stop early at a fixed point (a round that changed no
+    label), which returns the same labels as running all ``n_iter``:
+    the oracle-able contract is a fixed round count (DuckDB can unroll
+    k rounds, it cannot express "until converged"), and the production
+    form is done when communities stop moving. On bipartite-ish
+    structures synchronous updates can 2-cycle instead of converging;
+    ``n_iter`` bounds that, and ``rounds_run == n_iter`` tells the
+    caller the bound was hit.
+
     Scale shape — ONE wide shuffle total, zero exchanges per round
     (the iteration cost is paid once, at edge materialization — the
     same "pay the shuffle at write time" move as the bucketed-table
     layout):
-    - the symmetric edge list is built from NON-deduplicated pair
-      instances, repartitioned by ``dst`` (the message RECEIVER),
-      deduplicated partition-locally (dst-partitioning satisfies the
-      (src, dst) clustering, so the distinct costs no exchange — and
-      the usual pair-level wide ``distinct`` is skipped, pass
-      ``copurchase_pairs(..., distinct=False)``), and persisted.
-      ``persist`` (not ``localCheckpoint``) is deliberate twice
-      over: a checkpointed RDD scan forgets its
-      ``outputPartitioning`` (bringing the per-round exchange back),
-      and an evicted checkpoint block is fatal while an evicted
-      cache block just recomputes;
-    - every round's broadcast-hash join preserves that partitioning,
-      so the per-round aggregate needs NO exchange — a round is one
-      in-memory edge scan + a partition-local aggregate;
+    - the receiver-partitioned, persisted edge frame
+      (:func:`_lpa_edges`); every round's broadcast-hash join
+      preserves its partitioning, so the per-round aggregate needs NO
+      exchange — a round is one in-memory edge scan + a
+      partition-local aggregate;
     - round 1 never runs the general update at all: from identity
       labels on a simple graph every neighbor label is distinct, so
       every count is 1 and the most-frequent-tie-to-lowest rule
       degenerates to ``min(neighbor id)`` — a plain vectorized MIN
-      with no join and no label state (this also yields the initial
-      label frame for free, replacing the separate distinct-nodes
-      pass);
+      with no join and no label state;
     - later rounds run count-per-(dst, label) then a max-struct
       argmax — BOTH partition-local under the dst-partitioning, both
       whole-stage-codegen HashAggregates over primitive buffers.
@@ -899,143 +913,39 @@ def label_propagation(
       update rule as one aggregate — avoids the shuffles but its
       ObjectHashAggregate map buffers run ~3× slower than the
       codegen'd pair (61 s vs 22 s for the round);
-    - label state is |V| rows, eagerly localCheckpoint'ed per round
-      (iterative-state discipline, PERF.md #29) and re-broadcast
-      (for vertex sets too big to broadcast, swap the message join
-      to a shuffle join — the round structure is unchanged).
+    - label state is |V| rows, snapshotted per round by
+      :func:`_rounds` and re-broadcast; the change flag is one more
+      map-side probe of the same broadcast state (for vertex sets too
+      big to broadcast, swap the message join to a shuffle join — the
+      round structure is unchanged).
     """
     edges = _lpa_edges(pairs, n_edge_partitions)
-    if n_iter <= 0:
-        labels = (
-            edges.select(F.col("dst").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint()
+
+    def step(labels: DataFrame | None) -> DataFrame:
+        if labels is None:  # round 1: identity labels, all distinct ⇒ min
+            return edges.groupBy("dst").agg(
+                F.min("src").alias("label"), F.lit(True).alias("__changed")
+            ).withColumnRenamed("dst", "node")
+        lw = F.broadcast(labels)
+        counts = (
+            edges.join(lw, edges.src == lw.node)
+            .groupBy("dst", "label")
+            .agg(F.count(F.lit(1)).alias("__c"))
         )
-        edges.unpersist()
-        return labels
-    # round 1 = min(neighbor id): identity labels, all-distinct ⇒ tie
-    labels = (
-        edges.groupBy("dst")
-        .agg(F.min("src").alias("label"))
-        .select(F.col("dst").alias("node"), "label")
-        .localCheckpoint()
-    )
-    for _ in range(n_iter - 1):
-        labels = _lpa_round(edges, labels)
-    edges.unpersist()
-    return labels
-
-
-def _lpa_edges(pairs: DataFrame, n_edge_partitions: int | None) -> DataFrame:
-    """Materialize the symmetric, receiver-partitioned, deduplicated,
-    persisted edge frame every LPA round scans (see
-    :func:`label_propagation` for the why of each step).
-
-    The edge materialization is memory-bound (dedup hash table + the
-    persist itself), not CPU-bound: the session's default shuffle
-    parallelism (sized ≈ cores) starves it at scale — measured at
-    sf10 (180M edges): 182 s wall at 32 partitions vs 86 s at 128,
-    the difference being dedup/persist spill. 4× the cluster's core
-    count keeps one task's slice of the graph small enough to build
-    and cache without thrashing.
-    """
-    # None = keep the session shuffle width (right below ~20M fact
-    # rows — callers size via _graph_width, which probes the data)
-    # both directions from ONE pass over the pair stream (a
-    # two-branch union would execute the whole upstream pair
-    # generation twice — there is deliberately no checkpoint above us)
-    sym = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("pa").alias("src"), F.col("pb").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("pb").alias("src"), F.col("pa").alias("dst")
-                    ),
-                )
-            ).alias("e")
+        return (
+            counts.groupBy("dst")
+            .agg(F.max(F.struct("__c", (-F.col("label")).alias("nl"))).alias("__m"))
+            .select(F.col("dst").alias("node"), (-F.col("__m.nl")).alias("label"))
+            .alias("new")
+            .join(lw.alias("old"), "node")  # the message join's broadcast, reused
+            .select(
+                "node",
+                "new.label",
+                (F.col("new.label") != F.col("old.label")).alias("__changed"),
+            )
         )
-        .select("e.src", "e.dst")
-    )
-    sym = (
-        sym.repartition(n_edge_partitions, "dst")
-        if n_edge_partitions
-        else sym.repartition("dst")
-    )
-    return (
-        sym.dropDuplicates(["src", "dst"])  # partition-local, no exchange
-        .persist()
-    )
 
-
-def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One general synchronous LPA round: exchange-free count +
-    max-struct argmax over the receiver-partitioned edges; the new
-    |V|-row label frame comes back eagerly checkpointed."""
-    lw = F.broadcast(labels)
-    counts = (
-        edges.join(lw, edges.src == lw.node)
-        .select("dst", "label")
-        .groupBy("dst", "label")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    return (
-        counts.groupBy("dst")
-        .agg(
-            F.max(
-                F.struct(F.col("__c"), (-F.col("label")).alias("nl"))
-            ).alias("__m")
-        )
-        .select(F.col("dst").alias("node"), (-F.col("__m.nl")).alias("label"))
-        .localCheckpoint()
-    )
-
-
-def label_propagation_converged(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    n_edge_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """:func:`label_propagation` run to a FIXED POINT: rounds stop as
-    soon as no node changes its label (or at ``max_iter``). Returns
-    ``(labels, rounds_run)``.
-
-    The fixed-iteration form is the oracle-able contract (DuckDB can
-    unroll k rounds; it cannot express "until converged"); this is
-    the production form — community structure is done when it stops
-    moving, not after a magic round count. The convergence probe is
-    a |V|-row join + 1-row count per round against the two
-    checkpointed label frames — noise next to the round itself. Same
-    caveat as classic LPA: on bipartite-ish structures synchronous
-    updates can 2-cycle instead of converging; ``max_iter`` bounds
-    that, and the caller sees the bound was hit because
-    ``rounds_run == max_iter``.
-    """
-    edges = _lpa_edges(pairs, n_edge_partitions)
-    labels = (
-        edges.groupBy("dst")
-        .agg(F.min("src").alias("label"))
-        .select(F.col("dst").alias("node"), "label")
-        .localCheckpoint()
-    )
-    rounds = 1
-    while rounds < max_iter:
-        new = _lpa_round(edges, labels)
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new
-        rounds += 1
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels, rounds
+    return _rounds(edges, None, step, n_iter, stop=True)
 
 
 _LPA_ORACLE = f"""
@@ -1090,7 +1000,7 @@ def copurchase_communities_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     host's ~2x run-to-run compute variance."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     width = _graph_width(spark, li)
-    labels = label_propagation(
+    labels, _ = label_propagation(
         copurchase_pairs(li, distinct=False, n_partitions=width),
         n_iter=_LPA_ITER,
         n_edge_partitions=width,

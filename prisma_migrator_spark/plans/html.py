@@ -328,10 +328,11 @@ def html_link_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: synthesis and extraction are map-side (JVM concat,
     one Arrow-batched parse pass); the edge list is |docs|x4 rows
-    before DISTINCT; the semi-join broadcasts under AQE when ids fit
-    (and shuffles when not — correct either way); PageRank is the
-    audited implementation: checkpointed edges, |V|-row broadcast
-    rank frames, one groupBy(dst) shuffle per iteration."""
+    before PageRank's edge frame deduplicates it; the semi-join
+    broadcasts under AQE when ids fit (and shuffles when not —
+    correct either way); PageRank is the audited implementation:
+    receiver-partitioned persisted edges, |V|-row broadcast rank
+    frames, a partition-local per-``dst`` sum per iteration."""
     from prisma_migrator_spark.plans.graph import pagerank
 
     docs = load_table(spark, sf_dir, "documents")
@@ -350,8 +351,7 @@ def html_link_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .join(ids.select(F.col("doc_id").alias("dst")), "dst", "semi")
         .select("src", "dst")
-        .distinct()
-    )
+    )  # pagerank's edge frame deduplicates
     ranks = pagerank(edges)
     return ranks.select(
         F.col("node").alias("doc_id"),

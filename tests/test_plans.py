@@ -237,6 +237,22 @@ def test_headline_plan_pinned(spark, name):
         assert "CartesianProduct" not in plan
 
 
+def test_minhash_lsh_pairs_executed_plan_scans_documents_once(spark):
+    """The ``PINS`` entry for ``minhash_lsh_pairs`` counts the printed
+    initial plan, which repeats the signature aggregate (and its
+    2-column ``documents`` scan) once per band-join side. Executed,
+    the second side must read that aggregate through a
+    ``ReusedExchange``: one scan, one signature aggregate."""
+    df = QUERIES["minhash_lsh_pairs"](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\].*?Location: \w+\([^)]*\)\[([^\]]*)\]", final)
+    assert len(scans) == 1, scans
+    assert scans[0][1].endswith("/documents.parquet"), scans
+    assert "ReusedExchange" in final, final
+
+
 def test_pins_literal_has_no_duplicate_keys():
     """A duplicate key in the PINS dict literal silently shadows the
     earlier entry (Python keeps the last), turning a pin into dead

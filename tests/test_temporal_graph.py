@@ -534,6 +534,26 @@ def test_incremental_sessionize_full_precision_sums(spark):
     ]
 
 
+def _python_lpa(pair_list, n_iter):
+    """A literal Python transcription of the synchronous LPA recurrence,
+    run for exactly ``n_iter`` rounds (never stopping early)."""
+    import collections
+
+    adj = collections.defaultdict(set)
+    for a, b in pair_list:
+        adj[a].add(b)
+        adj[b].add(a)
+    labels = {v: v for v in adj}
+    for _ in range(n_iter):
+        new = {}
+        for v in adj:
+            cnt = collections.Counter(labels[u] for u in adj[v])
+            best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
+            new[v] = best[0]
+        labels = new
+    return labels
+
+
 def test_label_propagation_matches_python_reference(spark):
     """Two triangles joined by a single bridge edge must resolve to
     two communities (each triangle adopts its min id); a star graph
@@ -542,23 +562,6 @@ def test_label_propagation_matches_python_reference(spark):
     both shapes, so the Spark message/argmax pipeline and the
     min-label tie-break are pinned independently of the SQL oracle."""
     from prisma_migrator_spark.plans.graph import label_propagation
-
-    def python_lpa(pair_list, n_iter):
-        import collections
-
-        adj = collections.defaultdict(set)
-        for a, b in pair_list:
-            adj[a].add(b)
-            adj[b].add(a)
-        labels = {v: v for v in adj}
-        for _ in range(n_iter):
-            new = {}
-            for v in adj:
-                cnt = collections.Counter(labels[u] for u in adj[v])
-                best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
-                new[v] = best[0]
-            labels = new
-        return labels
 
     cases = [
         # two triangles + bridge
@@ -577,43 +580,49 @@ def test_label_propagation_matches_python_reference(spark):
             df = spark.createDataFrame(
                 pair_list + pair_list[:2], "pa bigint, pb bigint"
             )
-            got = {
-                r.node: r.label
-                for r in label_propagation(df, n_iter=n_iter).collect()
-            }
-            assert got == python_lpa(pair_list, n_iter), (n_iter, pair_list)
+            labels, _ = label_propagation(df, n_iter=n_iter)
+            got = {r.node: r.label for r in labels.collect()}
+            assert got == _python_lpa(pair_list, n_iter), (n_iter, pair_list)
 
 
 def test_label_propagation_converged_reaches_fixed_point(spark):
-    """The converged variant must stop at a true fixed point: one
-    more general round leaves every label unchanged. Two triangles +
+    """Label propagation must stop at a true fixed point: one more
+    general round leaves every label unchanged. Two triangles +
     bridge settle in few rounds to the same answer as a long
-    fixed-iteration run; a 4-cycle (bipartite) would 2-cycle forever,
-    so max_iter must bound it and report the bound was hit."""
-    from prisma_migrator_spark.plans.graph import (
-        label_propagation,
-        label_propagation_converged,
-    )
+    fixed-iteration run, and for every bound n = 1…5 the labels equal
+    the n-round labels of a reference that never stops early; a
+    4-cycle (bipartite) would 2-cycle forever, so the bound must
+    stop it and report the bound was hit."""
+    from prisma_migrator_spark.plans.graph import label_propagation
 
     tri = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
     df = spark.createDataFrame(tri, "pa bigint, pb bigint")
-    labels, rounds = label_propagation_converged(df, max_iter=20)
+    labels, rounds = label_propagation(df, n_iter=20)
     got = {r.node: r.label for r in labels.collect()}
     assert rounds < 20
     # fixed point == what a long fixed-iteration run settles into
     # (use rounds+3 to be safely past convergence)
     settled = {
         r.node: r.label
-        for r in label_propagation(df, n_iter=rounds + 3).collect()
+        for r in label_propagation(df, n_iter=rounds + 3)[0].collect()
     }
     assert got == settled
+    assert rounds < 5  # so n = 1…5 covers bounds on both sides of the stop
+    for n in range(1, 6):
+        labels, ran = label_propagation(df, n_iter=n)
+        assert ran == min(n, rounds)
+        assert {r.node: r.label for r in labels.collect()} == (
+            _python_lpa(tri, n)
+        ), n
 
     # bipartite 4-cycle: synchronous LPA oscillates; the bound reports
     cyc = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4)], "pa bigint, pb bigint"
     )
-    _, r2 = label_propagation_converged(cyc, max_iter=6)
+    _, r2 = label_propagation(cyc, n_iter=6)
     assert r2 == 6
+    with pytest.raises(ValueError):  # round 1 builds the first labels
+        label_propagation(cyc, n_iter=0)
 
 
 def test_bm25_eval_metrics_match_pure_python_reference(spark, tmp_path):

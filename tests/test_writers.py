@@ -222,6 +222,66 @@ def test_migrate_keyless_resume_is_multiset_difference(spark, tmp_path):
     assert Counter(map(tuple, got)) == Counter(rows)
 
 
+def test_migrate_resumes_into_empty_destination_directory(spark, sf_dir, tmp_path):
+    """A destination directory that exists but holds no part file yet
+    (an interrupted first copy) resumes as an empty destination, for
+    a keyed and a keyless table alike."""
+    dst = str(tmp_path / "dst")
+    for t in ("orders", "nation"):
+        os.makedirs(os.path.join(dst, f"{t}.parquet"))
+    rep = migrate(spark, sf_dir, dst, tables=["orders", "nation"],
+                  key_cols={"orders": ["o_orderkey"]})
+    assert rep.ok, rep.summary()
+    for t in rep.tables:
+        n_src = spark.read.parquet(os.path.join(sf_dir, f"{t.table}.parquet")).count()
+        assert t.rows_read == t.rows_written == n_src, t
+
+
+def test_migrate_fails_table_whose_destination_lacks_a_key_column(spark, sf_dir, tmp_path):
+    """A destination part file without a key column fails the table:
+    reading it with the source's schema would give NULL keys, skip
+    nothing and append duplicates."""
+    dst = str(tmp_path / "dst")
+    src = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    src.drop("n_nationkey").write.parquet(os.path.join(dst, "nation.parquet"))
+    before = _dir_files(dst)
+    rep = migrate(spark, sf_dir, dst, tables=["nation"], key_cols={"nation": ["n_nationkey"]})
+    (t,) = rep.tables
+    assert t.status == "failed" and "n_nationkey" in t.error, t
+    assert _dir_files(dst) == before
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_migrate_naive_timestamp_key_matches(spark, tmp_path, unit, tz):
+    """A naive (or nanosecond) timestamp key stored the same way at
+    both ends matches, under any session time zone: the destination's
+    key column, read with the source's schema, comes out as the same
+    instant the source read makes of it, so the rows it holds are
+    skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    ts = pa.array([i * 3_600_000_000 for i in range(6)], type=pa.timestamp("us")).cast(
+        pa.timestamp(unit)
+    )
+    table = pa.table({"ts": ts, "v": pa.array(list("abcdef"))})
+    for root, rows in ((src, table), (dst, table.slice(0, 4))):
+        os.makedirs(os.path.join(root, "t.parquet"))
+        pq.write_table(rows, os.path.join(root, "t.parquet", "part-0.parquet"),
+                       coerce_timestamps=None, version="2.6")
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        rep = migrate(spark, src, dst, tables=["t"], key_cols={"t": ["ts"]})
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert rep.ok, rep.summary()
+    assert (rep.tables[0].rows_read, rep.tables[0].rows_written) == (6, 2)
+
+
 _SCAN = r"\bScan parquet\b"
 _JOIN = r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)\b"
 

@@ -34,8 +34,8 @@ def main() -> None:
             from prisma_migrator_spark.sources.layout import optimize_layout
 
             sf = optimize_layout(sf)
-        except Exception:
-            pass
+        except OSError:
+            pass  # unwritable cache dir etc. -> raw fixtures still work
     spark = get_spark("dump-plans")
     spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
     for name in names:
